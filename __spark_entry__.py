@@ -992,6 +992,8 @@ def q_doc_length_drift(spark, sf_dir):
     of n_chars on each, and score the robust drift z between them.
     Same-distribution halves → z ≈ 0, drifted = false everywhere;
     every intermediate (n, medians, MAD, z) is value-hashed vs DuckDB."""
+    from bdqc_spark.operators.stats import robust_z
+
     d = _t(spark, sf_dir, "documents").select(
         "lang", (F.col("doc_id") % 2).alias("half"), F.col("n_chars").cast("double").alias("v")
     )
@@ -1016,14 +1018,7 @@ def q_doc_length_drift(spark, sf_dir):
         F.col("n").alias("n_new"),
         F.col("med").alias("median_new"),
     )
-    z = F.when(
-        F.col("mad_old") > 0,
-        F.abs(F.col("median_new") - F.col("median_old")) / (F.lit(1.4826) * F.col("mad_old")),
-    ).otherwise(
-        F.when(F.col("median_new") == F.col("median_old"), F.lit(0.0)).otherwise(
-            F.lit(float("inf"))
-        )
-    )
+    z = robust_z(F.col("median_new"), F.col("median_old"), F.col("mad_old"))
     return (
         old.join(new, "lang")
         .select(

@@ -23,6 +23,7 @@ def n_chars(c: Column) -> Column:
 
 def n_tokens(c: Column) -> Column:
     """Whitespace-delimited token count (token = maximal non-space run).
+    NULL in, NULL out: a NULL text has no count, not a count of 0.
 
     regexp_count, not size(regexp_extract_all): identical match count
     (same regex, same engine) without materializing an array of all

@@ -2,7 +2,6 @@ from bdqc_spark.operators.stats import (
     fit_numeric_models,
     fit_categorical_models,
     infer_column_types,
-    score_deviations,
 )
 from bdqc_spark.operators.joins import salted_join
 from bdqc_spark.operators.topk import top_k_per_group
@@ -11,7 +10,6 @@ __all__ = [
     "fit_numeric_models",
     "fit_categorical_models",
     "infer_column_types",
-    "score_deviations",
     "salted_join",
     "top_k_per_group",
 ]

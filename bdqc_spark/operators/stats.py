@@ -10,9 +10,11 @@ empty mount, so citations are repo paths without line numbers):
   needs the median first.
 - ``fit_categorical_models``≙ value-histogram fit for string attributes
   (same module) — rare values are outlier suspects.
-- ``score_deviations``      ≙ KB.pm getOutliers: robust z per
-  (row, attribute) via a *broadcast* join of the tiny model table back
-  onto the big table — map-side only, no shuffle of the fact table.
+- ``robust_z``              ≙ the KB.pm getOutliers yardstick: the
+  robust z of a value against a (median, MAD) model, as one Catalyst
+  expression. The per-row rules (plans/decide.py), explain and drift
+  all score with it; the broadcast join that brings the model to the
+  row lives in plans/decide.py.
 - ``infer_column_types``    ≙ FileSignature/Tabular.pm per-column type
   inference (int/real/string/empty fractions) that drives model choice.
 
@@ -27,12 +29,23 @@ these two aggregation passes, and scoring is shuffle-free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Consistency constant making MAD comparable to a stddev for
 # normally distributed data (1/Phi^-1(3/4)).
 MAD_TO_SIGMA = 1.4826
+
+
+def robust_z(x: Column, med: Column, mad: Column) -> Column:
+    """|x - med| / (MAD_TO_SIGMA * mad) when mad > 0. Otherwise 0 when
+    x equals the median and +inf when it does not (bdqc flags any
+    deviation from a constant cohort). NULL semantics follow the
+    oracle's NaN arithmetic: with mad > 0 a NULL x or med gives NULL,
+    which exceeds no threshold; with mad = 0 or NULL it gives +inf."""
+    return F.when(mad > 0, F.abs(x - med) / (F.lit(MAD_TO_SIGMA) * mad)).otherwise(
+        F.when(x == med, F.lit(0.0)).otherwise(F.lit(float("inf")))
+    )
 
 
 def fit_numeric_models(
@@ -45,7 +58,7 @@ def fit_numeric_models(
     """Per (cohort, attribute): n, median, MAD, p01/p25/p75/p99, mean, std.
 
     Long-form output: one row per (cohort, attribute) — the shape of
-    bdqc's collated models, and what `score_deviations` broadcasts.
+    bdqc's collated models, and what plans/decide.py broadcasts.
 
     `exact=True` uses `median`/`percentile` (exact, for oracle-checked
     tests); default uses `percentile_approx` (mergeable sketch, the
@@ -126,48 +139,6 @@ def fit_categorical_models(
         .withColumn("frac", F.col("cnt") / F.col("total"))
         .withColumn("is_rare", F.col("frac") < F.lit(rare_frac))
     )
-
-
-def score_deviations(
-    df: DataFrame,
-    models: DataFrame,
-    cohort_cols: list[str],
-    attr_cols: list[str],
-    z_threshold: float = 4.0,
-    id_cols: list[str] | None = None,
-) -> DataFrame:
-    """Robust z-score every attribute against its cohort model.
-
-    Output: df's id/cohort cols + per-attr `<attr>_z` columns +
-    `rule_hits: array<string>` (sorted, deterministic) +
-    `keep = (no hits)` — bdqc's per-file deviation list + flag
-    (KB.pm getOutliers/showOutliers), expressed as one broadcast
-    join + pure column arithmetic (zero shuffles on `df`).
-    """
-    id_cols = id_cols or []
-    # Pivot the long model table to wide (median_<a>, mad_<a>) — tiny.
-    wide = models.groupBy(*cohort_cols).pivot("attribute", attr_cols).agg(
-        F.first("median").alias("median"), F.first("mad").alias("mad")
-    )
-    scored = df.join(F.broadcast(wide), on=list(cohort_cols), how="left")
-    hit_exprs = []
-    for a in attr_cols:
-        med, mad = F.col(f"{a}_median"), F.col(f"{a}_mad")
-        # Degenerate spread (mad=0): fall back to exact-match test —
-        # any deviation from the median is a hit (bdqc flags any
-        # deviation when the cohort is constant).
-        z = F.when(mad > 0, F.abs(F.col(a) - med) / (F.lit(MAD_TO_SIGMA) * mad)).otherwise(
-            F.when(F.col(a) == med, F.lit(0.0)).otherwise(F.lit(float("inf")))
-        )
-        scored = scored.withColumn(f"{a}_z", z)
-        hit_exprs.append(
-            F.when(F.col(f"{a}_z") > F.lit(z_threshold), F.lit(f"robust_z:{a}")).otherwise(F.lit(None))
-        )
-    scored = scored.withColumn(
-        "rule_hits", F.array_sort(F.filter(F.array(*hit_exprs), lambda x: x.isNotNull()))
-    ).withColumn("keep", F.size("rule_hits") == 0)
-    keep_cols = [*id_cols, *cohort_cols, *[f"{a}_z" for a in attr_cols], "rule_hits", "keep"]
-    return scored.select(*keep_cols)
 
 
 def infer_column_types(df: DataFrame, columns: list[str] | None = None) -> DataFrame:

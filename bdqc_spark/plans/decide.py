@@ -6,14 +6,21 @@ KB-sized cohort_models table onto the profiled rows (map-side only,
 the big table is NOT shuffled), evaluate the compiled rule
 expressions, and emit the `decisions` state table with the scrubbed
 transcript. Everything below is Catalyst expressions — zero Python.
+
+The rule evaluator (join_rule_models + evaluate_rules) is the one
+explain_decisions (plans/explain.py) builds its records from, so the
+two agree by construction.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bdqc_spark.functions.scrub import n_edits_column, scrub_column
+from bdqc_spark.operators.stats import robust_z
 from bdqc_spark.plans.models import COHORT_COLS, log_cps_column
 from bdqc_spark.plans.rules import (
     CATEGORICAL_RULES,
@@ -69,88 +76,34 @@ def flatten_profiles(profiles: DataFrame) -> DataFrame:
     )
 
 
-# Unresolved-Column cache for the rule/scrub expression trees: they
-# are pure functions of the (frozen) rule tuples, but building them
-# costs ~100 py4j round trips (~0.3-0.5s of driver time) — serial
-# cost paid on EVERY decide() call at every cluster size. Keyed on
-# the live SparkContext so a session restart (new JVM refs) rebuilds.
-_EXPR_CACHE: dict = {}
+class RuleEval(NamedTuple):
+    """One rule evaluated over the model-joined flat profile: `fired`
+    is the boolean hit condition; `observed`, `median`, `mad` and
+    `score` are the model context explain reports. `score` is the
+    robust z (deviation rules), the within-cohort value frequency
+    (categorical rules) or NULL (static rules)."""
+
+    rule_id: str
+    attribute: str
+    fired: Column
+    observed: Column
+    median: Column
+    mad: Column
+    score: Column
 
 
-def _static_decide_exprs(sc_key, static_rules, deviation_rules, categorical_rules):
-    key = (sc_key, static_rules, deviation_rules, categorical_rules)
-    cached = _EXPR_CACHE.get("decide")
-    if cached is not None and cached[0] == key:
-        return cached[1]
-    static_hits = [
-        F.when(F.expr(r.expr), F.lit(r.rule_id)).otherwise(F.lit(None)) for r in static_rules
-    ]
-    deviation_hits = []
-    for r in deviation_rules:
-        med, mad = F.col(f"{r.attribute}_median"), F.col(f"{r.attribute}_mad")
-        x = F.col(r.attribute).cast("double")
-        z = F.when(
-            mad > 0, F.abs(x - med) / (F.lit(1.4826) * mad)
-        ).otherwise(F.when(x == med, F.lit(0.0)).otherwise(F.lit(float("inf"))))
-        # Cohorts below minimum support (or unmodeled: mad null)
-        # are not flagged by deviation rules — matches bdqc, which
-        # skips models for tiny cohorts (MIN_COHORT_N in rules.py).
-        n_col = F.col(f"{r.attribute}_n")
-        deviation_hits.append(
-            F.when(
-                med.isNotNull()
-                & (n_col >= MIN_COHORT_N)
-                & (z > F.lit(r.z_threshold)),
-                F.lit(r.rule_id),
-            ).otherwise(F.lit(None))
-        )
-    categorical_hits = []
-    for r in categorical_rules or ():
-        cn = F.col(f"__{r.attribute}_cn")
-        cnt = F.coalesce(
-            F.col(f"__{r.attribute}_hist")[F.col(r.attribute).cast("string")], F.lit(0)
-        )
-        categorical_hits.append(
-            F.when(
-                # null attribute values carry no frequency evidence and
-                # are excluded from the fitted histogram (models.py) —
-                # don't fire on them
-                F.col(r.attribute).isNotNull()
-                & cn.isNotNull()
-                & (cn >= MIN_COHORT_N)
-                & (cnt / cn < F.lit(r.rare_frac)),
-                F.lit(r.rule_id),
-            ).otherwise(F.lit(None))
-        )
-    scrub = scrub_column(F.col("transcript"))
-    n_edits = n_edits_column(F.col("transcript"))
-    exprs = (static_hits, deviation_hits, categorical_hits, scrub, n_edits)
-    _EXPR_CACHE["decide"] = (key, exprs)
-    return exprs
-
-
-def decide(
-    profiles: DataFrame,
+def join_rule_models(
+    flat: DataFrame,
     cohort_models: DataFrame,
-    static_rules: tuple[StaticRule, ...] = STATIC_RULES,
-    deviation_rules: tuple[DeviationRule, ...] = DEVIATION_RULES,
-    categorical_rules: tuple[CategoricalRule, ...] = CATEGORICAL_RULES,
+    deviation_rules: tuple[DeviationRule, ...],
+    categorical_rules: tuple[CategoricalRule, ...],
 ) -> DataFrame:
-    """profiles + models → decisions(clip_id[, bucket], keep,
-    rule_hits, scrubbed_transcript, n_scrub_edits)."""
-    flat = flatten_profiles(profiles)
-
-    # Monotonic session token (r3 ADVICE): id(_jsc) can be reused by a
-    # new gateway object after the old one is GC'd, silently serving
-    # Columns bound to a dead JVM. (applicationId, startTime) is unique
-    # per SparkContext and changes on every in-process restart.
-    sc = profiles.sparkSession.sparkContext
-    sc_key = (sc.applicationId, sc.startTime)
-    static_hits, deviation_hits, categorical_hits, scrub, n_edits = _static_decide_exprs(
-        sc_key, static_rules, deviation_rules, categorical_rules
-    )
-    hit_exprs = list(static_hits)
-
+    """Join the KB-sized model sides the rules read onto the flat
+    profiles: one broadcast of the deviation models pivoted wide
+    (`<attr>_median/_mad/_n`), plus one broadcast value histogram per
+    categorical rule (`__<attr>_cn`, `__<attr>_hist`). Left joins, so
+    unmodeled cohorts keep their rows with NULL model columns; the
+    profile side is never shuffled."""
     if deviation_rules:
         attrs = sorted({r.attribute for r in deviation_rules})
         wide = (
@@ -164,19 +117,111 @@ def decide(
             )
         )
         flat = flat.join(F.broadcast(wide), on=COHORT_COLS, how="left")
-        hit_exprs.extend(deviation_hits)
-
     for r in categorical_rules or ():
-        # Broadcast the per-cohort value histogram; a row is flagged
-        # when its value's within-cohort frequency is below rare_frac
-        # (exact integer counts — identical on engine and oracle).
         hist = cohort_models.where(F.col("attribute") == r.attribute).select(
             *COHORT_COLS,
             F.col("n").alias(f"__{r.attribute}_cn"),
             F.col("histogram").alias(f"__{r.attribute}_hist"),
         )
         flat = flat.join(F.broadcast(hist), on=COHORT_COLS, how="left")
-    hit_exprs.extend(categorical_hits)
+    return flat
+
+
+def evaluate_rules(
+    static_rules: tuple[StaticRule, ...],
+    deviation_rules: tuple[DeviationRule, ...],
+    categorical_rules: tuple[CategoricalRule, ...],
+) -> list[RuleEval]:
+    """The rule evaluator decide() and explain_decisions() share: one
+    RuleEval per rule, in static, deviation, categorical order, over
+    the columns join_rule_models() provides."""
+    none = F.lit(None)
+    out = [
+        RuleEval(
+            r.rule_id, r.attribute, F.expr(r.expr), F.col(r.attribute).cast("double"),
+            none, none, none,
+        )
+        for r in static_rules
+    ]
+    for r in deviation_rules:
+        med, mad = F.col(f"{r.attribute}_median"), F.col(f"{r.attribute}_mad")
+        x = F.col(r.attribute).cast("double")
+        z = robust_z(x, med, mad)
+        # Cohorts below minimum support (or unmodeled: med null) are
+        # not flagged by deviation rules — matches bdqc, which skips
+        # models for tiny cohorts (MIN_COHORT_N in rules.py).
+        fired = (
+            med.isNotNull()
+            & (F.col(f"{r.attribute}_n") >= MIN_COHORT_N)
+            & (z > F.lit(r.z_threshold))
+        )
+        out.append(RuleEval(r.rule_id, r.attribute, fired, x, med, mad, z))
+    for r in categorical_rules or ():
+        # A row is flagged when its value's within-cohort frequency is
+        # below rare_frac (exact integer counts — identical on engine
+        # and oracle).
+        cn = F.col(f"__{r.attribute}_cn")
+        frac = (
+            F.coalesce(F.col(f"__{r.attribute}_hist")[F.col(r.attribute).cast("string")], F.lit(0))
+            / cn
+        )
+        fired = (
+            # null attribute values carry no frequency evidence and
+            # are excluded from the fitted histogram (models.py) —
+            # don't fire on them
+            F.col(r.attribute).isNotNull()
+            & cn.isNotNull()
+            & (cn >= MIN_COHORT_N)
+            & (frac < F.lit(r.rare_frac))
+        )
+        observed = F.col(r.attribute).cast("double")
+        out.append(RuleEval(r.rule_id, r.attribute, fired, observed, none, none, frac))
+    return out
+
+
+# Unresolved-Column cache for the rule/scrub expression trees: they
+# are pure functions of the (frozen) rule tuples, but building them
+# costs ~100 py4j round trips (~0.3-0.5s of driver time) — serial
+# cost paid on EVERY decide() call at every cluster size. Keyed on
+# the live SparkContext so a session restart (new JVM refs) rebuilds.
+_EXPR_CACHE: dict = {}
+
+
+def _static_decide_exprs(sc_key, static_rules, deviation_rules, categorical_rules):
+    key = (sc_key, static_rules, deviation_rules, categorical_rules)
+    cached = _EXPR_CACHE.get("decide")
+    if cached is not None and cached[0] == key:
+        return cached[1]
+    hits = [
+        F.when(e.fired, F.lit(e.rule_id)).otherwise(F.lit(None))
+        for e in evaluate_rules(static_rules, deviation_rules, categorical_rules)
+    ]
+    exprs = (hits, scrub_column(F.col("transcript")), n_edits_column(F.col("transcript")))
+    _EXPR_CACHE["decide"] = (key, exprs)
+    return exprs
+
+
+def decide(
+    profiles: DataFrame,
+    cohort_models: DataFrame,
+    static_rules: tuple[StaticRule, ...] = STATIC_RULES,
+    deviation_rules: tuple[DeviationRule, ...] = DEVIATION_RULES,
+    categorical_rules: tuple[CategoricalRule, ...] = CATEGORICAL_RULES,
+) -> DataFrame:
+    """profiles + models → decisions(clip_id[, bucket], keep,
+    rule_hits, scrubbed_transcript, n_scrub_edits)."""
+    # Monotonic session token (r3 ADVICE): id(_jsc) can be reused by a
+    # new gateway object after the old one is GC'd, silently serving
+    # Columns bound to a dead JVM. (applicationId, startTime) is unique
+    # per SparkContext and changes on every in-process restart.
+    sc = profiles.sparkSession.sparkContext
+    sc_key = (sc.applicationId, sc.startTime)
+    hit_exprs, scrub, n_edits = _static_decide_exprs(
+        sc_key, static_rules, deviation_rules, categorical_rules
+    )
+    flat = join_rule_models(
+        flatten_profiles(profiles), cohort_models, deviation_rules, categorical_rules
+    )
 
     extra = [c for c in ("bucket",) if c in flat.columns]
     return (

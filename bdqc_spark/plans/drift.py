@@ -8,9 +8,9 @@ Here the KB is the `cohort_models` state table, one per pipeline run
 / table snapshot (sources/iceberg.py time travel reads any historic
 one). This operator compares two of them:
 
-- numeric attributes: drift z = |median_new - median_old| /
-  (1.4826 * mad_old) — the same robust-z yardstick the per-row rules
-  use, applied to the model itself; plus the cohort-size ratio.
+- numeric attributes: drift z = operators.stats.robust_z(median_new,
+  median_old, mad_old) — the same function the per-row rules score
+  with, applied to the model itself; plus the cohort-size ratio.
 - categorical attributes: total-variation distance between the two
   normalized value histograms (0.5 * sum |p_new - p_old|), computed
   with map_entries/explode — no Python.
@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bdqc_spark.operators.stats import MAD_TO_SIGMA
+from bdqc_spark.operators.stats import robust_z
 from bdqc_spark.plans.models import COHORT_COLS
 
 DRIFT_Z = 3.0
@@ -65,15 +65,7 @@ def numeric_drift(
     # side; both inputs are KB-sized model tables so the shuffle is
     # a few KB regardless of corpus size.
     j = o.join(nw, on=[*COHORT_COLS, "attribute"], how="full_outer")
-    z = F.when(
-        F.col("mad_old") > 0,
-        F.abs(F.col("median_new") - F.col("median_old"))
-        / (F.lit(MAD_TO_SIGMA) * F.col("mad_old")),
-    ).otherwise(
-        F.when(F.col("median_new") == F.col("median_old"), F.lit(0.0)).otherwise(
-            F.lit(float("inf"))
-        )
-    )
+    z = robust_z(F.col("median_new"), F.col("median_old"), F.col("mad_old"))
     measured = (
         F.col("median_old").isNotNull()
         & F.col("median_new").isNotNull()

@@ -10,13 +10,15 @@ rule with the model context that justified it:
 - deviation rules: observed value, cohort median/MAD, robust z
 - categorical rules: observed value, within-cohort frequency in `z`
   (the "score" slot), no median/mad
-- static rules: observed value of the rule's primary attribute (when
-  it has one), no model context
+- static rules: observed value of the rule's primary attribute
+  (StaticRule.attribute), no model context
 
-Execution shape: identical to decide() — one broadcast join of the
-KB-sized model table, per-rule Catalyst expressions, one explode of a
-per-row struct array. No extra shuffle of the profiles table; the
-explode multiplies rows only by the number of FIRED rules (≈0-2).
+Shares decide's evaluator (plans/decide.py join_rule_models +
+evaluate_rules): the same broadcast joins of the KB-sized model table
+and the same per-rule Catalyst expressions, so explain and decide
+agree by construction. On top: one explode of a per-row struct array.
+No extra shuffle of the profiles table; the explode multiplies rows
+only by the number of FIRED rules (≈0-2).
 """
 
 from __future__ import annotations
@@ -24,34 +26,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bdqc_spark.plans.decide import evaluate_rules, flatten_profiles, join_rule_models
 from bdqc_spark.plans.models import COHORT_COLS
 from bdqc_spark.plans.rules import (
     CATEGORICAL_RULES,
     DEVIATION_RULES,
-    MIN_COHORT_N,
     STATIC_RULES,
     CategoricalRule,
     DeviationRule,
     StaticRule,
 )
-
-# Primary observed attribute per static rule (for the explain row);
-# rules spanning several columns surface the most informative one.
-_STATIC_ATTR = {
-    "audio.decode_failed": "pcm_ok",
-    "audio.dur_mismatch": "dur_ms_decoded",
-    "audio.silent": "rms",
-    "audio.clipping": "clip_rate",
-    "audio.hdr_sr_mismatch": "hdr_sr",
-    "audio.low_speech": "speech_ratio",
-    "audio.bandwidth_low": "bw_ratio",
-    "audio.dc_offset": "dc_off",
-    "meta.sr_invalid": "sr_hz",
-    "text.empty": "n_tokens",
-    "text.high_ppl": "ppl",
-    "text.lang_conf_low": "conf",
-    "text.max_run": "max_run",
-}
 
 
 def explain_decisions(
@@ -62,94 +46,26 @@ def explain_decisions(
     categorical_rules: tuple[CategoricalRule, ...] = CATEGORICAL_RULES,
 ) -> DataFrame:
     """profiles + models → long-form per-(clip, fired rule) explain
-    records. Mirrors decide() rule-for-rule: a clip appears here iff
-    it appears in decisions with keep = false, and its rule_ids here
-    equal its decisions.rule_hits."""
-    from bdqc_spark.plans.decide import flatten_profiles
-
-    # flatten_profiles carries the derived deviation axes (log_ppl,
-    # log_cps) so this path scores the bit-identical expressions
-    flat = flatten_profiles(profiles)
-
-    entries = []
-
-    def entry(fired, rule_id, attribute, observed, med, mad, z):
-        return F.when(
-            fired,
+    records. Built from decide()'s own rule evaluator: a clip appears
+    here iff it appears in decisions with keep = false, and its
+    rule_ids here equal its decisions.rule_hits."""
+    flat = join_rule_models(
+        flatten_profiles(profiles), cohort_models, deviation_rules, categorical_rules
+    )
+    entries = [
+        F.when(
+            e.fired,
             F.struct(
-                F.lit(rule_id).alias("rule_id"),
-                F.lit(attribute).cast("string").alias("attribute"),
-                observed.cast("double").alias("observed"),
-                med.cast("double").alias("expected_median"),
-                mad.cast("double").alias("expected_mad"),
-                z.cast("double").alias("z"),
+                F.lit(e.rule_id).alias("rule_id"),
+                F.lit(e.attribute).alias("attribute"),
+                e.observed.alias("observed"),
+                e.median.cast("double").alias("expected_median"),
+                e.mad.cast("double").alias("expected_mad"),
+                e.score.cast("double").alias("z"),
             ),
         )
-
-    for r in static_rules:
-        attr = _STATIC_ATTR.get(r.rule_id)
-        observed = F.col(attr).cast("double") if attr else F.lit(None)
-        entries.append(
-            entry(F.expr(r.expr), r.rule_id, attr, observed, F.lit(None), F.lit(None), F.lit(None))
-        )
-
-    if deviation_rules:
-        attrs = sorted({r.attribute for r in deviation_rules})
-        wide = (
-            cohort_models.where(F.col("attribute").isin(attrs))
-            .groupBy(*COHORT_COLS)
-            .pivot("attribute", attrs)
-            .agg(
-                F.first("median").alias("median"),
-                F.first("mad").alias("mad"),
-                F.first("n").alias("n"),
-            )
-        )
-        flat = flat.join(F.broadcast(wide), on=COHORT_COLS, how="left")
-        for r in deviation_rules:
-            med, mad = F.col(f"{r.attribute}_median"), F.col(f"{r.attribute}_mad")
-            x = F.col(r.attribute).cast("double")
-            z = F.when(
-                mad > 0, F.abs(x - med) / (F.lit(1.4826) * mad)
-            ).otherwise(F.when(x == med, F.lit(0.0)).otherwise(F.lit(float("inf"))))
-            fired = (
-                med.isNotNull()
-                & (F.col(f"{r.attribute}_n") >= MIN_COHORT_N)
-                & (z > F.lit(r.z_threshold))
-            )
-            entries.append(entry(fired, r.rule_id, r.attribute, x, med, mad, z))
-
-    for r in categorical_rules or ():
-        hist = cohort_models.where(F.col("attribute") == r.attribute).select(
-            *COHORT_COLS,
-            F.col("n").alias(f"__{r.attribute}_cn"),
-            F.col("histogram").alias(f"__{r.attribute}_hist"),
-        )
-        flat = flat.join(F.broadcast(hist), on=COHORT_COLS, how="left")
-        cn = F.col(f"__{r.attribute}_cn")
-        frac = (
-            F.coalesce(F.col(f"__{r.attribute}_hist")[F.col(r.attribute).cast("string")], F.lit(0))
-            / cn
-        )
-        # mirrors decide(): null values are outside the histogram and
-        # never fire the categorical rule
-        fired = (
-            F.col(r.attribute).isNotNull()
-            & cn.isNotNull()
-            & (cn >= MIN_COHORT_N)
-            & (frac < F.lit(r.rare_frac))
-        )
-        entries.append(
-            entry(
-                fired,
-                r.rule_id,
-                r.attribute,
-                F.col(r.attribute).cast("double"),
-                F.lit(None),
-                F.lit(None),
-                frac,
-            )
-        )
+        for e in evaluate_rules(static_rules, deviation_rules, categorical_rules)
+    ]
 
     extra = [c for c in ("bucket",) if c in flat.columns]
     exploded = flat.select(

@@ -406,17 +406,11 @@ def run_pipeline(
         prof.write.mode("append").partitionBy("bucket").parquet(profiles_dir)
         _append_lineage(lineage_dir, pending, input_snapshot, attempt, t0, "profiled")
     t_stage = _tick(result, "A_profile", t_stage)
-    try:
-        return _finish_pipeline(
-            spark, result, profiles_dir, models_dir, decisions_dir, metrics_dir,
-            lineage_dir, input_snapshot, exact_models, fail_after_stage,
-            all_buckets, pending, attempt, prof_cached, t_stage,
-        )
-    finally:
-        if prof_cached is not None:
-            # no-op for checkpoint blocks (ContextCleaner owns those);
-            # kept so a future switch back to persist() cannot leak
-            prof_cached.unpersist()
+    return _finish_pipeline(
+        spark, result, profiles_dir, models_dir, decisions_dir, metrics_dir,
+        lineage_dir, input_snapshot, exact_models, fail_after_stage,
+        all_buckets, pending, attempt, prof_cached, t_stage,
+    )
 
 
 def _finish_pipeline(

@@ -191,15 +191,6 @@ def profile_clips(clips: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 # Direct-read fast path: workers read their own parquet files
 # --------------------------------------------------------------------------
-# Split direct-read tasks by row group (True) or whole file (False).
-# Measured on the 200k bench corpus (64 files × 2 row groups,
-# local[32], alternating A/B ×3): splitting does NOT help stage A
-# (5.5-6.0s vs 4.6-5.7s whole-file) and consistently costs stage B
-# ~+2.5s — doubling the checkpoint partition count doubles the
-# per-partition percentile_approx partials the model fit must merge
-# and the per-scan task count of every downstream aggregation.
-# Whole-file tasks win; kept as a flag so the A/B is reproducible.
-_DIRECT_SPLIT_ROW_GROUPS = False
 def direct_scan_files(clips: DataFrame, buckets: list[int] | None = None) -> list | None:
     """[(path, bucket), ...] when `clips` is a PLAIN manifest scan of
     bucket-partitioned parquet (the IcebergishTable.read shape), else
@@ -264,9 +255,10 @@ def profile_clips_direct(spark, files: list, clips: DataFrame) -> DataFrame:
     consumes the bytes is the one that reads them."""
     file_order = [c for c in clips.columns if c != "bucket"]
     keep = [c for c in clips.columns if c != "bytes"]
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in clips.schema.fields if f.name != "bytes"
-    )
+    # declared in the order gen() emits: the file columns, then bucket
+    # (mapInArrow matches declared fields to batch columns by position)
+    types = {f.name: f.dataType.simpleString() for f in clips.schema.fields}
+    schema = ", ".join(f"{c} {types[c]}" for c in file_order + ["bucket"] if c != "bytes")
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
@@ -274,15 +266,11 @@ def profile_clips_direct(spark, files: list, clips: DataFrame) -> DataFrame:
         for b in batches:
             paths = b.column(0).to_pylist()
             buckets = b.column(1).to_pylist()
-            rgs = b.column(2).to_pylist()
-            for path, bucket, rg in zip(paths, buckets, rgs):
+            for path, bucket in zip(paths, buckets):
                 pf = pq.ParquetFile(path)
                 try:
                     for rb in pf.iter_batches(
-                        batch_size=256,
-                        row_groups=None if rg < 0 else [rg],
-                        columns=file_order,
-                        use_threads=False,
+                        batch_size=256, columns=file_order, use_threads=False
                     ):
                         # column order pinned to the declared schema
                         # (passthrough order in _profile_arrow follows
@@ -296,26 +284,9 @@ def profile_clips_direct(spark, files: list, clips: DataFrame) -> DataFrame:
                 finally:
                     pf.close()
 
-    # One task per ROW GROUP, not per file (a ~256 MB file holds 2
-    # default-sized row groups): twice the tasks halves the straggler
-    # tail when files outnumber cores only slightly. The driver-side
-    # footer read is one local stat per file; a real Iceberg manifest
-    # carries split offsets for exactly this purpose.
-    import pyarrow.parquet as _pq
-
-    rows = []
-    for p, b in files:
-        if _DIRECT_SPLIT_ROW_GROUPS:
-            try:
-                n_rg = _pq.ParquetFile(p).metadata.num_row_groups
-            except Exception:
-                n_rg = 1
-            rows.extend((p, int(b), rg) for rg in range(max(n_rg, 1)))
-        else:
-            rows.append((p, int(b), -1))  # -1 = whole file
+    rows = [(p, int(b)) for p, b in files]
     fdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, max(len(rows), 1)),
-        "path string, bucket int, rg int",
+        spark.sparkContext.parallelize(rows, max(len(rows), 1)), "path string, bucket int"
     )
     flat = fdf.mapInArrow(gen, f"{schema}, {_PROFILE_FIELDS}")
     return _nest_profile(flat, keep)

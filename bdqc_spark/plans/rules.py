@@ -78,6 +78,9 @@ RARE_FRAC = 0.01
 class StaticRule:
     rule_id: str
     expr: str  # Spark SQL boolean expression over the flat profile
+    # primary observed column, reported by explain; rules spanning
+    # several columns name the most informative one
+    attribute: str
 
 
 @dataclass(frozen=True)
@@ -95,31 +98,34 @@ class CategoricalRule:
 
 
 STATIC_RULES: tuple[StaticRule, ...] = (
-    StaticRule("audio.decode_failed", "NOT pcm_ok"),
+    StaticRule("audio.decode_failed", "NOT pcm_ok", "pcm_ok"),
     StaticRule(
         "audio.dur_mismatch",
         f"pcm_ok AND abs(dur_ms - dur_ms_decoded) > greatest({DUR_MISMATCH_MS}, 0.1 * dur_ms)",
+        "dur_ms_decoded",
     ),
-    StaticRule("audio.silent", f"pcm_ok AND rms < {RMS_SILENT}"),
-    StaticRule("audio.clipping", f"pcm_ok AND clip_rate > {CLIP_RATE_MAX}"),
+    StaticRule("audio.silent", f"pcm_ok AND rms < {RMS_SILENT}", "rms"),
+    StaticRule("audio.clipping", f"pcm_ok AND clip_rate > {CLIP_RATE_MAX}", "clip_rate"),
     # Container header cross-check: a WAV payload whose fmt-chunk rate
     # disagrees with the catalog's sr_hz column (hdr_sr = 0 for raw
     # codecs — no container, no evidence).
-    StaticRule("audio.hdr_sr_mismatch", "pcm_ok AND hdr_sr > 0 AND hdr_sr != sr_hz"),
+    StaticRule("audio.hdr_sr_mismatch", "pcm_ok AND hdr_sr > 0 AND hdr_sr != sr_hz", "hdr_sr"),
     StaticRule(
         "audio.low_speech",
         f"pcm_ok AND dur_ms_decoded >= {MIN_SPEECH_DUR_MS} AND speech_ratio < {SPEECH_RATIO_MIN}",
+        "speech_ratio",
     ),
     StaticRule(
         "audio.bandwidth_low",
         f"pcm_ok AND n_samples >= {BW_MIN_SAMPLES} AND bw_ratio < {BW_RATIO_MIN}",
+        "bw_ratio",
     ),
-    StaticRule("audio.dc_offset", f"pcm_ok AND abs(dc_off) > {DC_OFF_MAX}"),
-    StaticRule("meta.sr_invalid", f"sr_hz NOT IN {VALID_SR}"),
-    StaticRule("text.empty", "n_tokens = 0"),
-    StaticRule("text.high_ppl", f"ppl > {PPL_MAX}"),
-    StaticRule("text.lang_conf_low", f"n_tokens > 0 AND conf < {CONF_MIN}"),
-    StaticRule("text.max_run", f"max_run >= {MAX_RUN}"),
+    StaticRule("audio.dc_offset", f"pcm_ok AND abs(dc_off) > {DC_OFF_MAX}", "dc_off"),
+    StaticRule("meta.sr_invalid", f"sr_hz NOT IN {VALID_SR}", "sr_hz"),
+    StaticRule("text.empty", "n_tokens = 0", "n_tokens"),
+    StaticRule("text.high_ppl", f"ppl > {PPL_MAX}", "ppl"),
+    StaticRule("text.lang_conf_low", f"n_tokens > 0 AND conf < {CONF_MIN}", "conf"),
+    StaticRule("text.max_run", f"max_run >= {MAX_RUN}", "max_run"),
 )
 
 # One rule per modeled attribute (plans/models.py MODEL_ATTRS): bdqc's

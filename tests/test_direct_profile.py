@@ -26,6 +26,25 @@ def tbl(spark, tmp_path_factory):
     return t
 
 
+@pytest.fixture(scope="module")
+def mid_bucket_clips(spark, tmp_path_factory):
+    """Bucket-partitioned files that also carry `bucket` as a data
+    column mid-schema (a writer that keeps partition columns), read
+    by explicit file list: a plain scan that passes the direct gate
+    with `bucket` mid-schema, while the direct path emits it last."""
+    import glob
+
+    root = str(tmp_path_factory.mktemp("direct_profile_mid"))
+    df = IcebergishTable(root, num_buckets=4).with_bucket(generate_clips_df(spark, 60, seed=33))
+    cols = [c for c in df.columns if c != "bucket"]
+    df = df.select(*cols[:2], "bucket", *cols[2:])
+    for b in range(4):
+        df.where(F.col("bucket") == b).coalesce(1).write.parquet(f"{root}/bucket={b}")
+    clips = spark.read.parquet(*sorted(glob.glob(f"{root}/bucket=*/*.parquet")))
+    assert clips.columns[-1] != "bucket"
+    return clips
+
+
 def test_direct_scan_files_gate(spark, tbl):
     clips = tbl.read(spark)
     files = direct_scan_files(clips, None)
@@ -40,14 +59,14 @@ def test_direct_scan_files_gate(spark, tbl):
     assert direct_scan_files(clips.withColumn("x", F.lit(1)), None) is None
 
 
-def test_direct_profile_value_identical(spark, tbl):
-    clips = tbl.read(spark)
-    files = direct_scan_files(clips, None)
-    a = profile_clips_direct(spark, files, clips).orderBy("clip_id").collect()
-    b = profile_clips(clips).orderBy("clip_id").collect()
-    assert len(a) == len(b) == 240
-    for ra, rb in zip(a, b):
-        assert ra == rb
+def test_direct_profile_value_identical(spark, tbl, mid_bucket_clips):
+    for clips, n in ((tbl.read(spark), 240), (mid_bucket_clips, 60)):
+        files = direct_scan_files(clips, None)
+        a = profile_clips_direct(spark, files, clips).orderBy("clip_id").collect()
+        b = profile_clips(clips).orderBy("clip_id").collect()
+        assert len(a) == len(b) == n
+        for ra, rb in zip(a, b):
+            assert ra == rb
 
 
 def test_par_gate(spark, sf_dir_smoke=None):

@@ -170,16 +170,28 @@ def test_null_categorical_attr_does_not_crash_or_flag(spark):
     map_from_entries (runtime error) during stage-B model fitting.
     Nulls are now excluded from the histogram and never fire the
     categorical rule (no frequency evidence) — mirrored in decide()
-    and explain()."""
+    and explain(). A null text.n_tokens (n_tokens is NULL-in/NULL-out)
+    fires neither text.empty nor robust_z.n_tokens, as NaN fires
+    neither in the oracle (synth/oracle.py)."""
+    from bdqc_spark.functions.text import n_tokens
     from bdqc_spark.plans.decide import decide
     from bdqc_spark.plans.explain import explain_decisions
     from bdqc_spark.plans.models import fit_cohort_models
     from bdqc_spark.plans.profile import profile_clips
 
+    assert spark.range(1).select(n_tokens(F.lit(None).cast("string"))).first()[0] is None
+
     clips = generate_clips_df(spark, 300, seed=23)
-    profiles = profile_clips(clips).withColumn(
-        "sr_hz",
-        F.when(F.xxhash64("clip_id") % 10 == 0, F.lit(None)).otherwise(F.col("sr_hz")),
+    h = F.xxhash64("clip_id") % 10
+    profiles = (
+        profile_clips(clips)
+        .withColumn("sr_hz", F.when(h == 0, F.lit(None)).otherwise(F.col("sr_hz")))
+        .withColumn(
+            "text",
+            F.col("text").withField(
+                "n_tokens", F.when(h == 1, F.lit(None)).otherwise(F.col("text.n_tokens"))
+            ),
+        )
     )
     models = spark.createDataFrame(fit_cohort_models(profiles).collect())
     hist_rows = models.where(F.col("attribute") == "sr_hz").collect()
@@ -196,6 +208,16 @@ def test_null_categorical_attr_does_not_crash_or_flag(spark):
     exp = explain_decisions(profiles, models).toPandas()
     cat = exp[exp.rule_id == "categorical.rare_sr"]
     assert null_ids.isdisjoint(set(cat.clip_id))
+
+    null_tok = set(
+        r.clip_id
+        for r in profiles.where(F.col("text.n_tokens").isNull()).select("clip_id").collect()
+    )
+    assert null_tok, "fixture produced no null n_tokens rows"
+    got = exp.groupby("clip_id")["rule_id"].apply(sorted).to_dict()
+    for r in dec[dec.clip_id.isin(null_tok)].itertuples():
+        assert got.get(r.clip_id, []) == list(r.rule_hits), r.clip_id
+        assert not {"text.empty", "robust_z.n_tokens"} & set(r.rule_hits), r.clip_id
 
 
 def test_pipeline_on_tiny_corpus_below_cohort_support(spark, tmp_path_factory):

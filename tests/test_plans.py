@@ -91,3 +91,24 @@ def test_explain_documents_models_broadcast(spark, entry):
     plan = _plan(spark, entry, "explain_documents")
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+def test_decide_and_explain_share_broadcast_only_plan(spark):
+    """decide() and explain_decisions() join the model sides through
+    one evaluator: one broadcast for the pivoted deviation models plus
+    one per categorical rule, and the profile side is never shuffled
+    into a join."""
+    from bdqc_spark.plans.decide import decide
+    from bdqc_spark.plans.explain import explain_decisions
+    from bdqc_spark.plans.models import fit_cohort_models
+    from bdqc_spark.plans.profile import profile_clips
+    from bdqc_spark.plans.rules import CATEGORICAL_RULES
+    from bdqc_spark.synth.clips import generate_clips_df
+
+    profiles = profile_clips(generate_clips_df(spark, 60, seed=5))
+    models = spark.createDataFrame(fit_cohort_models(profiles).collect())
+    for df in (decide(profiles, models), explain_decisions(profiles, models)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("BroadcastHashJoin") == 1 + len(CATEGORICAL_RULES), plan
+        for node in ("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct"):
+            assert node not in plan, plan

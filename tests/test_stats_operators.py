@@ -31,17 +31,38 @@ def test_fit_numeric_models_matches_numpy(spark):
         assert models.loc[g, "n"] == 500
 
 
-def test_score_deviations_flags_outlier(spark):
-    from bdqc_spark.operators.stats import fit_numeric_models, score_deviations
+def test_robust_z_matches_oracle_formula(spark):
+    """operators.stats.robust_z (the one z that decide, explain and
+    drift score with) against the single-node oracle's numpy formula
+    (synth/oracle.py), NULL ↔ NaN, on every branch of the definition."""
+    from bdqc_spark.operators.stats import robust_z
 
-    rows = [("c", float(i % 7)) for i in range(100)] + [("c", 1000.0)]
-    df = spark.createDataFrame(rows, "g string, x double").withColumn(
-        "id", F.monotonically_increasing_id()
+    rows = [
+        (13.0, 10.0, 2.0),  # mad > 0: scaled distance
+        (10.0, 10.0, 0.0),  # mad = 0, x == med: 0
+        (11.0, 10.0, 0.0),  # mad = 0, x != med: +inf
+        (None, 10.0, 2.0),  # null x: no evidence
+        (13.0, None, 2.0),  # null med: no evidence
+        (None, 10.0, 0.0),  # null x, degenerate spread: +inf, as NaN == med is false
+        (10.0, 10.0, None),  # unmodeled spread: the mad = 0 branch
+    ]
+    df = spark.createDataFrame(rows, "x double, med double, mad double")
+    got = (
+        df.select(robust_z(F.col("x"), F.col("med"), F.col("mad")).alias("z"))
+        .toPandas()["z"]
+        .to_numpy()
     )
-    models = fit_numeric_models(df, ["g"], ["x"], exact=True)
-    scored = score_deviations(df, models, ["g"], ["x"], z_threshold=5.0, id_cols=["x"])
-    flagged = scored.where(~F.col("keep")).collect()
-    assert len(flagged) == 1 and flagged[0]["x"] == 1000.0
+    pdf = pd.DataFrame(rows, columns=["x", "med", "mad"]).astype(float)
+    v, med, mad = pdf["x"].to_numpy(), pdf["med"].to_numpy(), pdf["mad"].to_numpy()
+    with np.errstate(divide="ignore", invalid="ignore"):
+        want = np.where(
+            mad > 0,
+            np.abs(v - med) / (1.4826 * mad),
+            np.where(v == med, 0.0, np.inf),
+        )
+    np.testing.assert_array_equal(got, want)
+    assert got[0] == 3.0 / (1.4826 * 2.0) and got[1] == 0.0 and np.isinf(got[2])
+    assert np.isnan(got[3]) and np.isnan(got[4])
 
 
 def test_salted_join_equals_plain_join(spark):
