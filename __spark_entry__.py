@@ -986,8 +986,8 @@ GROUP BY 1, 2
 
 # ---- text analysis: per-doc stats ------------------------------------------
 def q_doc_length_drift(spark, sf_dir):
-    """Temporal-QC drift check (plans/drift.py numeric_drift shape,
-    oracle-expressible): treat the even/odd doc_id halves of the
+    """Temporal-QC drift check (the numeric half of plans/drift.py
+    model_drift, as a Spark plan so it is oracle-expressible): treat the even/odd doc_id halves of the
     documents table as two snapshots, fit exact per-lang median/MAD
     of n_chars on each, and score the robust drift z between them.
     Same-distribution halves → z ≈ 0, drifted = false everywhere;

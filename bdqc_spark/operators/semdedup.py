@@ -28,6 +28,16 @@ the cap are kept fail-open (``max_sim_kept`` null, ``capped`` true)
 rather than blowing up one task; production would re-cluster such a
 cell with a larger local k.
 
+Centroid sample (an output change since round 5): the quantizer is
+trained on the first ``sample_n`` rows by id hash among those whose
+hash is 0 mod 64, falling back to the whole corpus when that subset
+is smaller than ``sample_n``. On corpora larger than about
+64 × ``sample_n`` the prefiltered sample is a different row set than
+round 5's corpus-wide first ``sample_n`` by hash, so the same data and
+seed give different centroids and therefore different cluster/keep
+outputs. Smaller corpora take the fallback and are unchanged. The
+sample stays deterministic.
+
 No SQL oracle exists for k-means, so the registry entry is
 rows-only; semantics are pytest-gated against a pure-numpy twin
 (tests/test_semdedup.py) plus planted-duplicate recall.

@@ -12,9 +12,11 @@ empty mount, so citations are repo paths without line numbers):
   (same module) — rare values are outlier suspects.
 - ``robust_z``              ≙ the KB.pm getOutliers yardstick: the
   robust z of a value against a (median, MAD) model, as one Catalyst
-  expression. The per-row rules (plans/decide.py), explain and drift
-  all score with it; the broadcast join that brings the model to the
-  row lives in plans/decide.py.
+  expression. The per-row rules (plans/decide.py) and explain score
+  with it; the broadcast join that brings the model to the row lives
+  in plans/decide.py. ``robust_z_scalar`` is its driver-side twin on
+  Python floats (same operand order and branches), which model drift
+  (plans/drift.py) scores the ~100-row model tables with.
 - ``infer_column_types``    ≙ FileSignature/Tabular.pm per-column type
   inference (int/real/string/empty fractions) that drives model choice.
 
@@ -28,6 +30,8 @@ these two aggregation passes, and scoring is shuffle-free.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -46,6 +50,17 @@ def robust_z(x: Column, med: Column, mad: Column) -> Column:
     return F.when(mad > 0, F.abs(x - med) / (F.lit(MAD_TO_SIGMA) * mad)).otherwise(
         F.when(x == med, F.lit(0.0)).otherwise(F.lit(float("inf")))
     )
+
+
+def robust_z_scalar(x: float | None, med: float | None, mad: float | None) -> float | None:
+    """robust_z on Python floats, None for NULL: the same formula,
+    operand order and branches, so a non-NaN value scores
+    bit-identically on the driver and in a Spark plan."""
+    if mad is not None and mad > 0:
+        if x is None or med is None:
+            return None
+        return abs(x - med) / (MAD_TO_SIGMA * mad)
+    return 0.0 if x is not None and x == med else math.inf
 
 
 def fit_numeric_models(

@@ -6,27 +6,28 @@ scored against history).
 
 Here the KB is the `cohort_models` state table, one per pipeline run
 / table snapshot (sources/iceberg.py time travel reads any historic
-one). This operator compares two of them:
+one). ``model_drift`` compares two of them:
 
-- numeric attributes: drift z = operators.stats.robust_z(median_new,
-  median_old, mad_old) — the same function the per-row rules score
-  with, applied to the model itself; plus the cohort-size ratio.
+- numeric attributes: drift z = operators.stats.robust_z_scalar(
+  median_new, median_old, mad_old) — the scalar twin of the Column
+  robust_z the per-row rules score with, applied to the model itself.
 - categorical attributes: total-variation distance between the two
-  normalized value histograms (0.5 * sum |p_new - p_old|), computed
-  with map_entries/explode — no Python.
+  normalized value histograms (0.5 * sum |p_new - p_old|), flagged
+  above a multinomial sampling-noise floor.
 
-Execution shape: both inputs are KB-sized model tables, so the join
-is a broadcast and the whole comparison is Catalyst expressions; at
-10^12-clip scale this runs in milliseconds regardless of corpus
-size because it never touches the fact table.
+Execution shape: both inputs are the ~100-row model tables the
+pipeline already holds on the driver (stage B collects the new one,
+the old one is read back with pyarrow), so the comparison is plain
+Python over those rows. It never touches the fact table and submits
+no Spark job: an exchange over KB-sized inputs is all fixed cost.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import math
+from decimal import ROUND_HALF_UP, Decimal
 
-from bdqc_spark.operators.stats import robust_z
+from bdqc_spark.operators.stats import robust_z_scalar
 from bdqc_spark.plans.models import COHORT_COLS
 
 DRIFT_Z = 3.0
@@ -36,125 +37,124 @@ DRIFT_TVD = 0.10
 DRIFT_MIN_N = 30
 
 
-def numeric_drift(
-    models_old: DataFrame,
-    models_new: DataFrame,
-    z_threshold: float = DRIFT_Z,
-    min_n: int = DRIFT_MIN_N,
-) -> DataFrame:
-    """Two cohort_models snapshots → one row per (cohort, attribute)
-    present in either, with the robust drift score. Cohorts that
-    appear or disappear between snapshots surface with null old/new
-    stats and drifted = null (structural change, not measured drift).
+def round_half_up(x: float, places: int) -> float:
+    """Spark's ``round`` on a finite double: the shortest decimal repr
+    of x, rounded HALF_UP (0.1234565 → 0.123457, where Python's round
+    gives 0.123456)."""
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-places), ROUND_HALF_UP))
+
+
+def _key(r, cols: list[str]):
+    k = tuple(r[c] for c in cols)
+    # SQL equality: a NULL key part matches nothing on the other side
+    return k if None not in k else object()
+
+
+def _full_outer(old_rows, new_rows, cols: list[str]):
+    """(old, new) row pairs over the union of keys, None on the side
+    where a key is absent."""
+    old = {_key(r, cols): r for r in old_rows}
+    new = {_key(r, cols): r for r in new_rows}
+    for k in [*old, *(k for k in new if k not in old)]:
+        yield old.get(k), new.get(k)
+
+
+def _n(r):
+    return None if r is None else r["n"]
+
+
+def _measured(n_old, n_new) -> bool:
+    return (
+        n_old is not None and n_new is not None and n_old >= DRIFT_MIN_N and n_new >= DRIFT_MIN_N
+    )
+
+
+def model_drift(old_rows: list, new_rows: list) -> list[dict]:
+    """Two cohort_models snapshots (rows with item access: pyarrow
+    dicts or collected Spark Rows) → drift records with keys kind,
+    codec, lang_pred, attribute, n_old, n_new, metric, threshold,
+    drifted.
+
+    numeric: one record per (cohort, attribute) present in either
+    snapshot, categorical attributes included (their median is null,
+    so they are never measured). metric is the drift z when both
+    medians exist and both n ≥ DRIFT_MIN_N; otherwise metric and drifted
+    are null. A cohort that appears or disappears is a structural
+    change, not measured drift.
+
+    categorical: for each attribute with a histogram on both sides,
+    one record per cohort present in either: metric is the histogram
+    TVD in [0, 1] (0 = identical value mix, 1 = disjoint supports;
+    a one-sided cohort reads 0.5), threshold the effective TVD bound
+    rounded to 6 places, both null unless the cohort is measured.
     """
-    o = models_old.select(
-        *COHORT_COLS,
-        "attribute",
-        F.col("n").alias("n_old"),
-        F.col("median").alias("median_old"),
-        F.col("mad").alias("mad_old"),
-    )
-    nw = models_new.select(
-        *COHORT_COLS,
-        "attribute",
-        F.col("n").alias("n_new"),
-        F.col("median").alias("median_new"),
-        F.col("mad").alias("mad_new"),
-    )
-    # No broadcast hint: Spark cannot broadcast a full-outer build
-    # side; both inputs are KB-sized model tables so the shuffle is
-    # a few KB regardless of corpus size.
-    j = o.join(nw, on=[*COHORT_COLS, "attribute"], how="full_outer")
-    z = robust_z(F.col("median_new"), F.col("median_old"), F.col("mad_old"))
-    measured = (
-        F.col("median_old").isNotNull()
-        & F.col("median_new").isNotNull()
-        & (F.col("n_old") >= min_n)
-        & (F.col("n_new") >= min_n)
-    )
-    return j.select(
-        *COHORT_COLS,
-        "attribute",
-        "n_old",
-        "n_new",
-        "median_old",
-        "median_new",
-        "mad_old",
-        F.when(measured, z).alias("drift_z"),
-        F.when(measured, z > F.lit(z_threshold)).alias("drifted"),
-    )
+    keys = [*COHORT_COLS, "attribute"]
+    recs = []
+    for o, nw in _full_outer(old_rows, new_rows, keys):
+        ref = o if o is not None else nw
+        n_old, n_new = _n(o), _n(nw)
+        z = None
+        if (
+            _measured(n_old, n_new)
+            and o["median"] is not None
+            and nw["median"] is not None
+        ):
+            z = robust_z_scalar(nw["median"], o["median"], o["mad"])
+        recs.append(
+            {
+                "kind": "numeric",
+                **{c: ref[c] for c in keys},
+                "n_old": n_old,
+                "n_new": n_new,
+                "metric": z,
+                "threshold": None,
+                "drifted": None if z is None else z > DRIFT_Z,
+            }
+        )
 
-
-def categorical_drift(
-    models_old: DataFrame,
-    models_new: DataFrame,
-    attribute: str,
-    tvd_threshold: float = DRIFT_TVD,
-    min_n: int = DRIFT_MIN_N,
-) -> DataFrame:
-    """Histogram total-variation distance per cohort for one
-    categorical attribute. TVD in [0, 1]: 0 = identical value mix,
-    1 = disjoint supports."""
-
-    def hist_long(models: DataFrame, side: str) -> DataFrame:
-        return (
-            models.where(F.col("attribute") == attribute)
-            .select(
-                *COHORT_COLS,
-                F.col("n").alias(f"n_{side}"),
-                F.explode(F.map_entries("histogram")).alias("e"),
+    cat_attrs = sorted(
+        {r["attribute"] for r in old_rows if r["histogram"] is not None}
+        & {r["attribute"] for r in new_rows if r["histogram"] is not None}
+    )
+    for attr in cat_attrs:
+        # a cohort whose histogram is empty or null has no values to
+        # compare, so it is absent on that side
+        old_h = [r for r in old_rows if r["attribute"] == attr and r["histogram"]]
+        new_h = [r for r in new_rows if r["attribute"] == attr and r["histogram"]]
+        for o, nw in _full_outer(old_h, new_h, COHORT_COLS):
+            ref = o if o is not None else nw
+            n_old, n_new = _n(o), _n(nw)
+            p_old = {} if o is None else {v: c / n_old for v, c in o["histogram"].items()}
+            p_new = {} if nw is None else {v: c / n_new for v, c in nw["histogram"].items()}
+            values = sorted(p_old.keys() | p_new.keys())
+            # plain left-to-right float adds in value order, as Spark's
+            # sum met them (Python 3.12's sum() compensates rounding)
+            tvd = 0.0
+            for v in values:
+                tvd += abs(p_new.get(v, 0.0) - p_old.get(v, 0.0))
+            tvd /= 2.0
+            threshold = drifted = None
+            if _measured(n_old, n_new):
+                # Sampling-noise floor: two multinomial draws of sizes
+                # n_old/n_new over k values show TVD ≈
+                # 0.5·sqrt(k·(1/n_old + 1/n_new)) from noise alone
+                # (per-value |p̂-p| has sd sqrt(p(1-p)/n); summed over
+                # k values). Flag only above twice that floor — a
+                # fixed threshold misfires on every small cohort.
+                noise_floor = 0.5 * math.sqrt(len(values) * (1.0 / n_old + 1.0 / n_new))
+                effective = max(DRIFT_TVD, 2.0 * noise_floor)
+                threshold = round_half_up(effective, 6)
+                drifted = tvd > effective
+            recs.append(
+                {
+                    "kind": "categorical",
+                    **{c: ref[c] for c in COHORT_COLS},
+                    "attribute": attr,
+                    "n_old": n_old,
+                    "n_new": n_new,
+                    "metric": tvd,
+                    "threshold": threshold,
+                    "drifted": drifted,
+                }
             )
-            .select(
-                *COHORT_COLS,
-                f"n_{side}",
-                F.col("e.key").alias("value"),
-                (F.col("e.value") / F.col(f"n_{side}")).alias(f"p_{side}"),
-            )
-        )
-
-    o = hist_long(models_old, "old")
-    nw = hist_long(models_new, "new")
-    j = o.join(nw, on=[*COHORT_COLS, "value"], how="full_outer")
-    per_value = (
-        F.abs(F.coalesce("p_new", F.lit(0.0)) - F.coalesce("p_old", F.lit(0.0)))
-    ).alias("absdiff")
-    agg = (
-        j.select(
-            *COHORT_COLS,
-            per_value,
-            "n_old",
-            "n_new",
-        )
-        .groupBy(*COHORT_COLS)
-        .agg(
-            (F.sum("absdiff") / 2.0).alias("tvd"),
-            F.count(F.lit(1)).alias("support"),
-            F.max("n_old").alias("n_old"),
-            F.max("n_new").alias("n_new"),
-        )
-    )
-    measured = (
-        F.col("n_old").isNotNull()
-        & F.col("n_new").isNotNull()
-        & (F.col("n_old") >= min_n)
-        & (F.col("n_new") >= min_n)
-    )
-    # Sampling-noise floor: two multinomial draws of sizes n_old/n_new
-    # over `support` values show TVD ≈ 0.5·sqrt(k·(1/n_old + 1/n_new))
-    # from noise alone (per-value |p̂-p| has sd sqrt(p(1-p)/n); summed
-    # over k values). Flag only above twice that floor — a fixed
-    # threshold misfires on every small cohort.
-    noise_floor = F.lit(0.5) * F.sqrt(
-        F.col("support") * (F.lit(1.0) / F.col("n_old") + F.lit(1.0) / F.col("n_new"))
-    )
-    effective_thr = F.greatest(F.lit(tvd_threshold), F.lit(2.0) * noise_floor)
-    return agg.select(
-        *COHORT_COLS,
-        F.lit(attribute).alias("attribute"),
-        "n_old",
-        "n_new",
-        "support",
-        "tvd",
-        F.when(measured, F.round(effective_thr, 6)).alias("tvd_threshold"),
-        F.when(measured, F.col("tvd") > effective_thr).alias("drifted"),
-    )
+    return recs

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bdqc_spark.plans.decide import decide
+from bdqc_spark.plans.drift import model_drift
 from bdqc_spark.plans.models import collect_cohort_models
 from bdqc_spark.plans.profile import profile_clips
 
@@ -88,10 +89,8 @@ def _read_models_snapshot(models_dir: str) -> list | None:
 
 
 def _write_drift_table(
-    spark: SparkSession,
     old_rows: list,
     new_rows: list,
-    models_new: DataFrame,
     drift_dir: str,
     run_id: str,
     input_snapshot: str,
@@ -102,54 +101,15 @@ def _write_drift_table(
     (cohort, attribute) + categorical histogram TVD. Runs ONLY on
     incremental refits (a fresh out dir has no previous snapshot), so
     the serial path of fresh runs and scaling probes pays nothing.
-    Inputs are KB-sized model tables: the comparison never touches
-    the fact table, so its cost is flat at any corpus size.
+    Both snapshots are the KB-sized rows already on the driver:
+    plans.drift.model_drift compares them in Python and the table is
+    written with pyarrow — no Spark job, flat cost at any corpus size.
     Returns the number of drifted=True rows."""
-    from bdqc_spark.plans.drift import categorical_drift, numeric_drift
-
-    old_df = spark.createDataFrame(old_rows, schema=models_new.schema)
-    num = numeric_drift(old_df, models_new).collect()
-    # old_rows are dicts (pyarrow read-back); new_rows are Spark Rows
-    # (collect_cohort_models) — both support item access
-    cat_attrs = sorted(
-        {r["attribute"] for r in old_rows if r["histogram"] is not None}
-        & {r["attribute"] for r in new_rows if r["histogram"] is not None}
-    )
-    cats = []
-    for attr in cat_attrs:
-        cats.extend(categorical_drift(old_df, models_new, attr).collect())
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    recs = model_drift(old_rows, new_rows)
     now_ns = time.time_ns()
-    recs = [
-        {
-            "kind": "numeric",
-            "codec": r["codec"],
-            "lang_pred": r["lang_pred"],
-            "attribute": r["attribute"],
-            "n_old": r["n_old"],
-            "n_new": r["n_new"],
-            "metric": None if r["drift_z"] is None else float(r["drift_z"]),
-            "threshold": None,
-            "drifted": r["drifted"],
-        }
-        for r in num
-    ] + [
-        {
-            "kind": "categorical",
-            "codec": r["codec"],
-            "lang_pred": r["lang_pred"],
-            "attribute": r["attribute"],
-            "n_old": r["n_old"],
-            "n_new": r["n_new"],
-            "metric": float(r["tvd"]),
-            "threshold": r["tvd_threshold"],
-            "drifted": r["drifted"],
-        }
-        for r in cats
-    ]
     tbl = pa.table(
         {
             "kind": pa.array([r["kind"] for r in recs], pa.string()),
@@ -243,8 +203,6 @@ class PipelineResult:
 def _tick(result: PipelineResult, stage: str, t0: float) -> float:
     now = time.time()
     result.stage_seconds[stage] = round(now - t0, 2)
-    if os.environ.get("BDQC_TIMING"):
-        print(f"[pipeline] {stage}: {now - t0:.2f}s", flush=True)
     return now
 
 
@@ -467,10 +425,8 @@ def _finish_pipeline(
         if old_models_rows:
             t_b2 = time.time()
             result.drift_flagged = _write_drift_table(
-                spark,
                 old_models_rows,
                 models_rows,
-                models,
                 os.path.join(os.path.dirname(models_dir), "drift"),
                 result.run_id,
                 input_snapshot,

@@ -26,6 +26,7 @@ goes through ``IcebergishTable.read`` / ``.append`` only.
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import time
@@ -38,7 +39,6 @@ BUCKET_COL = "bucket"
 
 # optimistic-concurrency commit knobs (Iceberg's commit.retry family)
 COMMIT_LOCK_TIMEOUT_S = 30.0  # give up acquiring the commit lock
-COMMIT_LOCK_STALE_S = 60.0  # break a lock older than this (dead writer)
 APPEND_COMMIT_RETRIES = 5  # append auto-rebase attempts on conflict
 
 
@@ -99,8 +99,10 @@ class IcebergishTable:
         manifest's parent — otherwise another writer committed in
         between and a blind swap would silently orphan their
         snapshot (last-wins data loss). The check-then-swap runs
-        under an exclusive lock file so the window is closed; a lock
-        older than COMMIT_LOCK_STALE_S is broken (dead writer)."""
+        under an exclusive flock on ``metadata/commit.lock`` so the
+        window is closed. The kernel drops the flock when its holder
+        dies, so a killed writer blocks nobody and the lock file
+        itself is never removed."""
         os.makedirs(self.meta_dir, exist_ok=True)
         sid = manifest["snapshot_id"]
         path = os.path.join(self.meta_dir, f"snap-{sid}.json")
@@ -110,23 +112,17 @@ class IcebergishTable:
         os.rename(tmp, path)  # immutable once visible; safe pre-lock
 
         lock = os.path.join(self.meta_dir, "commit.lock")
-        deadline = time.time() + COMMIT_LOCK_TIMEOUT_S
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.close(fd)
-                break
-            except FileExistsError:
-                try:
-                    if time.time() - os.path.getmtime(lock) > COMMIT_LOCK_STALE_S:
-                        os.unlink(lock)  # break a dead writer's lock
-                        continue
-                except FileNotFoundError:
-                    continue  # holder just released; retry immediately
-                if time.time() > deadline:
-                    raise TimeoutError(f"commit lock busy: {lock}")
-                time.sleep(0.02)
+        lock_fd = os.open(lock, os.O_CREAT | os.O_WRONLY)
         try:
+            deadline = time.time() + COMMIT_LOCK_TIMEOUT_S
+            while True:
+                try:
+                    fcntl.flock(lock_fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                    break
+                except BlockingIOError:
+                    if time.time() > deadline:
+                        raise TimeoutError(f"commit lock busy: {lock}")
+                    time.sleep(0.02)
             cur = self.current_snapshot_id()
             if cur != manifest["parent_snapshot_id"]:
                 raise CommitConflictError(
@@ -136,10 +132,7 @@ class IcebergishTable:
                 )
             self._swap_pointer(sid)
         finally:
-            try:
-                os.unlink(lock)
-            except FileNotFoundError:
-                pass
+            os.close(lock_fd)  # releases the flock
         return sid
 
     def _swap_pointer(self, sid: str) -> None:

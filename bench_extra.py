@@ -7,7 +7,8 @@ official numbers still come from bench.py.
 
 Usage:
   python bench_extra.py [--repeat N] [--plans DIR] [query ...]
-  python bench_extra.py --pipeline            # clips pipeline stages
+
+Pipeline timing lives in perfbench/ (per-stage layers with --trace 1).
 """
 
 from __future__ import annotations
@@ -49,8 +50,6 @@ def main() -> None:
     ap.add_argument("--repeat", type=int, default=1)
     ap.add_argument("--plans", default=None, help="dump explain(formatted) to DIR")
     ap.add_argument("--suffix", default="", help="plan filename suffix (before/after)")
-    ap.add_argument("--pipeline", action="store_true", help="run clips pipeline with stage timing")
-    ap.add_argument("--n-clips", type=int, default=200000)
     args = ap.parse_args()
 
     from bdqc_spark.session import build_session
@@ -61,21 +60,6 @@ def main() -> None:
     qs = entry.queries()
     names = args.queries or HEADLINE
     out: dict[str, list[float]] = {}
-
-    if args.pipeline:
-        import shutil
-
-        from bench import CLIPS_CACHE, _ensure_clips, _prime_page_cache, _run_pipeline_timed, _warmup
-
-        os.environ["BDQC_TIMING"] = "1"
-        tbl = _ensure_clips(spark, CLIPS_CACHE, args.n_clips)
-        _prime_page_cache(CLIPS_CACHE)
-        _warmup(spark, tbl)
-        for _ in range(max(1, args.repeat)):
-            dt = _run_pipeline_timed(spark, tbl)
-            out.setdefault("clips_pipeline", []).append(round(dt, 3))
-        print(json.dumps(out))
-        return
 
     for name in names:
         spark.sparkContext.setJobDescription(f"bench_extra: {name}")

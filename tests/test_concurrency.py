@@ -7,9 +7,11 @@ ops surface CommitConflictError; appends auto-rebase and retry.
 
 from __future__ import annotations
 
+import fcntl
 import os
+import subprocess
+import sys
 import threading
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -76,17 +78,42 @@ def test_concurrent_appends_all_land(spark, tmp_path):
     assert n == 5
 
 
-def test_stale_lock_is_broken(spark, tmp_path):
+# Takes the table's commit flock, says so, then waits to be killed.
+_HOLD_LOCK = """
+import fcntl, os, sys, time
+fd = os.open(sys.argv[1], os.O_CREAT | os.O_WRONLY)
+fcntl.flock(fd, fcntl.LOCK_EX)
+print("locked", flush=True)
+time.sleep(60)
+"""
+
+
+def test_dead_writer_lock_blocks_nothing(spark, tmp_path, monkeypatch):
+    """A commit.lock file left behind is not a held lock, and a writer
+    SIGKILLed while holding the flock releases it with its death: the
+    next commit goes through at once, not after a staleness window."""
+    import bdqc_spark.sources.iceberg as ice
+
     tbl = IcebergishTable(str(tmp_path / "t"), num_buckets=2)
     tbl.append(_batch(spark, 0, 5))
+    monkeypatch.setattr(ice, "COMMIT_LOCK_TIMEOUT_S", 0.3)
     lock = os.path.join(tbl.meta_dir, "commit.lock")
     with open(lock, "w") as f:
-        f.write("dead-writer")
-    old = time.time() - 3600
-    os.utime(lock, (old, old))
-    tbl.append(_batch(spark, 5, 5))  # must break the stale lock
-    assert tbl.read(spark).count() == 10
-    assert not os.path.exists(lock)
+        f.write("dead-writer")  # fresh mtime, no holder
+    tbl.append(_batch(spark, 5, 5))
+
+    with subprocess.Popen(
+        [sys.executable, "-c", _HOLD_LOCK, lock], stdout=subprocess.PIPE
+    ) as holder:
+        try:
+            assert holder.stdout.readline().strip() == b"locked"
+            with pytest.raises(TimeoutError):  # a live holder in another process blocks
+                tbl.append(_batch(spark, 10, 5))
+        finally:
+            holder.kill()  # SIGKILL while it holds the flock
+    tbl.append(_batch(spark, 15, 5))
+    assert tbl.read(spark).count() == 15
+    assert os.path.exists(lock)  # the lock file is never unlinked
 
 
 def test_live_lock_times_out_quickly(spark, tmp_path, monkeypatch):
@@ -95,9 +122,10 @@ def test_live_lock_times_out_quickly(spark, tmp_path, monkeypatch):
     tbl = IcebergishTable(str(tmp_path / "t"), num_buckets=2)
     tbl.append(_batch(spark, 0, 5))
     monkeypatch.setattr(ice, "COMMIT_LOCK_TIMEOUT_S", 0.3)
-    lock = os.path.join(tbl.meta_dir, "commit.lock")
-    with open(lock, "w") as f:
-        f.write("live-writer")  # fresh mtime: held, not stale
-    with pytest.raises(TimeoutError):
-        tbl.append(_batch(spark, 5, 5))
-    os.unlink(lock)
+    fd = os.open(os.path.join(tbl.meta_dir, "commit.lock"), os.O_WRONLY)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)  # a live writer holds the lock
+        with pytest.raises(TimeoutError):
+            tbl.append(_batch(spark, 5, 5))
+    finally:
+        os.close(fd)

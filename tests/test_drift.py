@@ -5,13 +5,23 @@ cohort attributes that moved.
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from bdqc_spark.plans.drift import categorical_drift, numeric_drift
+from bdqc_spark.plans.drift import model_drift, round_half_up
 from bdqc_spark.plans.models import fit_cohort_models
 from bdqc_spark.plans.profile import profile_clips
 from bdqc_spark.synth.clips import generate_clips_df
+
+
+def _models(df):
+    return fit_cohort_models(profile_clips(df)).collect()
+
+
+def _drift(old_rows, new_rows, kind):
+    out = pd.DataFrame(model_drift(old_rows, new_rows))
+    return out[out.kind == kind]
 
 
 @pytest.fixture(scope="module")
@@ -28,17 +38,12 @@ def two_snapshots(spark):
             F.col("dur_ms")
         ),
     )
-    ma = fit_cohort_models(profile_clips(a))
-    mb = fit_cohort_models(profile_clips(b))
-    # materialize once — the model tables are KB-sized
-    ma = spark.createDataFrame(ma.collect())
-    mb = spark.createDataFrame(mb.collect())
-    return ma, mb
+    return _models(a), _models(b)
 
 
 def test_numeric_drift_flags_shifted_attribute(two_snapshots):
     ma, mb = two_snapshots
-    out = numeric_drift(ma, mb).toPandas()
+    out = _drift(ma, mb, "numeric")
     hit = out[(out.attribute == "dur_ms") & (out.codec == "pcm_s16le")]
     assert len(hit) > 0
     measured = hit[hit.drifted.notna()]
@@ -51,9 +56,8 @@ def test_numeric_drift_flags_shifted_attribute(two_snapshots):
 
 def test_numeric_drift_same_distribution_is_calm(spark, two_snapshots):
     ma, _ = two_snapshots
-    b = generate_clips_df(spark, 1500, seed=11, start=3000)
-    mb = fit_cohort_models(profile_clips(b))
-    out = numeric_drift(ma, mb).toPandas()
+    mb = _models(generate_clips_df(spark, 1500, seed=11, start=3000))
+    out = _drift(ma, mb, "numeric")
     measured = out[out.drifted.notna()]
     assert len(measured) > 0
     # same generator, disjoint index ranges: nothing should move
@@ -63,37 +67,76 @@ def test_numeric_drift_same_distribution_is_calm(spark, two_snapshots):
 def test_numeric_drift_structural_cohorts_are_null(two_snapshots):
     ma, mb = two_snapshots
     # drop one cohort entirely from the "new" snapshot → structural
-    gone = mb.orderBy("codec", "lang_pred").limit(1).collect()[0]
-    mb2 = mb.where(
-        ~((F.col("codec") == gone.codec) & (F.col("lang_pred") == gone.lang_pred))
-    )
-    out = numeric_drift(ma, mb2).toPandas()
-    row = out[(out.codec == gone.codec) & (out.lang_pred == gone.lang_pred)]
-    assert len(row) > 0
-    assert row.drifted.isna().all()
-    assert row.median_new.isna().all()
+    gone = min((r.codec, r.lang_pred) for r in mb)
+    mb2 = [r for r in mb if (r.codec, r.lang_pred) != gone]
+    out = pd.DataFrame(model_drift(ma, mb2))
+    row = out[(out.codec == gone[0]) & (out.lang_pred == gone[1])]
+    num = row[row.kind == "numeric"]
+    assert len(num) > 0
+    assert num.drifted.isna().all()
+    assert num.n_new.isna().all()
+    # its sr_hz histogram is on the old side only: a one-sided value
+    # mix reads TVD 0.5, with no threshold and no verdict
+    cat = row[row.kind == "categorical"]
+    assert len(cat) == 1
+    assert (cat.metric == 0.5).all()
+    assert cat.threshold.isna().all() and cat.drifted.isna().all()
 
 
 def test_categorical_drift_tvd(spark, two_snapshots):
     ma, _ = two_snapshots
     # force a new sr mix in snapshot B: everything at 8 kHz
-    b = generate_clips_df(spark, 1500, seed=11, start=1500).withColumn(
-        "sr_hz", F.lit(8000)
+    mb = _models(
+        generate_clips_df(spark, 1500, seed=11, start=1500).withColumn(
+            "sr_hz", F.lit(8000)
+        )
     )
-    mb = fit_cohort_models(profile_clips(b))
-    out = categorical_drift(ma, mb, "sr_hz").toPandas()
+    out = _drift(ma, mb, "categorical")
+    assert (out.attribute == "sr_hz").all()
     measured = out[out.drifted.notna()]
     assert len(measured) > 0
     # the dominant rate was 16 kHz → mix collapse is a large TVD
     assert measured.drifted.any()
-    assert (measured.tvd <= 1.0).all() and (measured.tvd >= 0.0).all()
+    assert (measured.metric <= 1.0).all() and (measured.metric >= 0.0).all()
 
 
 def test_categorical_drift_same_distribution_is_calm(spark, two_snapshots):
     ma, _ = two_snapshots
-    b = generate_clips_df(spark, 1500, seed=11, start=4500)
-    mb = fit_cohort_models(profile_clips(b))
-    out = categorical_drift(ma, mb, "sr_hz").toPandas()
+    mb = _models(generate_clips_df(spark, 1500, seed=11, start=4500))
+    out = _drift(ma, mb, "categorical")
     measured = out[out.drifted.notna()]
     assert len(measured) > 0
     assert not measured.drifted.any(), measured[measured.drifted]
+
+
+def test_round_half_up_matches_spark_round(spark):
+    """The drift threshold is rounded on the driver; Spark's round is
+    HALF_UP on the decimal repr, so ties go up where Python's round
+    goes to the nearest binary neighbour."""
+    ties = [0.1234565, 0.2500005, 0.1000005, 0.3333335, 1.0000005, 0.123456]
+    want = spark.range(1).select(
+        *[F.round(F.lit(v), 6).alias(f"v{i}") for i, v in enumerate(ties)]
+    ).first()
+    assert [round_half_up(v, 6) for v in ties] == list(want)
+
+
+def test_null_cohort_key_matches_nothing():
+    """A NULL cohort key compares as in SQL: it matches nothing, so the
+    same NULL-codec cohort on both sides is two one-sided (structural)
+    records per kind, never a measured verdict."""
+    hist = {"16000": 90, "8000": 10}
+
+    def rows(median):
+        return [
+            {"codec": None, "lang_pred": "en", "attribute": "dur_ms", "n": 100,
+             "median": median, "mad": 1.0, "histogram": None},
+            {"codec": None, "lang_pred": "en", "attribute": "sr_hz", "n": 100,
+             "median": None, "mad": None, "histogram": hist},
+        ]
+
+    out = pd.DataFrame(model_drift(rows(10.0), rows(50.0)))
+    assert len(out) == 6  # 2 numeric attributes x 2 sides + 2 categorical
+    assert out.drifted.isna().all() and out.threshold.isna().all()
+    cat = out[out.kind == "categorical"]
+    assert sorted(zip(cat.n_old.fillna(0), cat.n_new.fillna(0))) == [(0, 100), (100, 0)]
+    assert (cat.metric == 0.5).all()

@@ -32,10 +32,11 @@ def test_fit_numeric_models_matches_numpy(spark):
 
 
 def test_robust_z_matches_oracle_formula(spark):
-    """operators.stats.robust_z (the one z that decide, explain and
-    drift score with) against the single-node oracle's numpy formula
-    (synth/oracle.py), NULL ↔ NaN, on every branch of the definition."""
-    from bdqc_spark.operators.stats import robust_z
+    """operators.stats.robust_z (the one z that decide and explain
+    score with) and its scalar twin robust_z_scalar (model drift)
+    against the single-node oracle's numpy formula (synth/oracle.py),
+    NULL ↔ NaN, on every branch of the definition."""
+    from bdqc_spark.operators.stats import robust_z, robust_z_scalar
 
     rows = [
         (13.0, 10.0, 2.0),  # mad > 0: scaled distance
@@ -63,6 +64,9 @@ def test_robust_z_matches_oracle_formula(spark):
     np.testing.assert_array_equal(got, want)
     assert got[0] == 3.0 / (1.4826 * 2.0) and got[1] == 0.0 and np.isinf(got[2])
     assert np.isnan(got[3]) and np.isnan(got[4])
+    # the driver-side twin (model drift) on the same rows, None ↔ NaN
+    scalar = np.array([robust_z_scalar(*r) for r in rows], dtype=float)
+    np.testing.assert_array_equal(scalar, want)
 
 
 def test_salted_join_equals_plain_join(spark):
