@@ -29,13 +29,21 @@ from __future__ import annotations
 import fcntl
 import json
 import os
+import shutil
 import time
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 BUCKET_COL = "bucket"
+STAGE_PREFIX = "_stage-"  # private write directories under data/
+
+
+def _bucket_of(rel: str) -> str:
+    """Bucket key of a manifest-relative path ``bucket=<k>/<file>``."""
+    return rel.split("/", 1)[0].split("=", 1)[1]
 
 # optimistic-concurrency commit knobs (Iceberg's commit.retry family)
 COMMIT_LOCK_TIMEOUT_S = 30.0  # give up acquiring the commit lock
@@ -92,25 +100,17 @@ class IcebergishTable:
         except FileNotFoundError:
             return None
 
-    def _commit_snapshot(self, manifest: dict) -> str:
-        """Write the immutable manifest, then swap the pointer under
-        an optimistic-concurrency check (Iceberg's commit protocol):
-        the swap happens ONLY if the ref still points at the
-        manifest's parent — otherwise another writer committed in
-        between and a blind swap would silently orphan their
-        snapshot (last-wins data loss). The check-then-swap runs
-        under an exclusive flock on ``metadata/commit.lock`` so the
-        window is closed. The kernel drops the flock when its holder
-        dies, so a killed writer blocks nobody and the lock file
-        itself is never removed."""
+    @contextmanager
+    def _commit_lock(self):
+        """Hold the table's exclusive flock on ``metadata/commit.lock``
+        for the body: every pointer swap and every ``refs.json`` edit
+        runs inside it, so its read-check-write cannot interleave with
+        another writer's. Polled until ``COMMIT_LOCK_TIMEOUT_S``, then
+        ``TimeoutError``. The kernel drops the flock when its holder
+        dies, so a killed writer blocks nobody and the lock file itself
+        is never removed. Never nest it: a second flock on a new fd
+        blocks even within one process."""
         os.makedirs(self.meta_dir, exist_ok=True)
-        sid = manifest["snapshot_id"]
-        path = os.path.join(self.meta_dir, f"snap-{sid}.json")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        os.rename(tmp, path)  # immutable once visible; safe pre-lock
-
         lock = os.path.join(self.meta_dir, "commit.lock")
         lock_fd = os.open(lock, os.O_CREAT | os.O_WRONLY)
         try:
@@ -123,6 +123,27 @@ class IcebergishTable:
                     if time.time() > deadline:
                         raise TimeoutError(f"commit lock busy: {lock}")
                     time.sleep(0.02)
+            yield
+        finally:
+            os.close(lock_fd)  # releases the flock
+
+    def _commit_snapshot(self, manifest: dict) -> str:
+        """Write the immutable manifest, then swap the pointer under
+        an optimistic-concurrency check (Iceberg's commit protocol):
+        the swap happens ONLY if the ref still points at the
+        manifest's parent — otherwise another writer committed in
+        between and a blind swap would silently orphan their
+        snapshot (last-wins data loss). The check-then-swap runs
+        under ``_commit_lock`` so the window is closed."""
+        os.makedirs(self.meta_dir, exist_ok=True)
+        sid = manifest["snapshot_id"]
+        path = os.path.join(self.meta_dir, f"snap-{sid}.json")
+        tmp = path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f, indent=1, sort_keys=True)
+        os.rename(tmp, path)  # immutable once visible; safe pre-lock
+
+        with self._commit_lock():
             cur = self.current_snapshot_id()
             if cur != manifest["parent_snapshot_id"]:
                 raise CommitConflictError(
@@ -131,8 +152,6 @@ class IcebergishTable:
                     f"writer prepared snapshot {sid}"
                 )
             self._swap_pointer(sid)
-        finally:
-            os.close(lock_fd)  # releases the flock
         return sid
 
     def _swap_pointer(self, sid: str) -> None:
@@ -179,52 +198,14 @@ class IcebergishTable:
             self.num_buckets = int(prev["num_buckets"])
 
         bucketed = df if BUCKET_COL in df.columns else self.with_bucket(df)
-        # The write lands in a per-append STAGING directory and its
-        # files are renamed into the bucket dirs afterwards — the
-        # writer attributes exactly ITS OWN files, so concurrent
-        # appends cannot cross-claim each other's in-flight parquet
-        # (the previous before/after directory diff could), and a
-        # file deliberately dropped from the manifest (compaction)
-        # can never be silently re-absorbed. Stage dirs don't match
-        # the `bucket=` prefix, so _data_listing / readers / orphan
-        # sweep never see them.
         # One directory per bucket → scans with a bucket predicate
         # read only that directory (partition pruning). Cluster the
         # write by bucket first (Iceberg write.distribution-mode=hash):
         # without it every writer task emits a file into every bucket
         # dir — T×B small files whose per-path planning cost lands on
         # the serial path of every subsequent read.
-        import shutil
-
-        stage = os.path.join(self.data_dir, f"_stage-{uuid.uuid4().hex[:12]}")
-        (
-            bucketed.repartition(self.num_buckets, BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(stage)
-        )
-        added: list[str] = []
-        for entry in sorted(os.listdir(stage)):
-            if not entry.startswith(f"{BUCKET_COL}="):
-                continue
-            os.makedirs(os.path.join(self.data_dir, entry), exist_ok=True)
-            for fn in sorted(os.listdir(os.path.join(stage, entry))):
-                if fn.endswith(".parquet"):  # Spark part names are unique
-                    os.rename(
-                        os.path.join(stage, entry, fn),
-                        os.path.join(self.data_dir, entry, fn),
-                    )
-                    added.append(f"{entry}/{fn}")
-        shutil.rmtree(stage, ignore_errors=True)
-
-        # Row counts from parquet footers (driver-side metadata read —
-        # no data scan, the Iceberg way).
-        import pyarrow.parquet as pq
-
-        added_rows = sum(
-            pq.ParquetFile(os.path.join(self.data_dir, rel)).metadata.num_rows
-            for rel in added
-        )
+        added = self._write_staged(bucketed.repartition(self.num_buckets, BUCKET_COL))
+        added_rows = self._file_rows(added)
 
         # Optimistic commit with auto-rebase: appends are commutative,
         # so on a CommitConflictError the manifest is simply rebuilt
@@ -232,26 +213,14 @@ class IcebergishTable:
         # commit retried — Iceberg's fast-append retry. A concurrent
         # SPEC change (rebucket) is not rebase-able and re-raises.
         for _ in range(APPEND_COMMIT_RETRIES):
-            bucket_files: dict[str, list[str]] = (
-                {k: list(v) for k, v in prev["bucket_files"].items()} if prev else {}
-            )
-            for rel in added:
-                bucket_files.setdefault(
-                    rel.split("/", 1)[0].split("=", 1)[1], []
-                ).append(rel)
             prev_rows = int(prev["summary"].get("total_rows", 0)) if prev else 0
-            manifest = {
-                "snapshot_id": uuid.uuid4().hex[:16],
-                "parent_snapshot_id": prev["snapshot_id"] if prev else None,
-                "timestamp_ms": int(time.time() * 1000),
-                "operation": operation,
-                "bucket_key": self.bucket_key,
-                "num_buckets": self.num_buckets,
-                "schema": self._evolved_schema(prev, df),
-                "bucket_files": bucket_files,
-                "file_stats": self._manifest_file_stats(prev, bucket_files),
-                "summary": {"total_rows": prev_rows + added_rows, **(summary_extra or {})},
-            }
+            manifest = self._manifest(
+                prev,
+                operation,
+                self._swap_files(prev["bucket_files"] if prev else {}, set(), added),
+                self._evolved_schema(prev, df),
+                {"total_rows": prev_rows + added_rows, **(summary_extra or {})},
+            )
             try:
                 return self._commit_snapshot(manifest)
             except CommitConflictError:
@@ -261,6 +230,100 @@ class IcebergishTable:
         raise CommitConflictError(
             f"append gave up after {APPEND_COMMIT_RETRIES} rebase attempts"
         )
+
+    def _write_staged(self, df: DataFrame) -> list[str]:
+        """The one way a mutator puts data files into the table. ``df``
+        (already repartitioned/sorted by the caller) is written
+        partitioned by bucket into a fresh private
+        ``data/_stage-<uuid>`` directory, whose part files are then
+        renamed into ``data/bucket=<k>/``. Returns exactly those
+        files' relative paths: a writer attributes only its own
+        output, so a concurrent writer's file landing in a bucket
+        directory mid-write is never claimed, and a file deliberately
+        dropped from a manifest (compaction, delete) is never
+        re-absorbed. Stage directories don't match the ``bucket=``
+        prefix, so readers never see them; one abandoned by a killed
+        writer is swept by ``remove_orphans``."""
+        stage = os.path.join(self.data_dir, f"{STAGE_PREFIX}{uuid.uuid4().hex[:12]}")
+        added: list[str] = []
+        try:
+            df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(stage)
+            for entry in sorted(os.listdir(stage)):
+                if not entry.startswith(f"{BUCKET_COL}="):
+                    continue
+                os.makedirs(os.path.join(self.data_dir, entry), exist_ok=True)
+                for fn in sorted(os.listdir(os.path.join(stage, entry))):
+                    if fn.endswith(".parquet"):  # Spark part names are unique
+                        os.rename(
+                            os.path.join(stage, entry, fn),
+                            os.path.join(self.data_dir, entry, fn),
+                        )
+                        added.append(f"{entry}/{fn}")
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+        return added
+
+    def _file_rows(self, rels) -> int:
+        """Total rows of data files, from their parquet footers
+        (driver-side metadata read — no data scan, the Iceberg way)."""
+        import pyarrow.parquet as pq
+
+        return sum(
+            pq.ParquetFile(os.path.join(self.data_dir, rel)).metadata.num_rows
+            for rel in rels
+        )
+
+    def _files_of(self, df: DataFrame) -> set[str]:
+        """Relative paths of the data files named in ``df``'s ``f``
+        column (``input_file_name()`` URIs) — which files a scan's
+        surviving rows came from."""
+        base = os.path.abspath(self.data_dir)
+        out: set[str] = set()
+        for r in df.select("f").distinct().collect():
+            p = r["f"]
+            if p.startswith("file:"):
+                p = p[len("file:") :]
+                while p.startswith("//"):
+                    p = p[1:]
+            out.add(os.path.relpath(os.path.abspath(p), base))
+        return out
+
+    @staticmethod
+    def _swap_files(bucket_files: dict, removed: set, added: list[str]) -> dict:
+        """A new manifest's file lists: the parent's files minus
+        ``removed``, plus ``added`` in their buckets; buckets left
+        empty are dropped."""
+        out = {k: [r for r in fs if r not in removed] for k, fs in bucket_files.items()}
+        for rel in added:
+            out.setdefault(_bucket_of(rel), []).append(rel)
+        return {k: fs for k, fs in out.items() if fs}
+
+    def _manifest(
+        self,
+        parent: dict | None,
+        operation: str,
+        bucket_files: dict,
+        schema: list[str],
+        summary: dict,
+        **extra,
+    ) -> dict:
+        """A snapshot manifest committing ``bucket_files`` on top of
+        ``parent``; ``extra`` holds the op-specific keys
+        (``update_files``, ``merge_files``, a rebucket's
+        ``num_buckets``)."""
+        return {
+            "snapshot_id": uuid.uuid4().hex[:16],
+            "parent_snapshot_id": parent["snapshot_id"] if parent else None,
+            "timestamp_ms": int(time.time() * 1000),
+            "operation": operation,
+            "bucket_key": self.bucket_key,
+            "num_buckets": self.num_buckets,
+            "schema": schema,
+            "bucket_files": bucket_files,
+            "file_stats": self._manifest_file_stats(parent, bucket_files),
+            "summary": summary,
+            **extra,
+        }
 
     # -- file-level column statistics (Iceberg manifest stats) ------------
     _STR_BOUND_LEN = 16  # Iceberg's write.metadata.metrics truncate(16)
@@ -800,22 +863,11 @@ class IcebergishTable:
         # only needed on the KEEP side below, where null must mean
         # "keep". scan_buckets additionally prunes the FILE LIST via
         # the manifest — the delete_keys fast path.
-        base = os.path.abspath(self.data_dir)
-        hits = (
+        affected = self._files_of(
             self.read(spark, buckets=scan_buckets, range_filter=scan_range)
             .where(cond)
             .select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
         )
-        affected: set[str] = set()
-        for r in hits:
-            p = r["f"]
-            if p.startswith("file:"):
-                p = p[len("file:") :]
-                while p.startswith("//"):
-                    p = p[1:]
-            affected.add(os.path.relpath(os.path.abspath(p), base))
         if not affected:
             return None
 
@@ -832,58 +884,26 @@ class IcebergishTable:
         )
 
         # 3. rewrite affected files without the matching rows
-        before = self._data_listing()
-        (
-            aff_df.where(~hit)
-            .repartition(max(1, len({r.split("/", 1)[0] for r in affected})), BUCKET_COL)
-            .write.mode("append")
-            .partitionBy(BUCKET_COL)
-            .parquet(self.data_dir)
-        )
-        new_by_bucket: dict[str, list[str]] = {}
-        for rel in sorted(self._data_listing() - before):
-            new_by_bucket.setdefault(rel.split("/", 1)[0].split("=", 1)[1], []).append(rel)
-
-        import pyarrow.parquet as pq
-
-        def _rows(rels) -> int:
-            return sum(
-                pq.ParquetFile(os.path.join(self.data_dir, r)).metadata.num_rows
-                for r in rels
+        added = self._write_staged(
+            aff_df.where(~hit).repartition(
+                max(1, len({_bucket_of(r) for r in affected})), BUCKET_COL
             )
-
-        bucket_files = {k: list(v) for k, v in snap["bucket_files"].items()}
-        old_affected_rows = _rows(affected)
-        for k in list(bucket_files):
-            kept = [r for r in bucket_files[k] if r not in affected]
-            kept.extend(new_by_bucket.get(k, []))
-            if kept:
-                bucket_files[k] = kept
-            else:
-                del bucket_files[k]  # bucket fully deleted
-        new_affected_rows = _rows(
-            rel for fs in new_by_bucket.values() for rel in fs
         )
-        n_deleted = old_affected_rows - new_affected_rows
+        n_deleted = self._file_rows(affected) - self._file_rows(added)
         if n_deleted <= 0:  # nothing actually removed — don't commit
             return None
 
-        manifest = {
-            "snapshot_id": uuid.uuid4().hex[:16],
-            "parent_snapshot_id": snap["snapshot_id"],
-            "timestamp_ms": int(time.time() * 1000),
-            "operation": "delete",
-            "bucket_key": self.bucket_key,
-            "num_buckets": self.num_buckets,
-            "schema": snap["schema"],
-            "bucket_files": bucket_files,
-            "file_stats": self._manifest_file_stats(snap, bucket_files),
-            "summary": {
+        manifest = self._manifest(
+            snap,
+            "delete",
+            self._swap_files(snap["bucket_files"], affected, added),
+            snap["schema"],
+            {
                 "total_rows": snap["summary"]["total_rows"] - n_deleted,
                 "deleted_rows": n_deleted,
                 "rewritten_files": len(affected),
             },
-        }
+        )
         sid = manifest["snapshot_id"]
         os.makedirs(os.path.join(self.meta_dir, "deletes"), exist_ok=True)
         with open(self._delete_keys_path(sid), "w") as f:
@@ -926,22 +946,11 @@ class IcebergishTable:
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
         hit = F.coalesce(cond.cast("boolean"), F.lit(False))
 
-        base = os.path.abspath(self.data_dir)
-        hits = (
+        affected = self._files_of(
             self.read(spark, buckets=scan_buckets, range_filter=scan_range)
             .where(cond)
             .select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
         )
-        affected: set[str] = set()
-        for r in hits:
-            p = r["f"]
-            if p.startswith("file:"):
-                p = p[len("file:") :]
-                while p.startswith("//"):
-                    p = p[1:]
-            affected.add(os.path.relpath(os.path.abspath(p), base))
         if not affected:
             return None
 
@@ -970,58 +979,30 @@ class IcebergishTable:
             else:
                 cols.append(F.col(c))
 
-        before = self._data_listing()
-        (
-            aff_df.select(*cols)
-            .repartition(max(1, len({r.split("/", 1)[0] for r in affected})), BUCKET_COL)
-            .write.mode("append")
-            .partitionBy(BUCKET_COL)
-            .parquet(self.data_dir)
-        )
-        new_by_bucket: dict[str, list[str]] = {}
-        for rel in sorted(self._data_listing() - before):
-            new_by_bucket.setdefault(rel.split("/", 1)[0].split("=", 1)[1], []).append(rel)
-
-        import pyarrow.parquet as pq
-
-        def _rows(rels) -> int:
-            return sum(
-                pq.ParquetFile(os.path.join(self.data_dir, r)).metadata.num_rows
-                for r in rels
+        added = self._write_staged(
+            aff_df.select(*cols).repartition(
+                max(1, len({_bucket_of(r) for r in affected})), BUCKET_COL
             )
-
-        old_rows = _rows(affected)
-        new_rows = _rows(rel for fs in new_by_bucket.values() for rel in fs)
+        )
+        old_rows = self._file_rows(affected)
+        new_rows = self._file_rows(added)
         if old_rows != new_rows:
             raise RuntimeError(
                 f"update: rewrite changed row count {old_rows} → {new_rows}; "
                 "refusing to commit (orphan sweep will collect the new files)"
             )
-        bucket_files = {k: list(v) for k, v in snap["bucket_files"].items()}
-        for k in list(bucket_files):
-            kept = [r for r in bucket_files[k] if r not in affected]
-            kept.extend(new_by_bucket.get(k, []))
-            bucket_files[k] = kept
-
-        manifest = {
-            "snapshot_id": uuid.uuid4().hex[:16],
-            "parent_snapshot_id": snap["snapshot_id"],
-            "timestamp_ms": int(time.time() * 1000),
-            "operation": "update",
-            "bucket_key": self.bucket_key,
-            "num_buckets": self.num_buckets,
-            "schema": snap["schema"],
-            "bucket_files": bucket_files,
-            "update_files": sorted(
-                rel for fs in new_by_bucket.values() for rel in fs
-            ),
-            "file_stats": self._manifest_file_stats(snap, bucket_files),
-            "summary": {
+        manifest = self._manifest(
+            snap,
+            "update",
+            self._swap_files(snap["bucket_files"], affected, added),
+            snap["schema"],
+            {
                 "total_rows": snap["summary"]["total_rows"],
                 "updated_rows": n_updated,
                 "rewritten_files": len(affected),
             },
-        }
+            update_files=sorted(added),
+        )
         self._write_changed_keys(manifest["snapshot_id"], upd_keys)
         return self._commit_snapshot(manifest)
 
@@ -1063,104 +1044,53 @@ class IcebergishTable:
             r[BUCKET_COL] for r in bucketed.select(BUCKET_COL).distinct().collect()
         )
 
-        base = os.path.abspath(self.data_dir)
-        hits = (
+        affected = self._files_of(
             self.read(spark, buckets=buckets)
             # bind the file name on the scan side BEFORE the join —
             # input_file_name() is ambiguous across two sources
             .select(F.col(key), F.input_file_name().alias("f"))
             .join(batch_keys, key, "left_semi")
-            .select("f")
-            .distinct()
-            .collect()
         )
-        affected: set[str] = set()
-        for r in hits:
-            p = r["f"]
-            if p.startswith("file:"):
-                p = p[len("file:") :]
-                while p.startswith("//"):
-                    p = p[1:]
-            affected.add(os.path.relpath(os.path.abspath(p), base))
-
-        import pyarrow.parquet as pq
-
-        def _rows(rels) -> int:
-            return sum(
-                pq.ParquetFile(os.path.join(self.data_dir, r)).metadata.num_rows
-                for r in rels
-            )
 
         # phase 1: rewrite affected files without the matched keys
         survivor_files: list[str] = []
+        matched_keys: list = []
         if affected:
-            before = self._data_listing()
             aff_paths = [os.path.join(self.data_dir, rel) for rel in sorted(affected)]
-            reader = spark.read.option("basePath", self.data_dir).schema(
-                self._schema_ddl(snap)
-            )
-            (
-                reader.parquet(*aff_paths)
-                .join(batch_keys, key, "left_anti")
-                .repartition(
-                    max(1, len({r.split("/", 1)[0] for r in affected})), BUCKET_COL
-                )
-                .write.mode("append")
-                .partitionBy(BUCKET_COL)
-                .parquet(self.data_dir)
-            )
-            survivor_files = sorted(self._data_listing() - before)
-        # phase 2: append the batch itself (captured separately — these
-        # are the changelog-visible files)
-        before2 = self._data_listing()
-        (
-            bucketed.repartition(self.num_buckets, BUCKET_COL)
-            .write.mode("append")
-            .partitionBy(BUCKET_COL)
-            .parquet(self.data_dir)
-        )
-        merge_files = sorted(self._data_listing() - before2)
-
-        matched_keys = (
-            [
-                r[0]
-                for r in spark.read.option("basePath", self.data_dir)
+            aff_df = (
+                spark.read.option("basePath", self.data_dir)
                 .schema(self._schema_ddl(snap))
-                .parquet(*[os.path.join(self.data_dir, rel) for rel in sorted(affected)])
-                .join(batch_keys, key, "left_semi")
+                .parquet(*aff_paths)
+            )
+            survivor_files = self._write_staged(
+                aff_df.join(batch_keys, key, "left_anti").repartition(
+                    max(1, len({_bucket_of(r) for r in affected})), BUCKET_COL
+                )
+            )
+            matched_keys = [
+                r[0]
+                for r in aff_df.join(batch_keys, key, "left_semi")
                 .select(key)
                 .distinct()
                 .collect()
             ]
-            if affected
-            else []
-        )
-        matched = _rows(affected) - _rows(survivor_files)
-        bucket_files = {k: list(v) for k, v in snap["bucket_files"].items()}
-        for k in list(bucket_files):
-            bucket_files[k] = [r for r in bucket_files[k] if r not in affected]
-        for rel in survivor_files + merge_files:
-            bucket_files.setdefault(rel.split("/", 1)[0].split("=", 1)[1], []).append(rel)
-        bucket_files = {k: v for k, v in bucket_files.items() if v}
-
-        manifest = {
-            "snapshot_id": uuid.uuid4().hex[:16],
-            "parent_snapshot_id": snap["snapshot_id"],
-            "timestamp_ms": int(time.time() * 1000),
-            "operation": "merge",
-            "bucket_key": key,
-            "num_buckets": self.num_buckets,
-            "schema": evolved,
-            "bucket_files": bucket_files,
-            "merge_files": merge_files,
-            "file_stats": self._manifest_file_stats(snap, bucket_files),
-            "summary": {
+        # phase 2: append the batch itself (captured separately — these
+        # are the changelog-visible files)
+        merge_files = self._write_staged(bucketed.repartition(self.num_buckets, BUCKET_COL))
+        matched = self._file_rows(affected) - self._file_rows(survivor_files)
+        manifest = self._manifest(
+            snap,
+            "merge",
+            self._swap_files(snap["bucket_files"], affected, survivor_files + merge_files),
+            evolved,
+            {
                 "total_rows": snap["summary"]["total_rows"] + n_batch - matched,
                 "updated_rows": matched,
                 "inserted_rows": n_batch - matched,
                 "rewritten_files": len(affected),
             },
-        }
+            merge_files=merge_files,
+        )
         self._write_changed_keys(manifest["snapshot_id"], matched_keys)
         return self._commit_snapshot(manifest)
 
@@ -1333,12 +1263,13 @@ class IcebergishTable:
 
         Returns the new snapshot id, or None if nothing to compact.
 
-        Crash safety: output files land next to live data but the
-        manifest is committed last, so a crashed compaction is
-        invisible to every reader; its half-written files are swept by
-        ``remove_orphans``. New files are attributed by a before/after
-        directory diff (NOT "any unknown file" — that would let a
-        later append absorb a crashed compaction's duplicates).
+        Crash safety: the rewrite goes through ``_write_staged`` and
+        the manifest is committed last, so a crashed compaction is
+        invisible to every reader; its stage directory or renamed
+        files are swept by ``remove_orphans``. The manifest lists
+        exactly the files this rewrite wrote (NOT "any unknown file" —
+        that would let it absorb a crashed compaction's duplicates or a
+        concurrent writer's output).
         """
         snap = self.snapshot()
         if snap is None:
@@ -1349,7 +1280,6 @@ class IcebergishTable:
         if not victims:
             return None
 
-        before = self._data_listing()
         df = self.read(spark, buckets=victims)
         if target_file_bytes:
             n_out = 0
@@ -1367,62 +1297,35 @@ class IcebergishTable:
             df = df.repartition(len(victims), BUCKET_COL)
             if sort_within:
                 df = df.sortWithinPartitions(self.bucket_key)
-        df.write.mode("append").partitionBy(BUCKET_COL).parquet(self.data_dir)
         return self._commit_bucket_rewrite(
-            snap, victims, before, "rewrite", {"compacted_buckets": victims}
+            snap, victims, self._write_staged(df), "rewrite", {"compacted_buckets": victims}
         )
 
     def _commit_bucket_rewrite(
         self,
         snap: dict,
         victims: list[int],
-        before: set[str],
+        added: list[str],
         operation: str,
         extra_summary: dict,
     ) -> str:
         """Shared tail of the bucket-rewrite operations (compact,
-        zorder): attribute the just-written files by before/after
-        directory diff, refuse to commit a lossy rewrite (footer row
-        counts must match), and commit a snapshot whose manifest swaps
-        the victims' file lists."""
-        new_by_bucket: dict[str, list[str]] = {}
-        for rel in sorted(self._data_listing() - before):
-            new_by_bucket.setdefault(rel.split("/", 1)[0].split("=", 1)[1], []).append(rel)
-
-        import pyarrow.parquet as pq
-
-        bucket_files = {k: list(v) for k, v in snap["bucket_files"].items()}
-        old_rows = new_rows = 0
-        for k in victims:
-            olds = bucket_files[str(k)]
-            news = new_by_bucket.get(str(k), [])
-            old_rows += sum(
-                pq.ParquetFile(os.path.join(self.data_dir, r)).metadata.num_rows for r in olds
-            )
-            new_rows += sum(
-                pq.ParquetFile(os.path.join(self.data_dir, r)).metadata.num_rows for r in news
-            )
-            bucket_files[str(k)] = news
+        zorder): refuse to commit a lossy rewrite (footer row counts
+        must match) and commit a snapshot whose manifest swaps the
+        victims' file lists for the ``added`` ones."""
+        olds = {r for k in victims for r in snap["bucket_files"][str(k)]}
+        old_rows, new_rows = self._file_rows(olds), self._file_rows(added)
         if old_rows != new_rows:  # refuse to commit a lossy rewrite
             raise RuntimeError(
                 f"{operation} row mismatch: {old_rows} -> {new_rows}; not committing"
             )
-
-        manifest = {
-            "snapshot_id": uuid.uuid4().hex[:16],
-            "parent_snapshot_id": snap["snapshot_id"],
-            "timestamp_ms": int(time.time() * 1000),
-            "operation": operation,
-            "bucket_key": self.bucket_key,
-            "num_buckets": self.num_buckets,
-            "schema": snap["schema"],
-            "bucket_files": bucket_files,
-            "file_stats": self._manifest_file_stats(snap, bucket_files),
-            "summary": {
-                "total_rows": snap["summary"]["total_rows"],
-                **extra_summary,
-            },
-        }
+        manifest = self._manifest(
+            snap,
+            operation,
+            self._swap_files(snap["bucket_files"], olds, added),
+            snap["schema"],
+            {"total_rows": snap["summary"]["total_rows"], **extra_summary},
+        )
         return self._commit_snapshot(manifest)
 
     def zorder(
@@ -1491,21 +1394,15 @@ class IcebergishTable:
                     F.shiftleft(F.shiftright(s, i).bitwiseAND(F.lit(1)), i * len(scaled) + j)
                 )
 
-        before = self._data_listing()
-        (
+        added = self._write_staged(
             df.withColumn("_z", z)
             .repartitionByRange(
                 max(len(victims) * files_per_bucket, 1), F.col(BUCKET_COL), F.col("_z")
             )
             .sortWithinPartitions(BUCKET_COL, "_z")
             .drop("_z")
-            .write.mode("append")
-            .partitionBy(BUCKET_COL)
-            .parquet(self.data_dir)
         )
-        return self._commit_bucket_rewrite(
-            snap, victims, before, "zorder", {"zorder_by": cols}
-        )
+        return self._commit_bucket_rewrite(snap, victims, added, "zorder", {"zorder_by": cols})
 
     def rebucket(self, spark: SparkSession, new_num_buckets: int) -> str:
         """Partition-spec evolution: rewrite the CURRENT snapshot's
@@ -1530,52 +1427,33 @@ class IcebergishTable:
         if int(snap["num_buckets"]) == new_num_buckets:
             raise ValueError(f"table already has {new_num_buckets} buckets")
 
-        before = self._data_listing()
         df = self.read(spark).drop(BUCKET_COL)
         old_buckets = self.num_buckets
         self.num_buckets = new_num_buckets
         try:
-            (
-                self.with_bucket(df)
-                .repartition(new_num_buckets, BUCKET_COL)
-                .write.mode("append")
-                .partitionBy(BUCKET_COL)
-                .parquet(self.data_dir)
+            added = self._write_staged(
+                self.with_bucket(df).repartition(new_num_buckets, BUCKET_COL)
             )
         except Exception:
             self.num_buckets = old_buckets
             raise
-        new_by_bucket: dict[str, list[str]] = {}
-        for rel in sorted(self._data_listing() - before):
-            new_by_bucket.setdefault(rel.split("/", 1)[0].split("=", 1)[1], []).append(rel)
-
-        import pyarrow.parquet as pq
-
-        new_rows = sum(
-            pq.ParquetFile(os.path.join(self.data_dir, rel)).metadata.num_rows
-            for fs in new_by_bucket.values()
-            for rel in fs
-        )
+        new_rows = self._file_rows(added)
         if new_rows != snap["summary"]["total_rows"]:
             raise RuntimeError(
                 f"rebucket row mismatch: {snap['summary']['total_rows']} -> "
                 f"{new_rows}; not committing"
             )
-        manifest = {
-            "snapshot_id": uuid.uuid4().hex[:16],
-            "parent_snapshot_id": snap["snapshot_id"],
-            "timestamp_ms": int(time.time() * 1000),
-            "operation": "rebucket",
-            "bucket_key": self.bucket_key,
-            "num_buckets": new_num_buckets,
-            "schema": snap["schema"],
-            "bucket_files": new_by_bucket,
-            "file_stats": self._manifest_file_stats(snap, new_by_bucket),
-            "summary": {
+        manifest = self._manifest(
+            snap,
+            "rebucket",
+            self._swap_files({}, set(), added),
+            snap["schema"],
+            {
                 "total_rows": snap["summary"]["total_rows"],
                 "previous_num_buckets": int(snap["num_buckets"]),
             },
-        }
+            num_buckets=new_num_buckets,
+        )
         return self._commit_snapshot(manifest)
 
     def expire_snapshots(
@@ -1646,7 +1524,9 @@ class IcebergishTable:
         Iceberg applies (default 3 days): a file younger than it is
         assumed to belong to an in-flight, not-yet-committed write and
         is left alone. Pass 0 only when no writer can be active.
-        Returns the deleted relative paths."""
+        Abandoned ``data/_stage-*`` directories (a writer killed inside
+        ``_write_staged``) go too, once their newest entry is older
+        than the window. Returns the deleted relative paths."""
         referenced: set[str] = set()
         for entry in os.listdir(self.meta_dir):
             if entry.startswith("snap-") and entry.endswith(".json"):
@@ -1661,6 +1541,27 @@ class IcebergishTable:
             if os.path.getmtime(path) <= cutoff:
                 os.remove(path)
                 removed.append(rel)
+        stages = (
+            [e for e in os.listdir(self.data_dir) if e.startswith(STAGE_PREFIX)]
+            if os.path.isdir(self.data_dir)
+            else []
+        )
+        for entry in sorted(stages):
+            stage = os.path.join(self.data_dir, entry)
+            try:
+                newest = max(
+                    (
+                        os.path.getmtime(os.path.join(d, n))
+                        for d, dirs, files in os.walk(stage)
+                        for n in [".", *dirs, *files]
+                    ),
+                    default=None,  # gone already: its writer finished
+                )
+            except FileNotFoundError:  # changing under us: a live write
+                continue
+            if newest is not None and newest <= cutoff:
+                shutil.rmtree(stage, ignore_errors=True)
+                removed.append(entry)
         return removed
 
     def _data_listing(self) -> set[str]:
@@ -1737,12 +1638,13 @@ class IcebergishTable:
         snapshot. Returns the branch head snapshot id."""
         if name == "main" or not name:
             raise ValueError(f"invalid branch name: {name!r}")
-        refs = self.refs()
-        if name in refs["branches"] or name in refs["tags"]:
-            raise ValueError(f"ref already exists: {name!r}")
-        sid = self._resolve_start(at_snapshot_id)
-        refs["branches"][name] = sid
-        self._write_refs(refs)
+        with self._commit_lock():
+            refs = self.refs()
+            if name in refs["branches"] or name in refs["tags"]:
+                raise ValueError(f"ref already exists: {name!r}")
+            sid = self._resolve_start(at_snapshot_id)
+            refs["branches"][name] = sid
+            self._write_refs(refs)
         return sid
 
     def create_tag(self, name: str, at_snapshot_id: str | None = None) -> str:
@@ -1750,27 +1652,30 @@ class IcebergishTable:
         Tags cannot be moved — drop and recreate to retarget."""
         if name == "main" or not name:
             raise ValueError(f"invalid tag name: {name!r}")
-        refs = self.refs()
-        if name in refs["branches"] or name in refs["tags"]:
-            raise ValueError(f"ref already exists: {name!r}")
-        sid = self._resolve_start(at_snapshot_id)
-        refs["tags"][name] = sid
-        self._write_refs(refs)
+        with self._commit_lock():
+            refs = self.refs()
+            if name in refs["branches"] or name in refs["tags"]:
+                raise ValueError(f"ref already exists: {name!r}")
+            sid = self._resolve_start(at_snapshot_id)
+            refs["tags"][name] = sid
+            self._write_refs(refs)
         return sid
 
     def drop_branch(self, name: str) -> None:
-        refs = self.refs()
-        if name not in refs["branches"]:
-            raise ValueError(f"no such branch: {name!r}")
-        del refs["branches"][name]
-        self._write_refs(refs)
+        with self._commit_lock():
+            refs = self.refs()
+            if name not in refs["branches"]:
+                raise ValueError(f"no such branch: {name!r}")
+            del refs["branches"][name]
+            self._write_refs(refs)
 
     def drop_tag(self, name: str) -> None:
-        refs = self.refs()
-        if name not in refs["tags"]:
-            raise ValueError(f"no such tag: {name!r}")
-        del refs["tags"][name]
-        self._write_refs(refs)
+        with self._commit_lock():
+            refs = self.refs()
+            if name not in refs["tags"]:
+                raise ValueError(f"no such tag: {name!r}")
+            del refs["tags"][name]
+            self._write_refs(refs)
 
     def ref_snapshot_id(self, name: str) -> str:
         """Resolve a ref name ('main', a branch, or a tag) to its
@@ -1801,21 +1706,24 @@ class IcebergishTable:
         unless main's current snapshot is an ancestor of (or equal to)
         the head — i.e. the branch strictly extends main, so the move
         is history-preserving and conflict-free (Iceberg's
-        fast_forward). Returns the new main snapshot id."""
-        refs = self.refs()
-        if branch_name not in refs["branches"]:
-            raise ValueError(f"no such branch: {branch_name!r}")
-        head = refs["branches"][branch_name]
-        cur = self.current_snapshot_id()
-        if cur == head:
-            return head
-        sid = head
-        while sid is not None:
-            if sid == cur:
-                self._swap_pointer(head)
+        fast_forward). The ancestry check runs against main as read
+        under the commit lock, so an append cannot land between the
+        check and the move. Returns the new main snapshot id."""
+        with self._commit_lock():
+            refs = self.refs()
+            if branch_name not in refs["branches"]:
+                raise ValueError(f"no such branch: {branch_name!r}")
+            head = refs["branches"][branch_name]
+            cur = self.current_snapshot_id()
+            if cur == head:
                 return head
-            s = self._snapshot_if_present(sid)
-            sid = s["parent_snapshot_id"] if s else None
+            sid = head
+            while sid is not None:
+                if sid == cur:
+                    self._swap_pointer(head)
+                    return head
+                s = self._snapshot_if_present(sid)
+                sid = s["parent_snapshot_id"] if s else None
         raise ValueError(
             f"not a fast-forward: main ({cur}) is not an ancestor of "
             f"branch {branch_name!r} head ({head}) — main advanced since "
@@ -1843,22 +1751,24 @@ class IcebergishTable:
 
         On a branch view this moves the BRANCH ref (same
         ``_swap_pointer`` override as every mutator); main is
-        untouched. Returns ``snapshot_id``."""
+        untouched. The ancestry walk and the move run under the commit
+        lock. Returns ``snapshot_id``."""
         if self._snapshot_if_present(snapshot_id) is None:
             raise ValueError(
                 f"rollback_to: no snapshot {snapshot_id!r} at {self.root} "
                 "(expired or never committed)"
             )
-        sid = self.current_snapshot_id()
-        while sid is not None and sid != snapshot_id:
-            s = self._snapshot_if_present(sid)
-            sid = s["parent_snapshot_id"] if s else None
-        if sid != snapshot_id:
-            raise ValueError(
-                f"rollback_to: {snapshot_id!r} is not an ancestor of the "
-                "current snapshot — use a branch or tag to jump lineages"
-            )
-        self._swap_pointer(snapshot_id)
+        with self._commit_lock():
+            sid = self.current_snapshot_id()
+            while sid is not None and sid != snapshot_id:
+                s = self._snapshot_if_present(sid)
+                sid = s["parent_snapshot_id"] if s else None
+            if sid != snapshot_id:
+                raise ValueError(
+                    f"rollback_to: {snapshot_id!r} is not an ancestor of the "
+                    "current snapshot — use a branch or tag to jump lineages"
+                )
+            self._swap_pointer(snapshot_id)
         return snapshot_id
 
     def snapshot_diff(self, from_snapshot_id: str, to_snapshot_id: str | None = None) -> dict:
@@ -1893,10 +1803,10 @@ class IcebergishTable:
         removed = sorted(_files(old) - _files(new))
         per_bucket: dict[str, dict] = {}
         for rel in added:
-            b = rel.split("/", 1)[0].split("=", 1)[1]
+            b = _bucket_of(rel)
             per_bucket.setdefault(b, {"files_added": 0, "files_removed": 0})["files_added"] += 1
         for rel in removed:
-            b = rel.split("/", 1)[0].split("=", 1)[1]
+            b = _bucket_of(rel)
             per_bucket.setdefault(b, {"files_added": 0, "files_removed": 0})["files_removed"] += 1
 
         ops = []

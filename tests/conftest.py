@@ -16,3 +16,42 @@ def spark():
     s = build_session(app_name="bdqc-tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def run_cli(spark, monkeypatch, capsys):
+    """Run ``run_pipeline.main(argv)`` in this process, on the session
+    fixture's Spark (build_session's getOrCreate hands it back): no
+    fresh JVM per CLI test. ``SparkSession.stop`` is disabled so the
+    CLI's final stop leaves the session up, and the SQL confs the CLI
+    sets (shuffle partitions) are put back afterwards. Asserts the
+    exit code equals ``rc`` and returns the last JSON line printed on
+    stdout (None if none)."""
+    import json
+
+    import pyspark.sql
+
+    import run_pipeline
+
+    monkeypatch.setattr(pyspark.sql.SparkSession, "stop", lambda self: None)
+
+    def sql_confs():
+        return {k: v for k, v in spark.sql("SET").collect() if k.startswith("spark.sql.")}
+
+    def run(*argv, rc=0):
+        confs = sql_confs()
+        capsys.readouterr()
+        try:
+            code = run_pipeline.main([str(a) for a in argv])
+        finally:
+            for k, v in sql_confs().items():
+                if k not in confs:
+                    spark.conf.unset(k)
+                elif confs[k] != v:
+                    spark.conf.set(k, confs[k])
+        out, err = capsys.readouterr()
+        assert code == rc, err[-2000:]
+        lines = [ln for ln in out.splitlines() if ln.startswith("{")]
+        return json.loads(lines[-1]) if lines else None
+
+    return run

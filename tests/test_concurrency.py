@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import fcntl
 import os
+import shutil
 import subprocess
 import sys
 import threading
@@ -129,3 +130,120 @@ def test_live_lock_times_out_quickly(spark, tmp_path, monkeypatch):
             tbl.append(_batch(spark, 5, 5))
     finally:
         os.close(fd)
+
+
+def test_ref_edits_take_the_commit_lock(spark, tmp_path, monkeypatch):
+    """Every ref edit reads and writes refs under the commit lock:
+    while another process holds it, each one raises TimeoutError and
+    moves no ref, so it cannot interleave with a commit."""
+    import bdqc_spark.sources.iceberg as ice
+
+    tbl = IcebergishTable(str(tmp_path / "t"), num_buckets=2)
+    s1 = tbl.append(_batch(spark, 0, 5))
+    tbl.append(_batch(spark, 5, 5))
+    tbl.create_branch("b")
+    tbl.branch("b").append(_batch(spark, 10, 5))
+    tbl.create_tag("t", s1)
+    refs, main = tbl.refs(), tbl.current_snapshot_id()
+    edits = {
+        "create_branch": lambda: tbl.create_branch("c"),
+        "create_tag": lambda: tbl.create_tag("u"),
+        "drop_branch": lambda: tbl.drop_branch("b"),
+        "drop_tag": lambda: tbl.drop_tag("t"),
+        "fast_forward": lambda: tbl.fast_forward("b"),
+        "rollback_to": lambda: tbl.rollback_to(s1),
+    }
+    monkeypatch.setattr(ice, "COMMIT_LOCK_TIMEOUT_S", 0.3)
+    lock = os.path.join(tbl.meta_dir, "commit.lock")
+    with subprocess.Popen(
+        [sys.executable, "-c", _HOLD_LOCK, lock], stdout=subprocess.PIPE
+    ) as holder:
+        try:
+            assert holder.stdout.readline().strip() == b"locked"
+            for name, edit in edits.items():
+                with pytest.raises(TimeoutError):
+                    edit()
+                assert tbl.refs() == refs, name
+                assert tbl.current_snapshot_id() == main, name
+        finally:
+            holder.kill()
+    # lock free again: the publish goes through
+    assert tbl.fast_forward("b") == refs["branches"]["b"]
+
+
+_FOREIGN = "bucket=0/part-99999-foreign.c000.snappy.parquet"
+
+# op -> (call, summary entries the committed snapshot must carry)
+_MUTATORS = {
+    "delete": (
+        lambda spark, t: t.delete(spark, F.col("clip_id") == "clip-3"),
+        {"deleted_rows": 1, "total_rows": 39},
+    ),
+    "update": (
+        lambda spark, t: t.update(
+            spark, F.col("clip_id").isin("clip-3", "clip-4"), {"dur_ms": F.lit(-1)}
+        ),
+        {"updated_rows": 2, "total_rows": 40},
+    ),
+    "merge": (  # clip-37..39 exist, clip-40..42 are new
+        lambda spark, t: t.merge(spark, _batch(spark, 37, 6)),
+        {"updated_rows": 3, "inserted_rows": 3, "total_rows": 43},
+    ),
+    "compact": (lambda spark, t: t.compact(spark), {"total_rows": 40}),
+    "zorder": (lambda spark, t: t.zorder(spark, ["dur_ms"]), {"total_rows": 40}),
+    "rebucket": (lambda spark, t: t.rebucket(spark, 2), {"total_rows": 40}),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_MUTATORS))
+def test_foreign_file_mid_write_is_not_claimed(spark, tmp_path, monkeypatch, op):
+    """A data file another writer renames into a bucket directory while
+    a mutator writes (what a concurrent append does) is not the
+    mutator's: its manifest never lists it and its result is exact."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import DataFrameWriter
+
+    tbl = IcebergishTable(str(tmp_path / "t"), num_buckets=4)
+    tbl.append(_batch(spark, 0, 20))
+    parent = tbl.append(_batch(spark, 20, 20))
+    other = str(tmp_path / "other.parquet")  # a 5-row file of another table
+    pq.write_table(
+        pa.table(
+            {
+                "clip_id": [f"other-{i}" for i in range(5)],
+                "dur_ms": pa.array(range(5), pa.int32()),
+            }
+        ),
+        other,
+    )
+
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        dst = os.path.join(tbl.data_dir, _FOREIGN)
+        if not os.path.exists(dst):  # lands just before the first write
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            shutil.copy(other, dst)
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    call, expected = _MUTATORS[op]
+    sid = call(spark, tbl)
+    monkeypatch.undo()
+
+    assert sid is not None and sid == tbl.current_snapshot_id() != parent
+    snap = tbl.snapshot()
+    assert os.path.exists(os.path.join(tbl.data_dir, _FOREIGN))
+    listed = {r for fs in snap["bucket_files"].values() for r in fs}
+    listed |= set(snap.get("update_files", [])) | set(snap.get("merge_files", []))
+    assert _FOREIGN not in listed
+    assert {k: snap["summary"].get(k) for k in expected} == expected
+    assert tbl._file_rows(r for fs in snap["bucket_files"].values() for r in fs) == (
+        expected["total_rows"]
+    )
+    rows = {r.clip_id for r in tbl.read(spark).collect()}
+    assert len(rows) == expected["total_rows"]
+    assert not any(k.startswith("other-") for k in rows)
+    if op == "delete":
+        assert "clip-3" not in rows

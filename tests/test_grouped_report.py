@@ -74,37 +74,21 @@ def test_html_report_no_double_count_after_incremental(spark, tmp_path):
     assert int(m.group(1)) == 200  # not 150 + 200 = 350
 
 
-def test_run_pipeline_cli_html_report_flag(spark, tmp_path, monkeypatch):
+def test_run_pipeline_cli_html_report_flag(spark, tmp_path, run_cli):
     """--html-report renders the report in the same CLI invocation
     (the reference's --writeHTML entry point)."""
-    import json
-    import sys
-
     from bdqc_spark.sources.iceberg import IcebergishTable
     from bdqc_spark.synth.clips import generate_clips_df
-
-    import run_pipeline as cli
 
     table = str(tmp_path / "clips")
     IcebergishTable(table, num_buckets=4).append(generate_clips_df(spark, 200, seed=67))
     report = str(tmp_path / "report.html")
-    printed = []
-    monkeypatch.setattr("builtins.print", lambda s: printed.append(s))
-    # build_session's getOrCreate reuses the fixture session; the CLI's
-    # final stop() must not tear it down for the rest of the suite
-    import pyspark.sql
-
-    monkeypatch.setattr(pyspark.sql.SparkSession, "stop", lambda self: None)
-    rc = cli.main(
-        [
-            "--table", table,
-            "--out", str(tmp_path / "out"),
-            "--master", "local[4]",
-            "--html-report", report,
-        ]
+    out = run_cli(
+        "--table", table,
+        "--out", tmp_path / "out",
+        "--master", "local[4]",
+        "--html-report", report,
     )
-    assert rc == 0
-    out = json.loads(printed[-1])
     assert out["html_report"] == report
     html = open(report).read()
     assert "rows_seen" in html and "200" in html

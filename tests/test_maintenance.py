@@ -100,15 +100,10 @@ def test_remove_orphans_after_compact_and_expire(spark, tmp_path):
     assert on_disk == referenced  # no unreferenced bytes left
 
 
-def test_cli_pinned_snapshot_and_maintain(spark, tmp_path):
+def test_cli_pinned_snapshot_and_maintain(spark, tmp_path, run_cli):
     """--snapshot pins the DATA read (time travel), not just the
     lineage key; --maintain compacts/expires/sweeps the input table
     after the run."""
-    import json
-    import subprocess
-    import sys as _sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     from bdqc_spark.synth.clips import generate_clips_df
 
     table = str(tmp_path / "clips")
@@ -116,29 +111,22 @@ def test_cli_pinned_snapshot_and_maintain(spark, tmp_path):
     snap1 = tbl.append(generate_clips_df(spark, 200, seed=31))
     tbl.append(generate_clips_df(spark, 200, seed=32, start=200))
 
-    def run_cli(*extra):
-        proc = subprocess.run(
-            [_sys.executable, os.path.join(repo, "run_pipeline.py"),
-             "--table", table, "--out", str(tmp_path / "out"),
-             "--master", "local[4]", *extra],
-            capture_output=True, text=True, cwd=repo, timeout=420,
-        )
-        assert proc.returncode == 0, proc.stderr[-2000:]
-        return json.loads(
-            [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1]
+    def run(*extra):
+        return run_cli(
+            "--table", table, "--out", tmp_path / "out", "--master", "local[4]", *extra
         )
 
     import duckdb
 
     # pinned to the first snapshot: only its 200 clips are processed
-    run_cli("--snapshot", snap1)
+    run("--snapshot", snap1)
     n1 = duckdb.connect().execute(
         f"SELECT count(*) FROM read_parquet('{tmp_path}/out/decisions/*/*.parquet')"
     ).fetchone()[0]
     assert n1 == 200
 
     # current snapshot + maintenance: all 400, table left compacted
-    res = run_cli("--maintain")
+    res = run("--maintain")
     n2 = duckdb.connect().execute(
         f"SELECT count(*) FROM read_parquet('{tmp_path}/out/decisions/*/*.parquet')"
     ).fetchone()[0]
@@ -170,8 +158,28 @@ def test_crashed_compaction_is_invisible_and_swept(spark, tmp_path):
     pq.write_table(
         pa.table({"clip_id": pa.array(["zz"]), "x": pa.array([1.0])}), stray
     )
-    # manifest-driven read: the stray file is invisible
+    # a writer killed inside its staged write leaves a stage directory;
+    # the sweep takes it once its newest entry is past the window and
+    # leaves a younger (possibly in-flight) one alone
+    import time
+
+    old_stage = os.path.join(tbl.data_dir, "_stage-old")
+    fresh_stage = os.path.join(tbl.data_dir, "_stage-fresh")
+    for stage in (old_stage, fresh_stage):
+        os.makedirs(os.path.join(stage, "bucket=0"))
+        pq.write_table(
+            pa.table({"clip_id": pa.array(["zz"]), "x": pa.array([1.0])}),
+            os.path.join(stage, "bucket=0", "part-00000.parquet"),
+        )
+    long_ago = time.time() - 7200
+    for d, _, files in os.walk(old_stage):
+        for n in files:
+            os.utime(os.path.join(d, n), (long_ago, long_ago))
+        os.utime(d, (long_ago, long_ago))
+    # manifest-driven read: the stray file and the stages are invisible
     assert _collect_sorted(spark, tbl) == expected
+    assert tbl.remove_orphans(older_than_s=3600) == ["_stage-old"]
+    assert not os.path.exists(old_stage) and os.path.isdir(fresh_stage)
     removed = tbl.remove_orphans(older_than_s=0)
     assert "bucket=0/part-crashed-deadbeef.parquet" in removed
     assert _collect_sorted(spark, tbl) == expected
@@ -279,34 +287,24 @@ def test_rebucket_rejects_bad_args(spark, tmp_path):
         tbl.rebucket(spark, 0)
 
 
-def test_cli_rebucket_flag(spark, tmp_path):
+def test_cli_rebucket_flag(spark, tmp_path, run_cli):
     """--rebucket N evolves the spec before the run; the pipeline then
     processes the NEW bucket list and decisions are unchanged vs the
     old spec (bucketing is physical layout, not semantics)."""
-    import json
-    import subprocess
-    import sys as _sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     from bdqc_spark.synth.clips import generate_clips_df
 
     table = str(tmp_path / "clips")
     tbl = IcebergishTable(table, num_buckets=4)
     tbl.append(generate_clips_df(spark, 150, seed=35))
 
-    def run_cli(out, *extra):
-        proc = subprocess.run(
-            [_sys.executable, os.path.join(repo, "run_pipeline.py"),
-             "--table", table, "--out", str(tmp_path / out),
-             "--master", "local[4]", *extra],
-            capture_output=True, text=True, cwd=repo, timeout=420,
+    def run(out, *extra, rc=0):
+        return run_cli(
+            "--table", table, "--out", tmp_path / out, "--master", "local[4]", *extra, rc=rc
         )
-        assert proc.returncode == 0, proc.stderr[-2000:]
-        return json.loads(proc.stdout.strip().splitlines()[-1])
 
-    base = run_cli("out_a")
+    base = run("out_a")
     assert base["processed_buckets"] == [0, 1, 2, 3]
-    evolved = run_cli("out_b", "--rebucket", "8")
+    evolved = run("out_b", "--rebucket", "8")
     assert len(evolved["processed_buckets"]) > 4
     a = spark.read.parquet(str(tmp_path / "out_a" / "decisions")).toPandas()
     b = spark.read.parquet(str(tmp_path / "out_b" / "decisions")).toPandas()
@@ -314,13 +312,7 @@ def test_cli_rebucket_flag(spark, tmp_path):
     kb = b.sort_values("clip_id")[["clip_id", "keep"]].reset_index(drop=True)
     assert ka.equals(kb)
     # --rebucket + --snapshot is refused
-    proc = subprocess.run(
-        [_sys.executable, os.path.join(repo, "run_pipeline.py"),
-         "--table", table, "--out", str(tmp_path / "out_c"),
-         "--master", "local[4]", "--rebucket", "16", "--snapshot", "deadbeef"],
-        capture_output=True, text=True, cwd=repo, timeout=120,
-    )
-    assert proc.returncode == 2
+    run("out_c", "--rebucket", "16", "--snapshot", "deadbeef", rc=2)
 
 
 def test_incremental_after_expired_from_snapshot_falls_back_to_diff(spark, tmp_path):

@@ -178,19 +178,13 @@ def test_wap_audit_gate_flow(spark, tmp_path):
     assert len(_ids(tbl.read(spark))) == 70
 
 
-def test_cli_wap_branch_publish_and_refuse(spark, tmp_path):
+def test_cli_wap_branch_publish_and_refuse(spark, tmp_path, run_cli):
     """--wap-branch end-to-end through the real CLI: the staged batch
     publishes to main when its keep rate clears the gate, and is
     quarantined on the branch (main pointer unmoved) when it doesn't."""
-    import json
-    import os
-    import subprocess
-    import sys as _sys
-
     from bdqc_spark.sources.webdataset import write_tar_shards
     from bdqc_spark.synth.clips import generate_clips_df
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     tbl = IcebergishTable(str(tmp_path / "tbl"), num_buckets=4)
     tbl.append(
         generate_clips_df(spark, 80, seed=21).select(
@@ -203,20 +197,14 @@ def test_cli_wap_branch_publish_and_refuse(spark, tmp_path):
     ).collect()
 
     def _wap(out, threshold):
-        proc = subprocess.run(
-            [
-                _sys.executable, "run_pipeline.py",
-                "--table", str(tmp_path / "tbl"),
-                "--out", out,
-                "--ingest-tar", shards,
-                "--wap-branch", "staging",
-                "--wap-keep-threshold", str(threshold),
-                "--master", "local[4]",
-            ],
-            cwd=repo, capture_output=True, text=True, timeout=600,
+        return run_cli(
+            "--table", tmp_path / "tbl",
+            "--out", out,
+            "--ingest-tar", shards,
+            "--wap-branch", "staging",
+            "--wap-keep-threshold", threshold,
+            "--master", "local[4]",
         )
-        assert proc.returncode == 0, proc.stderr[-2000:]
-        return json.loads(proc.stdout.strip().splitlines()[-1])
 
     # gate no healthy synth batch can fail -> published, main advanced
     main_before = tbl.current_snapshot_id()

@@ -133,33 +133,20 @@ def test_end_to_end_low_speech_recovery(spark, corpus):
     assert h.now_keep.mean() >= 0.5, h[["clip_id", "rule_hits_after"]].to_dict("records")
 
 
-def test_cli_repair_out(spark, tmp_path):
-    import json
-    import os
-    import subprocess
-    import sys
-
+def test_cli_repair_out(spark, tmp_path, run_cli):
     import duckdb
 
     from bdqc_spark.sources.iceberg import IcebergishTable
     from bdqc_spark.synth.clips import generate_clips_df
 
-    REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     table = str(tmp_path / "clips")
     out = str(tmp_path / "qc_out")
     rep = str(tmp_path / "repair")
     IcebergishTable(table, num_buckets=4).append(
         generate_clips_df(spark, 400, seed=54)
     )
-    proc = subprocess.run(
-        [sys.executable, os.path.join(REPO, "run_pipeline.py"),
-         "--table", table, "--out", out, "--repair-out", rep,
-         "--master", "local[4]"],
-        capture_output=True, text=True, cwd=REPO, timeout=420,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    result = json.loads(
-        [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1]
+    result = run_cli(
+        "--table", table, "--out", out, "--repair-out", rep, "--master", "local[4]"
     )
     assert result["repair"]["out"] == rep
     assert result["repair"]["repaired"] > 0

@@ -238,14 +238,9 @@ def test_streaming_source_skips_deleted_rows(spark, tmp_path):
     assert got == want
 
 
-def test_cli_erase_where(spark, tmp_path):
+def test_cli_erase_where(spark, tmp_path, run_cli):
     """run_pipeline --erase-where performs the PII delete before the
     QC run; with --maintain the superseded files are also swept."""
-    import json
-    import subprocess
-    import sys as _sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     from bdqc_spark.synth.clips import generate_clips_df
 
     table = str(tmp_path / "clips")
@@ -254,15 +249,9 @@ def test_cli_erase_where(spark, tmp_path):
     victims = [r.clip_id for r in tbl.read(spark).limit(3).collect()]
     pred = "clip_id IN (" + ",".join(f"'{v}'" for v in victims) + ")"
 
-    proc = subprocess.run(
-        [_sys.executable, os.path.join(repo, "run_pipeline.py"),
-         "--table", table, "--out", str(tmp_path / "out"),
-         "--master", "local[4]", "--erase-where", pred],
-        capture_output=True, text=True, cwd=repo, timeout=420,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    res = json.loads(
-        [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1]
+    res = run_cli(
+        "--table", table, "--out", tmp_path / "out",
+        "--master", "local[4]", "--erase-where", pred,
     )
     assert res["erased"]["rows"] == 3 and res["erased"]["snapshot"]
     left = {r.clip_id for r in tbl.read(spark).collect()}
@@ -276,14 +265,11 @@ def test_cli_erase_where(spark, tmp_path):
     assert n == 197  # the QC run processed the post-delete table
 
     # combining with a pinned snapshot is refused
-    proc2 = subprocess.run(
-        [_sys.executable, os.path.join(repo, "run_pipeline.py"),
-         "--table", table, "--out", str(tmp_path / "out2"),
-         "--master", "local[4]", "--erase-where", pred,
-         "--snapshot", tbl.current_snapshot_id()],
-        capture_output=True, text=True, cwd=repo, timeout=420,
+    run_cli(
+        "--table", table, "--out", tmp_path / "out2",
+        "--master", "local[4]", "--erase-where", pred,
+        "--snapshot", tbl.current_snapshot_id(), rc=2,
     )
-    assert proc2.returncode == 2
 
 
 def test_delete_keys_prunes_discovery_to_hash_buckets(spark, tmp_path):
@@ -364,13 +350,8 @@ def test_incremental_big_tombstone_uses_broadcast_anti_join(spark, tmp_path):
     assert got == want
 
 
-def test_cli_erase_keys_file(spark, tmp_path):
+def test_cli_erase_keys_file(spark, tmp_path, run_cli):
     """--erase-keys FILE drives the manifest-pruned delete_keys path."""
-    import json
-    import subprocess
-    import sys as _sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     from bdqc_spark.synth.clips import generate_clips_df
 
     table = str(tmp_path / "clips")
@@ -381,24 +362,17 @@ def test_cli_erase_keys_file(spark, tmp_path):
     with open(keys_file, "w") as f:
         f.write("\n".join(victims) + "\n")
 
-    proc = subprocess.run(
-        [_sys.executable, os.path.join(repo, "run_pipeline.py"),
-         "--table", table, "--out", str(tmp_path / "out"),
-         "--master", "local[4]", "--erase-keys", keys_file],
-        capture_output=True, text=True, cwd=repo, timeout=420,
+    res = run_cli(
+        "--table", table, "--out", tmp_path / "out",
+        "--master", "local[4]", "--erase-keys", keys_file,
     )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    res = json.loads([ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1])
     assert res["erased"]["rows"] == 2
     left = {r.clip_id for r in tbl.read(spark).collect()}
     assert not (set(victims) & left) and len(left) == 148
 
     # mutually exclusive with --erase-where
-    proc2 = subprocess.run(
-        [_sys.executable, os.path.join(repo, "run_pipeline.py"),
-         "--table", table, "--out", str(tmp_path / "out2"),
-         "--master", "local[4]", "--erase-keys", keys_file,
-         "--erase-where", "1=1"],
-        capture_output=True, text=True, cwd=repo, timeout=420,
+    run_cli(
+        "--table", table, "--out", tmp_path / "out2",
+        "--master", "local[4]", "--erase-keys", keys_file,
+        "--erase-where", "1=1", rc=2,
     )
-    assert proc2.returncode == 2

@@ -140,19 +140,13 @@ def test_strip_table_metadata_end_to_end(spark, table):
         )
 
 
-def test_cli_strip_metadata(spark, tmp_path):
+def test_cli_strip_metadata(spark, tmp_path, run_cli):
     """run_pipeline --strip-metadata rewrites tagged containers before
     the QC run and reports the update snapshot."""
-    import json
-    import os
-    import subprocess
-    import sys as _sys
-
     from pyspark.sql.functions import pandas_udf
 
     from bdqc_spark.functions.audio_metadata import parse_audio_metadata
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     table = str(tmp_path / "clips")
     t = IcebergishTable(table, num_buckets=4)
     t.append(generate_clips_df(spark, 150, seed=43))
@@ -185,15 +179,9 @@ def test_cli_strip_metadata(spark, tmp_path):
     )
     assert n_wav > 0
 
-    proc = subprocess.run(
-        [_sys.executable, os.path.join(repo, "run_pipeline.py"),
-         "--table", table, "--out", str(tmp_path / "out"),
-         "--master", "local[4]", "--strip-metadata"],
-        capture_output=True, text=True, cwd=repo, timeout=420,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    res = json.loads(
-        [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1]
+    res = run_cli(
+        "--table", table, "--out", tmp_path / "out",
+        "--master", "local[4]", "--strip-metadata",
     )
     assert res["stripped"]["rows"] == n_wav
     assert res["stripped"]["snapshot"]

@@ -134,37 +134,19 @@ def test_tar_ingest_equals_direct_table(spark, tmp_path):
     assert da == db
 
 
-def test_cli_ingest_tar(spark, tmp_path):
+def test_cli_ingest_tar(spark, tmp_path, run_cli):
     """--ingest-tar creates the table from shards, then runs the
     pipeline over it (the shard-corpus onboarding path)."""
-    import json
-    import subprocess
-    import sys as _sys
-
     from bdqc_spark.synth.clips import generate_clips_df
 
     shards = str(tmp_path / "shards")
     write_tar_shards(generate_clips_df(spark, 60, seed=13), shards, n_shards=2).collect()
-    proc = subprocess.run(
-        [
-            _sys.executable,
-            "run_pipeline.py",
-            "--table",
-            str(tmp_path / "tbl"),
-            "--out",
-            str(tmp_path / "out"),
-            "--ingest-tar",
-            shards,
-            "--master",
-            "local[4]",
-        ],
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        capture_output=True,
-        text=True,
-        timeout=600,
+    rec = run_cli(
+        "--table", tmp_path / "tbl",
+        "--out", tmp_path / "out",
+        "--ingest-tar", shards,
+        "--master", "local[4]",
     )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    rec = json.loads(proc.stdout.strip().splitlines()[-1])
     assert rec["ingested"]["total_rows"] == 60
     assert rec["processed_buckets"]
     import duckdb
