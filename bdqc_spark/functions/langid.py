@@ -98,6 +98,30 @@ def _encode_series(texts: "pd.Series") -> tuple[np.ndarray, np.ndarray]:
     return buf, offsets
 
 
+def _segment_sums(vals: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """Per-string sums of per-trigram values over a batch buffer.
+
+    ``vals`` holds one value (or row) per byte position 0..len-3 of
+    the ``_encode_series`` buffer, which must hold a trigram; it is
+    modified in place. Positions whose trigram crosses a string
+    boundary count 0, and strings without a trigram sum to 0. Every
+    string's sum runs over all of its own byte positions, its two
+    boundary ones included: two zero rows give the batch's last string
+    that same shape, and the sums stop at the last non-empty string
+    (a start past the end cannot open a reduceat segment). A string's
+    sum is thus the same float, rounding included, wherever it sits in
+    whichever batch."""
+    pos = np.arange(vals.shape[0])
+    seg = np.searchsorted(offsets, pos, side="right") - 1
+    vals[pos + 3 > offsets[seg + 1]] = 0.0
+    padded = np.concatenate([vals, np.zeros((2, *vals.shape[1:]), vals.dtype)])
+    m = int(np.flatnonzero(np.diff(offsets))[-1]) + 1
+    out = np.zeros((len(offsets) - 1, *vals.shape[1:]), vals.dtype)
+    out[:m] = np.add.reduceat(padded, offsets[:m], axis=0)
+    out[np.diff(offsets) < 3] = 0.0
+    return out
+
+
 @lru_cache(maxsize=1)
 def train_model(
     n_sentences: int = 800, seed: int = 1234, add_k: float = 0.5
@@ -131,21 +155,8 @@ def predict_batch(
     n_langs = logprob.shape[1]
 
     if buf.shape[0] >= 3:
-        buckets = _trigram_buckets(buf)  # one per byte position 0..len-3
-        scores_pos = logprob[buckets]  # (P, n_langs)
-        # Positions whose trigram crosses a string boundary contribute 0.
-        pos = np.arange(buckets.shape[0])
-        seg = np.searchsorted(offsets, pos, side="right") - 1  # segment of pos
-        seg_end = offsets[seg + 1]
-        invalid = pos + 3 > seg_end
-        scores_pos[invalid] = 0.0
-        starts = np.clip(offsets[:-1], 0, max(buckets.shape[0] - 1, 0))
-        seg_scores = np.add.reduceat(scores_pos, starts, axis=0)
-        # reduceat quirk: equal consecutive starts (empty segments) copy
-        # the row at that index — zero them out explicitly.
-        seg_len = np.diff(offsets)
-        n_tris = np.maximum(seg_len - 2, 0).astype(np.float64)
-        seg_scores[n_tris == 0] = 0.0
+        seg_scores = _segment_sums(logprob[_trigram_buckets(buf)], offsets)  # (n, n_langs)
+        n_tris = np.maximum(np.diff(offsets) - 2, 0).astype(np.float64)
     else:
         seg_scores = np.zeros((n, n_langs), dtype=np.float64)
         n_tris = np.zeros(n, dtype=np.float64)

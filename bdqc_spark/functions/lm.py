@@ -20,6 +20,7 @@ from bdqc_spark.functions.langid import (
     HASH_DIM,
     LANGS,
     _encode_series,
+    _segment_sums,
     _trigram_buckets,
     synth_sentence,
 )
@@ -44,17 +45,8 @@ def perplexity_batch(texts: "pd.Series", table: np.ndarray | None = None) -> np.
     buf, offsets = _encode_series(texts)
     n = len(texts)
     if buf.shape[0] >= 3:
-        buckets = _trigram_buckets(buf)
-        lp = table[buckets].astype(np.float64)
-        pos = np.arange(buckets.shape[0])
-        seg = np.searchsorted(offsets, pos, side="right") - 1
-        invalid = pos + 3 > offsets[seg + 1]
-        lp[invalid] = 0.0
-        starts = np.clip(offsets[:-1], 0, max(buckets.shape[0] - 1, 0))
-        seg_lp = np.add.reduceat(lp, starts)
-        seg_len = np.diff(offsets)
-        n_tris = np.maximum(seg_len - 2, 0).astype(np.float64)
-        seg_lp = np.where(n_tris == 0, 0.0, seg_lp)
+        seg_lp = _segment_sums(table[_trigram_buckets(buf)].astype(np.float64), offsets)
+        n_tris = np.maximum(np.diff(offsets) - 2, 0).astype(np.float64)
     else:
         seg_lp = np.zeros(n)
         n_tris = np.zeros(n)

@@ -324,28 +324,35 @@ def run_pipeline(
         if os.path.isdir(profiles_dir):
             existing = spark.read.parquet(profiles_dir).select("clip_id")
             to_profile = to_profile.join(existing, on="clip_id", how="left_anti")
-        # one task == one bucket == one output file per run. This
-        # shuffle moves only profile SCALARS (bytes was consumed
-        # map-side) and is load-bearing: it fixes the profiles
-        # layout at 64 well-sized files, which is what keeps the
-        # downstream stages parallel — the profile table is so
-        # small on disk that a size-based scan of an uncontrolled
-        # layout coalesces to 1-3 tasks (measured: A/B probe of a
-        # map-only write cost +10s on stages B+C at 8 cores).
+        # Both branches sort by ("bucket", "clip_id"): a partition may
+        # hold several buckets, and that order is the ordering the
+        # partitionBy("bucket") write requires, so the write adds no
+        # sort of its own and each bucket gets exactly one
+        # clip_id-sorted file per run (a clip_id-only sort is
+        # re-sorted by bucket at the write and loses its order).
         if direct_files:
-            # one task == one data file == one bucket: the stage-A
-            # output is ALREADY bucket-aligned, so the repartition
-            # shuffle of the whole profile table (scalars +
-            # transcripts) is redundant — guide §2.4, remove shuffles
-            # outright where the data is already partitioned as needed
+            # k = min(|buckets|, cores) tasks, whole buckets per task:
+            # the stage-A output is ALREADY bucket-aligned (no bucket
+            # spans two partitions), so a repartition shuffle of the
+            # whole profile table (scalars + transcripts) would be
+            # redundant — guide §2.4, remove shuffles outright where
+            # the data is already partitioned as needed
             prof = profile_clips_direct(spark, direct_files, clips).sortWithinPartitions(
-                "clip_id"
+                "bucket", "clip_id"
             )
         else:
+            # This shuffle moves only profile SCALARS (bytes was
+            # consumed map-side) and is load-bearing: it fixes the
+            # profiles layout at one well-sized file per bucket,
+            # which is what keeps the downstream stages parallel —
+            # the profile table is so small on disk that a size-based
+            # scan of an uncontrolled layout coalesces to 1-3 tasks
+            # (measured: A/B probe of a map-only write cost +10s on
+            # stages B+C at 8 cores).
             prof = (
                 profile_clips(to_profile)
                 .repartition(len(all_buckets), "bucket")
-                .sortWithinPartitions("clip_id")
+                .sortWithinPartitions("bucket", "clip_id")
             )
         if fresh_run:
             # localCheckpoint, NOT persist: a persisted plan containing
@@ -448,9 +455,9 @@ def _finish_pipeline(
         # the profile rows (pre-scrub, the smaller side) lets the rule
         # evaluation + scrub regex chain run bucket-parallel, and the
         # write stays map-side (one sorted file per bucket). On the
-        # fresh-run cached path the stage-A output is ALREADY hash-
-        # partitioned by bucket into |buckets| partitions — reuse that
-        # partitioning, no second shuffle.
+        # fresh-run cached path the stage-A output already holds each
+        # bucket in exactly one of its min(|buckets|, cores)
+        # partitions — reuse that partitioning, no second shuffle.
         src = profiles.where(F.col("bucket").isin(pending_d))
         if prof_cached is None:
             src = src.repartition(len(all_buckets), "bucket")
@@ -461,7 +468,7 @@ def _finish_pipeline(
         # the committed parquet (a fixed ~1s scheduling+scan cost on
         # the serial path of every run — the limiter the N-vs-4N
         # per-stage data indicted).
-        decisions = decide(src, models).sortWithinPartitions("clip_id").persist(
+        decisions = decide(src, models).sortWithinPartitions("bucket", "clip_id").persist(
             StorageLevel.MEMORY_AND_DISK
         )
         (

@@ -19,6 +19,7 @@ composition stats stay in Catalyst (whole-stage codegen).
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 import numpy as np
@@ -237,22 +238,32 @@ def direct_scan_files(clips: DataFrame, buckets: list[int] | None = None) -> lis
 
 
 def profile_clips_direct(spark, files: list, clips: DataFrame) -> DataFrame:
-    """profile_clips over an explicit (path, bucket) file list: each
-    task OPENS AND DECODES ITS OWN parquet file with pyarrow
-    (row-group streaming, single-threaded per task — 32 concurrent
-    tasks already saturate the box) and runs the exact
-    `_profile_arrow` computation on the file's batches, so the values
-    are bit-identical to profile_clips(read(files)); only the
-    transport of `bytes` changes. The audio payload goes parquet →
+    """profile_clips over an explicit (path, bucket) file list, read
+    worker-side: each task OPENS AND DECODES ITS OWN parquet files
+    with pyarrow (row-group streaming, single-threaded per task) and
+    runs the exact `_profile_arrow` computation on their batches, so
+    the values are bit-identical to profile_clips(read(files)); only
+    the transport of `bytes` changes. The audio payload goes parquet →
     Arrow → numpy views inside ONE process: it never crosses the JVM
     columnar reader or the JVM→Python Arrow socket, which an A/B
     probe showed was ~90% of the profile stage's cost (a pass-through
     mapInArrow over the JVM scan of the 15 GB bench corpus took
-    12.9s; the Python compute itself only +1.5s on top). One input
-    row per partition → one task per file — the same one-shard-one-
-    task shape as the WebDataset source, and at 100 TB the standard
-    native-scan integration: the manifest plans, and the worker that
-    consumes the bytes is the one that reads them."""
+    12.9s; the Python compute itself only +1.5s on top).
+
+    Task shape: k = min(|buckets|, defaultParallelism) tasks, each
+    holding WHOLE buckets (every file of a bucket), assigned greedy
+    longest-first by summed file bytes. Each task pays PySpark's
+    fixed per-task Python cost (worker hand-off, Arrow stream set-up)
+    once, not once per file — at this scale that fixed cost, not the
+    kernels, was most of the stage (3000 clips, 16 files, 4 cores:
+    16 → 4 tasks cut its summed task time by half and its wall by
+    40%). Whole buckets per task keep every
+    bucket's rows in exactly one output partition, so a
+    ("bucket", "clip_id")-sorted partitionBy("bucket") write still
+    makes one sorted file per bucket, and downstream stages can reuse
+    the partitioning without a shuffle. The manifest plans, and the
+    worker that consumes the bytes is the one that reads them — the
+    standard native-scan integration at 100 TB."""
     file_order = [c for c in clips.columns if c != "bucket"]
     keep = [c for c in clips.columns if c != "bytes"]
     # declared in the order gen() emits: the file columns, then bucket
@@ -284,9 +295,23 @@ def profile_clips_direct(spark, files: list, clips: DataFrame) -> DataFrame:
                 finally:
                     pf.close()
 
-    rows = [(p, int(b)) for p, b in files]
+    by_bucket: dict[int, list[str]] = {}
+    for p, b in files:
+        by_bucket.setdefault(int(b), []).append(p)
+    k = max(1, min(len(by_bucket), spark.sparkContext.defaultParallelism))
+    groups: list[list[tuple[str, int]]] = [[] for _ in range(k)]
+    load = [0] * k
+    sized = sorted(
+        ((sum(os.path.getsize(p) for p in paths), b, paths) for b, paths in by_bucket.items()),
+        key=lambda t: (-t[0], t[1]),
+    )
+    for size, b, paths in sized:
+        i = load.index(min(load))
+        groups[i].extend((p, b) for p in paths)
+        load[i] += size
     fdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, max(len(rows), 1)), "path string, bucket int"
+        spark.sparkContext.parallelize(range(k), k).flatMap(lambda i: groups[i]),
+        "path string, bucket int",
     )
     flat = fdf.mapInArrow(gen, f"{schema}, {_PROFILE_FIELDS}")
     return _nest_profile(flat, keep)

@@ -96,7 +96,9 @@ def build_session(
         # pause time and cut scan wall ~12% (BENCH.md §4).
         .config("spark.sql.columnVector.offheap.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("BDQC_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory", os.environ.get("BDQC_DRIVER_MEM") or _default_driver_mem()
+        )
         # Throughput GC: the audio `bytes` column allocates millions of
         # short-lived byte[]; G1 collapses under that churn at 32
         # concurrent tasks (measured: 2-30× slower scans, see
@@ -179,6 +181,18 @@ def _warm_start(spark: SparkSession) -> None:
     df.select("s", "id").groupBy("s").agg(F.min("id")).write.format(
         "noop"
     ).mode("overwrite").save()
+
+
+def _default_driver_mem() -> str:
+    """The smaller of 16g and half the host's physical memory: in
+    local mode the driver JVM is the whole engine, and a heap sized to
+    all of RAM lets it grow until the kernel's OOM killer takes it once
+    any other process needs memory."""
+    try:
+        half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // (2 << 20)
+    except (AttributeError, OSError, ValueError):  # no sysconf (Windows)
+        return "16g"
+    return f"{min(half_mb, 16 << 10)}m"
 
 
 def _under_spark_submit() -> bool:

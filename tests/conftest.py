@@ -55,3 +55,24 @@ def run_cli(spark, monkeypatch, capsys):
         return json.loads(lines[-1]) if lines else None
 
     return run
+
+
+@pytest.fixture
+def sorted_bucket_files():
+    """``check(table_dir)`` → {bucket: [parquet files]} for a
+    ``partitionBy("bucket")`` output directory, asserting that every
+    file's rows are sorted by clip_id."""
+    import glob
+    import re
+
+    import pyarrow.parquet as pq
+
+    def check(table_dir):
+        out = {}
+        for f in sorted(glob.glob(f"{table_dir}/bucket=*/*.parquet")):
+            ids = pq.read_table(f, columns=["clip_id"]).column(0).to_pylist()
+            assert ids == sorted(ids), f"{f} is not sorted by clip_id"
+            out.setdefault(int(re.search(r"bucket=(\d+)/", f).group(1)), []).append(f)
+        return out
+
+    return check

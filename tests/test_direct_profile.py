@@ -1,7 +1,8 @@
 """r6 optimization guards: the direct worker-side profile read path
-(plans/profile.py) must be value-identical to the JVM-scan path, its
-gate must refuse non-scan inputs, and _par must only repartition
-unsplittable scans (guide §2.5)."""
+(plans/profile.py) must be value-identical to the JVM-scan path, pack
+whole buckets into one task per core, its gate must refuse non-scan
+inputs, and _par must only repartition unsplittable scans (guide
+§2.5)."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from bdqc_spark.plans.pipeline import run_pipeline
 from bdqc_spark.plans.profile import (
     direct_scan_files,
     profile_clips,
@@ -43,6 +45,58 @@ def mid_bucket_clips(spark, tmp_path_factory):
     clips = spark.read.parquet(*sorted(glob.glob(f"{root}/bucket=*/*.parquet")))
     assert clips.columns[-1] != "bucket"
     return clips
+
+
+@pytest.fixture(scope="module")
+def packed(spark, tmp_path_factory):
+    """8 buckets over two appends of uneven size (so buckets hold two
+    files of different sizes) plus one empty (0-row) data file, read
+    as a plain file-list scan that passes the direct gate."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    t = IcebergishTable(str(tmp_path_factory.mktemp("direct_profile_packed")), num_buckets=8)
+    t.append(generate_clips_df(spark, 200, seed=35))
+    t.append(generate_clips_df(spark, 60, seed=35, start=200))
+    clips = t.read(spark)
+    some = sorted(glob.glob(f"{t.data_dir}/bucket=3/*.parquet"))[0]
+    empty = f"{t.data_dir}/bucket=3/part-empty.parquet"
+    pq.write_table(pq.ParquetFile(some).schema_arrow.empty_table(), empty)
+    return (
+        spark.read.option("basePath", t.data_dir)
+        .schema(clips.schema)
+        .parquet(*clips.inputFiles(), empty)
+    )
+
+
+def test_direct_profile_packs_whole_buckets(spark, packed, tmp_path, sorted_bucket_files):
+    from collections import Counter
+
+    files = direct_scan_files(packed, None)
+    per_bucket = Counter(b for _, b in files)
+    assert sorted(per_bucket) == list(range(8)) and max(per_bucket.values()) >= 2
+    assert any(p.endswith("part-empty.parquet") for p, _ in files)
+
+    prof = profile_clips_direct(spark, files, packed)
+    assert prof.rdd.getNumPartitions() == min(8, spark.sparkContext.defaultParallelism)
+    # every bucket's rows sit in exactly one partition
+    placed = prof.select("bucket", F.spark_partition_id().alias("p")).distinct().collect()
+    assert sorted(r.bucket for r in placed) == list(range(8))
+    a = prof.orderBy("clip_id").collect()
+    b = profile_clips(packed).orderBy("clip_id").collect()
+    assert len(a) == len(b) == 260
+    for ra, rb in zip(a, b):
+        assert ra == rb
+
+    # the fresh pipeline over the packed stage A: one clip_id-sorted
+    # file per bucket in both partitioned outputs
+    out = str(tmp_path / "out")
+    run_pipeline(spark, packed, out, exact_models=True)
+    for d in ("profiles", "decisions"):
+        got = sorted_bucket_files(f"{out}/{d}")
+        assert sorted(got) == list(range(8))
+        assert all(len(fs) == 1 for fs in got.values()), got
 
 
 def test_direct_scan_files_gate(spark, tbl):

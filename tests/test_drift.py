@@ -5,18 +5,58 @@ cohort attributes that moved.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from bdqc_spark.plans.drift import model_drift, round_half_up
 from bdqc_spark.plans.models import fit_cohort_models
-from bdqc_spark.plans.profile import profile_clips
-from bdqc_spark.synth.clips import generate_clips_df
+from bdqc_spark.synth.clips import CODECS_P, LANGS_P, SR_P
+
+
+def _profiles(spark, n, start, seed=11):
+    """Profile-shaped rows (the columns fit_cohort_models reads) for
+    clips [start, start + n): the clip generator's codec, language and
+    sample-rate mixes and its duration law, with speech and transcript
+    length in proportion to duration. Built directly, without stage
+    A's decode pass: the drift comparison only ever sees the fitted
+    models, and disjoint `start`s draw independent samples."""
+    rng = np.random.default_rng([seed, start])
+
+    def pick(pairs):
+        vals, ps = zip(*pairs)
+        return rng.choice(np.array(vals), size=n, p=np.array(ps) / sum(ps))
+
+    dur = np.clip(rng.lognormal(7.4, 0.25, n), 300, 8000).astype(np.int32)
+    n_tokens = np.maximum(2, np.round(dur / 1000.0 * rng.uniform(2.0, 3.5, n))).astype(np.int32)
+    pdf = pd.DataFrame(
+        {
+            "codec": pick(CODECS_P),
+            "sr_hz": pick(SR_P).astype(np.int32),
+            "dur_ms": dur,
+            "pcm_ok": np.ones(n, dtype=bool),
+            "dur_ms_decoded": dur,
+            "rms": rng.uniform(0.1, 0.5, n),
+            "speech_ratio": rng.uniform(0.6, 0.95, n),
+            "n_chars": (n_tokens * rng.integers(4, 8, n)).astype(np.int32),
+            "n_tokens": n_tokens,
+            "pred": pick(LANGS_P),
+            "ppl": rng.lognormal(4.0, 0.3, n),
+        }
+    )
+    return spark.createDataFrame(pdf).select(
+        "codec",
+        "sr_hz",
+        "dur_ms",
+        F.struct("pcm_ok", "dur_ms_decoded", "rms", "speech_ratio").alias("audio"),
+        F.struct("n_chars", "n_tokens").alias("text"),
+        F.struct("pred", "ppl").alias("lang"),
+    )
 
 
 def _models(df):
-    return fit_cohort_models(profile_clips(df)).collect()
+    return fit_cohort_models(df).collect()
 
 
 def _drift(old_rows, new_rows, kind):
@@ -27,11 +67,11 @@ def _drift(old_rows, new_rows, kind):
 @pytest.fixture(scope="module")
 def two_snapshots(spark):
     """Snapshot A: clips [0, 1500). Snapshot B: clips [1500, 3000)
-    with dur_ms tripled for the dominant codec — a real upstream
-    distribution shift (e.g. a new ingest source), not an injected
-    profile row."""
-    a = generate_clips_df(spark, 1500, seed=11)
-    b_raw = generate_clips_df(spark, 1500, seed=11, start=1500)
+    with the catalog dur_ms tripled for the dominant codec — a
+    distribution shift across the whole cohort (e.g. a new ingest
+    source), not an injected outlier row."""
+    a = _profiles(spark, 1500, 0)
+    b_raw = _profiles(spark, 1500, 1500)
     b = b_raw.withColumn(
         "dur_ms",
         F.when(F.col("codec") == "pcm_s16le", F.col("dur_ms") * 3).otherwise(
@@ -56,7 +96,7 @@ def test_numeric_drift_flags_shifted_attribute(two_snapshots):
 
 def test_numeric_drift_same_distribution_is_calm(spark, two_snapshots):
     ma, _ = two_snapshots
-    mb = _models(generate_clips_df(spark, 1500, seed=11, start=3000))
+    mb = _models(_profiles(spark, 1500, 3000))
     out = _drift(ma, mb, "numeric")
     measured = out[out.drifted.notna()]
     assert len(measured) > 0
@@ -87,9 +127,7 @@ def test_categorical_drift_tvd(spark, two_snapshots):
     ma, _ = two_snapshots
     # force a new sr mix in snapshot B: everything at 8 kHz
     mb = _models(
-        generate_clips_df(spark, 1500, seed=11, start=1500).withColumn(
-            "sr_hz", F.lit(8000)
-        )
+        _profiles(spark, 1500, 1500).withColumn("sr_hz", F.lit(8000))
     )
     out = _drift(ma, mb, "categorical")
     assert (out.attribute == "sr_hz").all()
@@ -102,7 +140,7 @@ def test_categorical_drift_tvd(spark, two_snapshots):
 
 def test_categorical_drift_same_distribution_is_calm(spark, two_snapshots):
     ma, _ = two_snapshots
-    mb = _models(generate_clips_df(spark, 1500, seed=11, start=4500))
+    mb = _models(_profiles(spark, 1500, 4500))
     out = _drift(ma, mb, "categorical")
     measured = out[out.drifted.notna()]
     assert len(measured) > 0

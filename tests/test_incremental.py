@@ -13,7 +13,7 @@ from bdqc_spark.sources.iceberg import IcebergishTable
 from bdqc_spark.synth.clips import generate_clips_df
 
 
-def test_incremental_append_profiles_only_new_clips(spark, tmp_path):
+def test_incremental_append_profiles_only_new_clips(spark, tmp_path, sorted_bucket_files):
     root = str(tmp_path / "tbl")
     out = str(tmp_path / "out")
     tbl = IcebergishTable(root, num_buckets=4)
@@ -35,6 +35,14 @@ def test_incremental_append_profiles_only_new_clips(spark, tmp_path):
     files_after_b = set(glob.glob(f"{out}/profiles/bucket=*/*.parquet"))
     assert files_after_a <= files_after_b
     assert len(files_after_b) > len(files_after_a)
+    # one clip_id-sorted profile file per bucket per run (the fresh
+    # run's and the incremental run's), one decisions file per bucket
+    prof_files = sorted_bucket_files(f"{out}/profiles")
+    assert sorted(prof_files) == [0, 1, 2, 3]
+    assert all(len(fs) == 2 for fs in prof_files.values()), prof_files
+    dec_files = sorted_bucket_files(f"{out}/decisions")
+    assert sorted(dec_files) == [0, 1, 2, 3]
+    assert all(len(fs) == 1 for fs in dec_files.values()), dec_files
 
     # decisions recomputed over the full corpus (models refit over all)
     decisions = spark.read.parquet(f"{out}/decisions")

@@ -43,6 +43,23 @@ def test_ppl_empty_is_inf():
     assert np.isinf(lm.perplexity_batch(pd.Series([""]))).all()
 
 
+def test_batch_scores_do_not_depend_on_the_batch():
+    """A string's langid conf and perplexity are its own, to the last
+    bit: neither its place in a batch (a batch boundary falls anywhere
+    in a scan) nor empty or null strings after it may change them."""
+    rng = np.random.default_rng(9)
+    texts = [langid.synth_sentence(rng, lang) for lang in ("en", "de", "fr", "es", "en")]
+    conf = [langid.predict_batch(pd.Series([t]))["conf"].iloc[0] for t in texts]
+    ppl = [lm.perplexity_batch(pd.Series([t]))[0] for t in texts]
+    for i in range(len(texts)):  # every string last once
+        for tail in ([], [""], [None], ["", None, ""], ["ab", ""]):
+            batch = pd.Series(texts[i + 1 :] + texts[: i + 1] + tail)
+            order = list(range(i + 1, len(texts))) + list(range(i + 1))
+            got = langid.predict_batch(batch)["conf"][: len(texts)]
+            assert list(got) == [conf[j] for j in order]
+            assert list(lm.perplexity_batch(batch)[: len(texts)]) == [ppl[j] for j in order]
+
+
 def test_scrub_rules_fire():
     s = "email a@b.co, phone 555-123-4567, ssn 123-45-6789, ip 10.0.0.1, card 1234567890123456, you frak"
     out, edits, hits = scrub_python(s)
