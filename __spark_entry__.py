@@ -2990,7 +2990,7 @@ def q_clips_repair(spark, sf_dir):
         "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"
     )
     decisions = spark.read.parquet(f"{out}/decisions")
-    models = spark.read.parquet(f"{out}/cohort_models")
+    models = spark.read.parquet(f"{out}/cohort_models").collect()
     rep = repair_and_redecide(clips, decisions, models)
     return rep.select(
         "clip_id",
@@ -3040,7 +3040,7 @@ def q_clips_explain(spark, sf_dir):
 
     out = _pipeline_out(spark)
     profiles = spark.read.parquet(f"{out}/profiles")
-    models = spark.read.parquet(f"{out}/cohort_models")
+    models = spark.read.parquet(f"{out}/cohort_models").collect()
     e = explain_decisions(profiles, models)
     return e.select(
         "clip_id",

@@ -2,10 +2,11 @@
 
 bdqc analogue: getOutliers/showOutliers (lib/BDQC/KB.pm,
 reconstructed) — per-file deviation list + flag. Here: broadcast the
-KB-sized cohort_models table onto the profiled rows (map-side only,
-the big table is NOT shuffled), evaluate the compiled rule
-expressions, and emit the `decisions` state table with the scrubbed
-transcript. Everything below is Catalyst expressions — zero Python.
+KB-sized cohort_models rows, collected on the driver, onto the
+profiled rows (map-side only, the big table is NOT shuffled),
+evaluate the compiled rule expressions, and emit the `decisions`
+state table with the scrubbed transcript. Everything that touches a
+profile row is Catalyst expressions — zero Python.
 
 The rule evaluator (join_rule_models + evaluate_rules) is the one
 explain_decisions (plans/explain.py) builds its records from, so the
@@ -16,6 +17,7 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -92,38 +94,67 @@ class RuleEval(NamedTuple):
     score: Column
 
 
+_ARROW = {
+    "string": pa.string(),
+    "double": pa.float64(),
+    "bigint": pa.int64(),
+    "map<string,bigint>": pa.map_(pa.string(), pa.int64()),
+}
+
+
+def _local_side(spark, columns: list[tuple[str, str]], rows: list[tuple]) -> DataFrame:
+    """A KB-sized model side as a LocalRelation with the DDL types in
+    `columns`, broadcast straight from the driver (a frame from
+    createDataFrame(rows) is a Python RDD whose broadcast runs a job)."""
+    table = pa.table(
+        {name: pa.array([r[i] for r in rows], _ARROW[t]) for i, (name, t) in enumerate(columns)}
+    )
+    return spark.createDataFrame(table, ", ".join(f"`{name}` {t}" for name, t in columns))
+
+
 def join_rule_models(
     flat: DataFrame,
-    cohort_models: DataFrame,
+    models_rows: list,
     deviation_rules: tuple[DeviationRule, ...],
     categorical_rules: tuple[CategoricalRule, ...],
 ) -> DataFrame:
     """Join the KB-sized model sides the rules read onto the flat
-    profiles: one broadcast of the deviation models pivoted wide
+    profiles. `models_rows` are the collected cohort_models rows
+    (dicts or Rows); the sides are built from them on the driver: one
+    broadcast of the deviation models pivoted wide
     (`<attr>_median/_mad/_n`), plus one broadcast value histogram per
     categorical rule (`__<attr>_cn`, `__<attr>_hist`). Left joins, so
     unmodeled cohorts keep their rows with NULL model columns; the
     profile side is never shuffled."""
+    spark = flat.sparkSession
+    cohort = [(c, "string") for c in COHORT_COLS]
     if deviation_rules:
         attrs = sorted({r.attribute for r in deviation_rules})
-        wide = (
-            cohort_models.where(F.col("attribute").isin(attrs))
-            .groupBy(*COHORT_COLS)
-            .pivot("attribute", attrs)
-            .agg(
-                F.first("median").alias("median"),
-                F.first("mad").alias("mad"),
-                F.first("n").alias("n"),
-            )
+        wide: dict[tuple, dict] = {}
+        for m in models_rows:
+            if m["attribute"] in attrs:
+                wide.setdefault(tuple(m[c] for c in COHORT_COLS), {}).setdefault(m["attribute"], m)
+        stats = [("median", "double"), ("mad", "double"), ("n", "bigint")]
+        side = _local_side(
+            spark,
+            cohort + [(f"{a}_{s}", t) for a in attrs for s, t in stats],
+            [
+                (*key, *(by_attr[a][s] if a in by_attr else None for a in attrs for s, _ in stats))
+                for key, by_attr in wide.items()
+            ],
         )
-        flat = flat.join(F.broadcast(wide), on=COHORT_COLS, how="left")
+        flat = flat.join(F.broadcast(side), on=COHORT_COLS, how="left")
     for r in categorical_rules or ():
-        hist = cohort_models.where(F.col("attribute") == r.attribute).select(
-            *COHORT_COLS,
-            F.col("n").alias(f"__{r.attribute}_cn"),
-            F.col("histogram").alias(f"__{r.attribute}_hist"),
+        side = _local_side(
+            spark,
+            cohort + [(f"__{r.attribute}_cn", "bigint"), (f"__{r.attribute}_hist", "map<string,bigint>")],
+            [
+                (*(m[c] for c in COHORT_COLS), m["n"], m["histogram"])
+                for m in models_rows
+                if m["attribute"] == r.attribute
+            ],
         )
-        flat = flat.join(F.broadcast(hist), on=COHORT_COLS, how="left")
+        flat = flat.join(F.broadcast(side), on=COHORT_COLS, how="left")
     return flat
 
 
@@ -203,13 +234,13 @@ def _static_decide_exprs(sc_key, static_rules, deviation_rules, categorical_rule
 
 def decide(
     profiles: DataFrame,
-    cohort_models: DataFrame,
+    models_rows: list,
     static_rules: tuple[StaticRule, ...] = STATIC_RULES,
     deviation_rules: tuple[DeviationRule, ...] = DEVIATION_RULES,
     categorical_rules: tuple[CategoricalRule, ...] = CATEGORICAL_RULES,
 ) -> DataFrame:
-    """profiles + models → decisions(clip_id[, bucket], keep,
-    rule_hits, scrubbed_transcript, n_scrub_edits)."""
+    """profiles + collected cohort_models rows → decisions(clip_id[,
+    bucket], keep, rule_hits, scrubbed_transcript, n_scrub_edits)."""
     # Monotonic session token (r3 ADVICE): id(_jsc) can be reused by a
     # new gateway object after the old one is GC'd, silently serving
     # Columns bound to a dead JVM. (applicationId, startTime) is unique
@@ -220,7 +251,7 @@ def decide(
         sc_key, static_rules, deviation_rules, categorical_rules
     )
     flat = join_rule_models(
-        flatten_profiles(profiles), cohort_models, deviation_rules, categorical_rules
+        flatten_profiles(profiles), models_rows, deviation_rules, categorical_rules
     )
 
     extra = [c for c in ("bucket",) if c in flat.columns]

@@ -14,7 +14,7 @@ rule with the model context that justified it:
   (StaticRule.attribute), no model context
 
 Shares decide's evaluator (plans/decide.py join_rule_models +
-evaluate_rules): the same broadcast joins of the KB-sized model table
+evaluate_rules): the same broadcast joins of the KB-sized model rows
 and the same per-rule Catalyst expressions, so explain and decide
 agree by construction. On top: one explode of a per-row struct array.
 No extra shuffle of the profiles table; the explode multiplies rows
@@ -40,17 +40,17 @@ from bdqc_spark.plans.rules import (
 
 def explain_decisions(
     profiles: DataFrame,
-    cohort_models: DataFrame,
+    models_rows: list,
     static_rules: tuple[StaticRule, ...] = STATIC_RULES,
     deviation_rules: tuple[DeviationRule, ...] = DEVIATION_RULES,
     categorical_rules: tuple[CategoricalRule, ...] = CATEGORICAL_RULES,
 ) -> DataFrame:
-    """profiles + models → long-form per-(clip, fired rule) explain
-    records. Built from decide()'s own rule evaluator: a clip appears
-    here iff it appears in decisions with keep = false, and its
-    rule_ids here equal its decisions.rule_hits."""
+    """profiles + collected cohort_models rows → long-form per-(clip,
+    fired rule) explain records. Built from decide()'s own rule
+    evaluator: a clip appears here iff it appears in decisions with
+    keep = false, and its rule_ids here equal its decisions.rule_hits."""
     flat = join_rule_models(
-        flatten_profiles(profiles), cohort_models, deviation_rules, categorical_rules
+        flatten_profiles(profiles), models_rows, deviation_rules, categorical_rules
     )
     entries = [
         F.when(

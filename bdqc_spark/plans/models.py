@@ -119,37 +119,27 @@ def fit_cohort_models(
 
 
 def collect_cohort_models(
-    profiles: DataFrame, exact: bool = False, accuracy: int = 2000,
-    assume_cached: bool | None = None,
+    profiles: DataFrame, exact: bool = False, accuracy: int = 2000, *, assume_cached: bool
 ) -> list:
     """Fit and collect the KB-sized model table in one pass over the
     profiles: the flat 8-scalar projection is persisted so the three
     aggregation branches (wide quantiles, MAD, categorical histogram)
     scan the profiles table ONCE, then unpersisted.
 
-    If `profiles` is itself already materialized (the pipeline's
-    fresh-run path hands in the localCheckpoint'ed stage-A output),
-    the branches read those blocks directly — persisting a projection
-    OF it wastes storage memory, adds a materialization pass, and
-    (for CacheManager caches) trips Spark's nested InMemoryRelation
-    canonicalization (`key not found: <attr>`). A localCheckpoint is
-    invisible to `df.storageLevel` (the CacheManager doesn't track
-    it — measured: it reports NONE), so callers that know their input
-    is materialized pass ``assume_cached=True`` (r6 fix: the pipeline
-    was re-persisting the flat projection of its own checkpoint on
-    every fresh run)."""
+    Pass ``assume_cached=True`` when `profiles` is itself already
+    materialized (the pipeline's fresh-run path hands in the
+    localCheckpoint'ed stage-A output): the branches then read those
+    blocks directly — persisting a projection OF it wastes storage
+    memory, adds a materialization pass, and (for CacheManager
+    caches) trips Spark's nested InMemoryRelation canonicalization
+    (`key not found: <attr>`)."""
     from pyspark import StorageLevel
 
     flat = _flat_attrs(profiles)
-    input_cached = (
-        assume_cached
-        if assume_cached is not None
-        else profiles.storageLevel != StorageLevel.NONE
-    )
-    if not input_cached:
+    if not assume_cached:
         flat = flat.persist(StorageLevel.MEMORY_ONLY)
     try:
         return _fit(flat, exact, accuracy).collect()
     finally:
-        if not input_cached:
+        if not assume_cached:
             flat.unpersist()

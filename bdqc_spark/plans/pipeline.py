@@ -4,15 +4,25 @@ with per-partition lineage + metrics").
 
 bdqc analogue: the KB is the reference's resumability mechanism —
 scan skips files already in the KB (lib/BDQC/KB.pm, reconstructed).
-The engine replaces the single mutable JSON blob with append-only
-state tables keyed by *bucket* (the hash(clip_id) partition):
+The engine replaces the single mutable JSON blob with state tables
+keyed by *bucket* (the hash(clip_id) partition):
 
   out/
     profiles/bucket=k/    stage-1 checkpoint (signatures per clip)
-    cohort_models/        per-run model snapshot (KB "models")
     decisions/bucket=k/   final keep/drop + scrubbed transcript
-    metrics/              per-bucket counters, appended per attempt
+    cohort_models/        part-00000.parquet: the current model
+                          snapshot (KB "models"), replaced in place
+    metrics/              per-bucket counters, one file per attempt
     lineage/              per-bucket completion records, appended
+    drift/                model drift vs the previous snapshot,
+                          one file per incremental refit
+
+profiles/ and decisions/ are Spark writes. The other four are
+KB-sized (one row per bucket or per (cohort, attribute)) and live on
+the driver, as bdqc's KB does: `write_state` writes each file with
+pyarrow to a hidden `.<name>.tmp` and `os.replace`s it into place, and
+`read_state` reads a table back. A killed writer leaves only the
+dot-file, which Spark, pyarrow and `read_state` all skip.
 
 Resume = read lineage, anti-join completed buckets (J5), process the
 remainder. Writes use dynamic partition overwrite so a re-run of a
@@ -26,10 +36,14 @@ profile scalars; stage C is a broadcast join + map-side writes.
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,154 +52,137 @@ from bdqc_spark.plans.drift import model_drift
 from bdqc_spark.plans.models import collect_cohort_models
 from bdqc_spark.plans.profile import profile_clips
 
+_HIST = pa.map_(pa.string(), pa.int64())
+MODELS_FILE = "part-00000.parquet"
+MODELS_SCHEMA = pa.schema(
+    [("codec", pa.string()), ("lang_pred", pa.string()), ("attribute", pa.string()),
+     ("n", pa.int64()),
+     *((c, pa.float64()) for c in ("median", "mad", "p01", "p25", "p75", "p99", "mean", "std")),
+     ("histogram", _HIST)]
+)
+LINEAGE_SCHEMA = pa.schema(
+    [("partition_id", pa.int32()), ("input_snapshot", pa.string()), ("attempt", pa.int32()),
+     ("started_at", pa.timestamp("us")), ("finished_at", pa.timestamp("us")),
+     ("status", pa.string())]
+)
+DRIFT_SCHEMA = pa.schema(
+    [("kind", pa.string()), ("codec", pa.string()), ("lang_pred", pa.string()),
+     ("attribute", pa.string()), ("n_old", pa.int64()), ("n_new", pa.int64()),
+     ("metric", pa.float64()), ("threshold", pa.float64()), ("drifted", pa.bool_()),
+     ("run_id", pa.string()), ("input_snapshot", pa.string()), ("written_at", pa.int64())]
+)
+# The schema Spark gave the metrics table when it wrote it: readers
+# scan files of both writers in one metrics/ directory.
+METRICS_SCHEMA = pa.schema(
+    [("partition_id", pa.int32()), ("rows_seen", pa.int64()), ("rows_dropped", pa.int64()),
+     ("dropped_by_rule", _HIST), ("scrub_edits", pa.int64()), ("wall_ms", pa.int32()),
+     ("run_id", pa.string()), ("written_at", pa.int64()), ("attempt", pa.int32())]
+)
 
-def _write_models_snapshot(rows: list, models_dir: str) -> None:
-    """Write the collected cohort_models rows as one parquet file
-    (atomic tmp+rename swap), Spark-readable for the reuse fast path."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    num_cols = ["n", "median", "mad", "p01", "p25", "p75", "p99", "mean", "std"]
-    data = {
-        "codec": pa.array([r["codec"] for r in rows], pa.string()),
-        "lang_pred": pa.array([r["lang_pred"] for r in rows], pa.string()),
-        "attribute": pa.array([r["attribute"] for r in rows], pa.string()),
-        "n": pa.array([r["n"] for r in rows], pa.int64()),
-        **{
-            c: pa.array([r[c] for r in rows], pa.float64())
-            for c in num_cols
-            if c != "n"
+def state_table(schema: pa.Schema, rows: list, **constants) -> pa.Table:
+    """Rows (dicts or Rows, item access by column name) → a pa.Table
+    of `schema`; a column named in `constants` holds that one value
+    on every row."""
+    return pa.table(
+        {
+            f.name: pa.array(
+                [constants[f.name]] * len(rows) if f.name in constants
+                else [r[f.name] for r in rows],
+                f.type,
+            )
+            for f in schema
         },
-        "histogram": pa.array(
-            [sorted(r["histogram"].items()) if r["histogram"] is not None else None for r in rows],
-            pa.map_(pa.string(), pa.int64()),
-        ),
-    }
-    tmp = models_dir + ".tmp"
-    import shutil
+        schema=schema,
+    )
 
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    pq.write_table(pa.table(data), os.path.join(tmp, "part-00000.parquet"))
-    shutil.rmtree(models_dir, ignore_errors=True)
-    os.rename(tmp, models_dir)
+
+def write_state(state_dir: str, table: pa.Table, name: str | None = None) -> None:
+    """Write one file of a driver-side state table: pyarrow into a
+    hidden `.<name>.tmp`, then `os.replace`. name=None appends a new
+    uniquely named file; a fixed name replaces that file in place."""
+    os.makedirs(state_dir, exist_ok=True)
+    name = name or f"part-{time.time_ns()}-{uuid.uuid4().hex[:8]}.parquet"
+    tmp = os.path.join(state_dir, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(state_dir, name))
+
+
+def read_state(state_dir: str, columns: list[str] | None = None) -> pa.Table | None:
+    """Every committed file of a state table as one pa.Table; None if
+    there is none."""
+    files = sorted(glob.glob(os.path.join(state_dir, "*.parquet")))
+    return ds.dataset(files).to_table(columns=columns) if files else None
+
 
 def _read_models_snapshot(models_dir: str) -> list | None:
-    """Driver-side read of a persisted cohort_models snapshot (KB-
-    sized) as row dicts — used to hold the PREVIOUS snapshot in memory
-    across the overwrite so drift can compare old vs new."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    files = sorted(glob.glob(os.path.join(models_dir, "*.parquet")))
-    if not files:
+    """The persisted cohort_models snapshot as row dicts (histogram as
+    a dict), or None if no snapshot was written."""
+    t = read_state(models_dir)
+    if t is None:
         return None
-    rows = pq.read_table(files).to_pylist()
+    rows = t.to_pylist()
     for r in rows:
-        if r.get("histogram") is not None:
+        if r["histogram"] is not None:
             r["histogram"] = dict(r["histogram"])
     return rows
 
 
-def _write_drift_table(
-    old_rows: list,
-    new_rows: list,
-    drift_dir: str,
-    run_id: str,
-    input_snapshot: str,
-) -> int:
-    """Stage B2 (bdqc's temporal QC, wired in per r4 VERDICT ask #7):
-    compare the previous cohort-model snapshot against the one just
-    fit and APPEND a drift state table — numeric robust-z per
-    (cohort, attribute) + categorical histogram TVD. Runs ONLY on
-    incremental refits (a fresh out dir has no previous snapshot), so
-    the serial path of fresh runs and scaling probes pays nothing.
-    Both snapshots are the KB-sized rows already on the driver:
-    plans.drift.model_drift compares them in Python and the table is
-    written with pyarrow — no Spark job, flat cost at any corpus size.
-    Returns the number of drifted=True rows."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    recs = model_drift(old_rows, new_rows)
-    now_ns = time.time_ns()
-    tbl = pa.table(
-        {
-            "kind": pa.array([r["kind"] for r in recs], pa.string()),
-            "codec": pa.array([r["codec"] for r in recs], pa.string()),
-            "lang_pred": pa.array([r["lang_pred"] for r in recs], pa.string()),
-            "attribute": pa.array([r["attribute"] for r in recs], pa.string()),
-            "n_old": pa.array([r["n_old"] for r in recs], pa.int64()),
-            "n_new": pa.array([r["n_new"] for r in recs], pa.int64()),
-            "metric": pa.array([r["metric"] for r in recs], pa.float64()),
-            "threshold": pa.array([r["threshold"] for r in recs], pa.float64()),
-            "drifted": pa.array([r["drifted"] for r in recs], pa.bool_()),
-            "run_id": pa.array([run_id] * len(recs), pa.string()),
-            "input_snapshot": pa.array([input_snapshot] * len(recs), pa.string()),
-            "written_at": pa.array([now_ns] * len(recs), pa.int64()),
-        }
+def lineage_table(
+    buckets: list[int], snapshot: str, attempt: int, started_at: float, status: str
+) -> pa.Table:
+    """Lineage records: one per bucket that reached `status`."""
+    return state_table(
+        LINEAGE_SCHEMA,
+        [{"partition_id": int(b)} for b in buckets],
+        input_snapshot=snapshot,
+        attempt=attempt,
+        started_at=int(started_at * 1e6),
+        finished_at=int(time.time() * 1e6),
+        status=status,
     )
-    os.makedirs(drift_dir, exist_ok=True)
-    path = os.path.join(drift_dir, f"drift-{now_ns}-{uuid.uuid4().hex[:8]}.parquet")
-    pq.write_table(tbl, path + ".tmp")
-    os.rename(path + ".tmp", path)
-    return sum(1 for r in recs if r["drifted"])
 
 
 def metrics_table(
     decisions: DataFrame, key_col: str, run_id: str, wall_ms: int, attempt: int
-) -> DataFrame:
+) -> pa.Table:
     """Per-`key_col` metrics rows (FIXTURES.md §3) from a decisions
     DataFrame: rows_seen, rows_dropped, dropped_by_rule map,
     scrub_edits, plus recency keys (written_at ns, attempt) so readers
     can take the latest record per partition after appends.
 
     Rules are data (plans/rules.py), so the per-rule counts compile to
-    a fixed pivot: one aggregation pass, no explode, no self-join.
-    Shared by the batch pipeline (key = bucket) and the streaming
-    sink (key = batch_id).
+    a fixed pivot: one grouped aggregate, collected (one row per key),
+    and the dropped_by_rule map is built here in rule order from the
+    non-zero counts. Shared by the batch pipeline (key = bucket) and
+    the streaming sink (key = batch_id).
     """
     from bdqc_spark.plans.rules import CATEGORICAL_RULES, DEVIATION_RULES, STATIC_RULES
 
-    rule_ids = (
-        [r.rule_id for r in STATIC_RULES]
-        + [r.rule_id for r in DEVIATION_RULES]
-        + [r.rule_id for r in CATEGORICAL_RULES]
-    )
-    per_rule = [
-        F.sum(F.array_contains("rule_hits", rid).cast("long")).alias(f"__r{i}")
-        for i, rid in enumerate(rule_ids)
-    ]
+    rule_ids = [r.rule_id for r in (*STATIC_RULES, *DEVIATION_RULES, *CATEGORICAL_RULES)]
     agg = decisions.groupBy(key_col).agg(
-        F.count(F.lit(1)).alias("rows_seen"),
-        F.sum(F.when(~F.col("keep"), 1).otherwise(0)).alias("rows_dropped"),
-        F.sum("n_scrub_edits").alias("scrub_edits"),
-        *per_rule,
+        F.count(F.lit(1)),
+        F.sum(F.when(~F.col("keep"), 1).otherwise(0)),
+        F.sum("n_scrub_edits"),
+        *(F.sum(F.array_contains("rule_hits", rid).cast("long")) for rid in rule_ids),
     )
-    entries = [
-        F.when(
-            F.col(f"__r{i}") > 0, F.struct(F.lit(rid).alias("key"), F.col(f"__r{i}").alias("value"))
-        )
-        for i, rid in enumerate(rule_ids)
+    rows = [
+        {
+            "partition_id": int(key),
+            "rows_seen": seen,
+            "rows_dropped": dropped,
+            "dropped_by_rule": [(rid, n) for rid, n in zip(rule_ids, per_rule) if n],
+            "scrub_edits": edits,
+        }
+        for key, seen, dropped, edits, *per_rule in sorted(agg.collect())
     ]
-    return agg.select(
-        F.col(key_col).cast("int").alias("partition_id"),
-        "rows_seen",
-        "rows_dropped",
-        F.map_from_entries(
-            F.filter(F.array(*entries), lambda x: x.isNotNull())
-        ).alias("dropped_by_rule"),
-        "scrub_edits",
-        F.lit(wall_ms).alias("wall_ms"),
-        F.lit(run_id).alias("run_id"),
-        # recency keys: metrics are APPENDED per attempt/snapshot;
-        # readers take the latest record per partition_id, ordered by
-        # (written_at, attempt). Nanosecond resolution + the attempt
-        # counter means two sequential runs can't tie the way
-        # millisecond stamps could.
-        F.lit(time.time_ns()).alias("written_at"),
-        F.lit(int(attempt)).alias("attempt"),
+    # recency keys: metrics are APPENDED per attempt/snapshot; readers
+    # take the latest record per partition_id, ordered by (written_at,
+    # attempt). Nanosecond resolution + the attempt counter means two
+    # sequential runs can't tie the way millisecond stamps could.
+    return state_table(
+        METRICS_SCHEMA, rows, wall_ms=wall_ms, run_id=run_id,
+        written_at=time.time_ns(), attempt=int(attempt),
     )
 
 
@@ -207,50 +204,13 @@ def _tick(result: PipelineResult, stage: str, t0: float) -> float:
 
 
 def _completed(lineage_dir: str, snapshot: str, status: str) -> set[int]:
-    """Read the lineage table driver-side (pyarrow): it is tiny
-    commit-protocol metadata — paying a Spark job for it would put
-    two scheduler round-trips on the serial path of every run."""
-    import glob
-
-    import pyarrow.dataset as ds
-
-    files = sorted(glob.glob(os.path.join(lineage_dir, "*.parquet")))
-    if not files:
-        return set()
-    pdf = ds.dataset(files).to_table(
-        columns=["partition_id", "input_snapshot", "status"]
-    ).to_pandas()
-    hit = pdf[(pdf.input_snapshot == snapshot) & (pdf.status == status)]
-    return set(int(b) for b in hit.partition_id)
-
-
-def _append_lineage(
-    lineage_dir: str,
-    buckets: list[int],
-    snapshot: str,
-    attempt: int,
-    started_at: float,
-    status: str,
-) -> None:
-    """Append lineage records driver-side (atomic single-file write)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    now = time.time()
-    tbl = pa.table(
-        {
-            "partition_id": pa.array([int(b) for b in buckets], pa.int32()),
-            "input_snapshot": pa.array([snapshot] * len(buckets)),
-            "attempt": pa.array([attempt] * len(buckets), pa.int32()),
-            "started_at": pa.array([int(started_at * 1e6)] * len(buckets), pa.timestamp("us")),
-            "finished_at": pa.array([int(now * 1e6)] * len(buckets), pa.timestamp("us")),
-            "status": pa.array([status] * len(buckets)),
-        }
-    )
-    os.makedirs(lineage_dir, exist_ok=True)
-    path = os.path.join(lineage_dir, f"lineage-{int(now * 1000)}-{uuid.uuid4().hex[:8]}.parquet")
-    pq.write_table(tbl, path + ".tmp")
-    os.rename(path + ".tmp", path)
+    """Buckets that lineage records as `status` for `snapshot`."""
+    t = read_state(lineage_dir, ["partition_id", "input_snapshot", "status"])
+    return {
+        r["partition_id"]
+        for r in (t.to_pylist() if t is not None else ())
+        if r["input_snapshot"] == snapshot and r["status"] == status
+    }
 
 
 def run_pipeline(
@@ -369,38 +329,14 @@ def run_pipeline(
             prof_cached = prof.localCheckpoint(eager=False)
             prof = prof_cached
         prof.write.mode("append").partitionBy("bucket").parquet(profiles_dir)
-        _append_lineage(lineage_dir, pending, input_snapshot, attempt, t0, "profiled")
+        write_state(lineage_dir, lineage_table(pending, input_snapshot, attempt, t0, "profiled"))
     t_stage = _tick(result, "A_profile", t_stage)
-    return _finish_pipeline(
-        spark, result, profiles_dir, models_dir, decisions_dir, metrics_dir,
-        lineage_dir, input_snapshot, exact_models, fail_after_stage,
-        all_buckets, pending, attempt, prof_cached, t_stage,
-    )
-
-
-def _finish_pipeline(
-    spark: SparkSession,
-    result: PipelineResult,
-    profiles_dir: str,
-    models_dir: str,
-    decisions_dir: str,
-    metrics_dir: str,
-    lineage_dir: str,
-    input_snapshot: str,
-    exact_models: bool,
-    fail_after_stage: str | None,
-    all_buckets: list[int],
-    pending: list[int],
-    attempt: int,
-    prof_cached,
-    t_stage: float,
-) -> PipelineResult:
     if fail_after_stage == "profile":
         raise RuntimeError("injected failure after profile stage")
 
     # ---- Stage B: fit cohort models over ALL profiles --------------------
     # The model table is KB-sized (|cohorts|×|attrs| rows): collect it
-    # once, persist the snapshot, and feed the collected copy straight
+    # once, persist the snapshot, and feed the collected rows straight
     # into stage C — no parquet round-trip on the serial path.
     # No-op fast path: reuse the persisted snapshot ONLY when lineage
     # proves it was fit for THIS input_snapshot with THIS fit mode
@@ -414,30 +350,48 @@ def _finish_pipeline(
     # Fresh run: the profile table IS the cached stage-A output — no
     # parquet re-read job (the cache was materialized by A's write).
     profiles = prof_cached if prof_cached is not None else spark.read.parquet(profiles_dir)
-    if not pending and models_current and os.path.isdir(models_dir):
-        models = spark.read.parquet(models_dir)
-    else:
+    models_rows = _read_models_snapshot(models_dir) if not pending and models_current else None
+    if models_rows is None:
         # hold the PREVIOUS snapshot (if any) across the overwrite so
         # stage B2 can diff old vs new (bdqc's temporal QC)
-        old_models_rows = _read_models_snapshot(models_dir) if os.path.isdir(models_dir) else None
+        old_models_rows = _read_models_snapshot(models_dir)
         models_rows = collect_cohort_models(
             profiles, exact=exact_models, assume_cached=prof_cached is not None
         )
-        models = spark.createDataFrame(models_rows)
-        # Persist the snapshot driver-side (pyarrow): it is ~100 rows;
-        # a Spark coalesce(1) write puts a whole extra job (~1.5s) on
-        # the serial path of every run.
-        _write_models_snapshot(models_rows, models_dir)
-        _append_lineage(lineage_dir, [-1], input_snapshot, attempt, t_stage, models_status)
+        # histogram keys sorted: a refit over the same profiles writes
+        # the same snapshot bytes
+        write_state(
+            models_dir,
+            state_table(
+                MODELS_SCHEMA,
+                [
+                    {
+                        **r.asDict(),
+                        "histogram": None if r.histogram is None else sorted(r.histogram.items()),
+                    }
+                    for r in models_rows
+                ],
+            ),
+            MODELS_FILE,
+        )
+        write_state(lineage_dir, lineage_table([-1], input_snapshot, attempt, t_stage, models_status))
         if old_models_rows:
+            # Stage B2 (bdqc's temporal QC, wired in per r4 VERDICT ask
+            # #7): drift of the refit models against the previous
+            # snapshot — numeric robust-z per (cohort, attribute) +
+            # categorical histogram TVD. Only incremental refits have a
+            # previous snapshot; both are KB-sized rows on the driver,
+            # so the comparison is plain Python, no Spark job.
             t_b2 = time.time()
-            result.drift_flagged = _write_drift_table(
-                old_models_rows,
-                models_rows,
-                os.path.join(os.path.dirname(models_dir), "drift"),
-                result.run_id,
-                input_snapshot,
+            recs = model_drift(old_models_rows, models_rows)
+            write_state(
+                f"{out_dir}/drift",
+                state_table(
+                    DRIFT_SCHEMA, recs, run_id=run_id, input_snapshot=input_snapshot,
+                    written_at=time.time_ns(),
+                ),
             )
+            result.drift_flagged = sum(1 for r in recs if r["drifted"])
             result.stage_seconds["B2_drift"] = round(time.time() - t_b2, 2)
     t_stage = _tick(result, "B_models", t_stage)
     if fail_after_stage == "models":
@@ -448,8 +402,6 @@ def _finish_pipeline(
     done_decide = _completed(lineage_dir, input_snapshot, "committed")
     pending_d = [b for b in all_buckets if b not in done_decide]
     if pending_d:
-        from pyspark import StorageLevel
-
         # Re-parallelize BEFORE decide: the profile table is small on
         # disk, so its scan coalesces to a few tasks — repartitioning
         # the profile rows (pre-scrub, the smaller side) lets the rule
@@ -461,15 +413,20 @@ def _finish_pipeline(
         src = profiles.where(F.col("bucket").isin(pending_d))
         if prof_cached is None:
             src = src.repartition(len(all_buckets), "bucket")
-        # Persist the decisions (bytes never reached this stage, so a
+        # Keep the decisions (bytes never reached this stage, so a
         # partition is just scalars + transcripts — MBs, not GBs): the
-        # write materializes the cache and the metrics aggregation
-        # reads it back, replacing stage D's separate re-read job of
-        # the committed parquet (a fixed ~1s scheduling+scan cost on
-        # the serial path of every run — the limiter the N-vs-4N
-        # per-stage data indicted).
-        decisions = decide(src, models).sortWithinPartitions("bucket", "clip_id").persist(
-            StorageLevel.MEMORY_AND_DISK
+        # write materializes them and the metrics aggregation reads
+        # them back, replacing stage D's separate re-read job of the
+        # committed parquet (a fixed ~1s scheduling+scan cost on the
+        # serial path of every run — the limiter the N-vs-4N
+        # per-stage data indicted). A lazy localCheckpoint, not
+        # persist(): the write fills it within its own job, where
+        # writing a persisted plan ran a second job (measured). Its
+        # blocks are freed with the DataFrame, as stage A's are.
+        decisions = (
+            decide(src, models_rows)
+            .sortWithinPartitions("bucket", "clip_id")
+            .localCheckpoint(eager=False)
         )
         (
             decisions.write.mode("overwrite")
@@ -479,13 +436,12 @@ def _finish_pipeline(
         )
         t_stage = _tick(result, "C_decide", t_stage)
         wall_ms = int((time.time() - t1) * 1000)
-        metrics = metrics_table(
-            decisions, "bucket", run_id=result.run_id, wall_ms=wall_ms, attempt=attempt
+        write_state(
+            metrics_dir,
+            metrics_table(decisions, "bucket", run_id=run_id, wall_ms=wall_ms, attempt=attempt),
         )
-        metrics.write.mode("append").parquet(metrics_dir)
-        decisions.unpersist()
-        _append_lineage(lineage_dir, pending_d, input_snapshot, attempt, t1, "committed")
+        write_state(lineage_dir, lineage_table(pending_d, input_snapshot, attempt, t1, "committed"))
         _tick(result, "D_metrics", t_stage)
 
-    result.processed_buckets = pending_d if pending_d else []
+    result.processed_buckets = pending_d
     return result

@@ -185,9 +185,10 @@ def repair_clips(
     )
 
 
-def redecide_repaired(fixed: DataFrame, cohort_models: DataFrame) -> DataFrame:
+def redecide_repaired(fixed: DataFrame, models_rows: list) -> DataFrame:
     """Repaired (repair_ok) rows → re-profiled and re-decided against
-    the SAME cohort model snapshot → (clip_id, passes_applied,
+    the SAME cohort model snapshot (its collected rows, as `decide`
+    takes them) → (clip_id, passes_applied,
     now_keep, rule_hits_after). Split out so a sink can write the
     rewritten payloads ONCE and run the report off the written data
     (one Arrow rewrite pass total)."""
@@ -198,7 +199,7 @@ def redecide_repaired(fixed: DataFrame, cohort_models: DataFrame) -> DataFrame:
     cols = [c for c in ("clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript")
             if c in fixed.columns]
     profiles = profile_clips(fixed.select(*cols))
-    redecided = decide(profiles, cohort_models).select(
+    redecided = decide(profiles, models_rows).select(
         "clip_id",
         F.col("keep").alias("now_keep"),
         F.col("rule_hits").alias("rule_hits_after"),
@@ -209,10 +210,10 @@ def redecide_repaired(fixed: DataFrame, cohort_models: DataFrame) -> DataFrame:
 def repair_and_redecide(
     clips: DataFrame,
     decisions: DataFrame,
-    cohort_models: DataFrame,
+    models_rows: list,
     target_lufs: float = -23.0,
     pad_ms: int = 100,
 ) -> DataFrame:
     """The honest repair report: repair + redecide_repaired composed."""
     repaired = repair_clips(clips, decisions, target_lufs, pad_ms)
-    return redecide_repaired(repaired.where(F.col("repair_ok")), cohort_models)
+    return redecide_repaired(repaired.where(F.col("repair_ok")), models_rows)

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bdqc_spark.plans.decide import decide
-from bdqc_spark.plans.pipeline import _append_lineage, metrics_table
+from bdqc_spark.plans.pipeline import lineage_table, metrics_table, write_state
 from bdqc_spark.plans.profile import profile_clips
 
 
@@ -41,15 +41,18 @@ def make_batch_writer(spark: SparkSession, models: DataFrame, out_dir: str):
     """The idempotent foreachBatch body: overwrite this batch_id's own
     decisions partition (dynamic mode) and append the batch's metrics
     + lineage records, so an at-least-once retry replaces its previous
-    (possibly partial) output instead of appending to it."""
+    (possibly partial) output instead of appending to it. The
+    KB-sized `models` frame is collected once, here, not per batch."""
     from pyspark import StorageLevel
+
+    models_rows = models.collect()
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         t0 = time.time()
         decisions = (
-            decide(profile_clips(batch_df), models)
+            decide(profile_clips(batch_df), models_rows)
             .withColumn("batch_id", F.lit(int(batch_id)))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
@@ -59,22 +62,20 @@ def make_batch_writer(spark: SparkSession, models: DataFrame, out_dir: str):
             .partitionBy("batch_id")
             .parquet(f"{out_dir}/decisions")
         )
-        metrics = metrics_table(
-            decisions,
-            "batch_id",
-            run_id=f"stream-{int(batch_id)}",
-            wall_ms=int((time.time() - t0) * 1000),
-            attempt=1,
+        write_state(
+            f"{out_dir}/metrics",
+            metrics_table(
+                decisions,
+                "batch_id",
+                run_id=f"stream-{int(batch_id)}",
+                wall_ms=int((time.time() - t0) * 1000),
+                attempt=1,
+            ),
         )
-        metrics.write.mode("append").parquet(f"{out_dir}/metrics")
         decisions.unpersist()
-        _append_lineage(
+        write_state(
             f"{out_dir}/lineage",
-            [int(batch_id)],
-            snapshot=f"stream-batch-{int(batch_id)}",
-            attempt=1,
-            started_at=t0,
-            status="committed",
+            lineage_table([int(batch_id)], f"stream-batch-{int(batch_id)}", 1, t0, "committed"),
         )
 
     return _process

@@ -142,7 +142,7 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     from bdqc_spark.session import build_session
-    from bdqc_spark.plans.pipeline import run_pipeline
+    from bdqc_spark.plans.pipeline import read_state, run_pipeline
     from bdqc_spark.sources.iceberg import IcebergishTable
 
     spark = build_session(app_name="bdqc-pipeline", master=args.master)
@@ -296,7 +296,7 @@ def main(argv: list[str] | None = None) -> int:
             "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"
         )
         decisions = spark.read.parquet(os.path.join(result.out_dir, "decisions"))
-        models = spark.read.parquet(os.path.join(result.out_dir, "cohort_models"))
+        models = read_state(os.path.join(result.out_dir, "cohort_models")).to_pylist()
         repaired = repair_clips(clips_df, decisions)
         # sink the rewritten payloads once, report off the written data
         repaired.where(F.col("repair_ok")).write.mode("overwrite").parquet(

@@ -647,7 +647,7 @@ def test_bandwidth_and_dc_rules_end_to_end(spark):
         "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, transcript string",
     )
     prof = profile_clips(df)
-    models = spark.createDataFrame(fit_cohort_models(prof).collect())
+    models = fit_cohort_models(prof).collect()
     hits = {r.clip_id: list(r.rule_hits) for r in decide(prof, models).collect()}
     assert "audio.bandwidth_low" in hits["narrow"], hits
     assert "audio.dc_offset" in hits["dcshift"], hits

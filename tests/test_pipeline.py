@@ -193,8 +193,8 @@ def test_null_categorical_attr_does_not_crash_or_flag(spark):
             ),
         )
     )
-    models = spark.createDataFrame(fit_cohort_models(profiles).collect())
-    hist_rows = models.where(F.col("attribute") == "sr_hz").collect()
+    models = fit_cohort_models(profiles).collect()
+    hist_rows = [r for r in models if r.attribute == "sr_hz"]
     assert hist_rows, "categorical model rows missing"
     for r in hist_rows:
         assert None not in r.histogram  # no null keys fitted
@@ -244,3 +244,51 @@ def test_pipeline_on_tiny_corpus_below_cohort_support(spark, tmp_path_factory):
         "clip_id"
     )
     assert list(dec.sort_values("clip_id").keep) == list(golden_tiny.keep)
+
+
+# The metrics schema as Spark wrote it before metrics moved to the
+# driver-side state writer; out dirs hold files of both writers.
+METRICS_DDL = (
+    "partition_id int, rows_seen bigint, rows_dropped bigint, "
+    "dropped_by_rule map<string,bigint>, scrub_edits bigint, wall_ms int, "
+    "run_id string, written_at bigint, attempt int"
+)
+
+
+def test_metrics_files_of_both_writers_read_as_one_table(spark, tmp_path):
+    """A metrics/ directory that holds a Spark-written file and a
+    write_state file reads as one table with the pinned schema, and
+    the HTML report totals both."""
+    import glob
+
+    from pyspark.sql.types import _parse_datatype_string
+
+    from bdqc_spark.plans.pipeline import metrics_table, write_state
+    from bdqc_spark.plans.report import write_html_report
+
+    out = str(tmp_path / "out")
+    metrics_dir = f"{out}/metrics"
+    old = [(0, 5, 2, {"audio.silent": 2}, 1, 10, "old", 1, 1)]
+    spark.createDataFrame(old, METRICS_DDL).coalesce(1).write.mode("append").parquet(metrics_dir)
+    decisions = spark.createDataFrame(
+        [(1, True, [], 3), (1, False, ["audio.silent", "text.empty"], 0), (1, False, ["text.empty"], 0)],
+        "bucket int, keep boolean, rule_hits array<string>, n_scrub_edits int",
+    )
+    table = metrics_table(decisions, "bucket", run_id="new", wall_ms=7, attempt=1)
+    # rule order, zero counts left out
+    assert table.column("dropped_by_rule").to_pylist() == [[("audio.silent", 1), ("text.empty", 2)]]
+    write_state(metrics_dir, table)
+
+    pinned = _parse_datatype_string(METRICS_DDL)
+    files = glob.glob(f"{metrics_dir}/*.parquet")
+    assert len(files) == 2
+    for f in files:
+        assert spark.read.parquet(f).schema == pinned, f
+    assert spark.read.parquet(metrics_dir).schema == pinned
+
+    path = str(tmp_path / "report.html")
+    doc = open(write_html_report(spark, out, path)).read()
+    # rows_seen, rows_dropped, drop_rate, scrub_edits over both files
+    assert "<tr><td>8</td><td>4</td><td>0.5000</td><td>4</td></tr>" in doc
+    assert "<tr><td>audio.silent</td><td>3</td></tr>" in doc
+    assert "<tr><td>text.empty</td><td>2</td></tr>" in doc

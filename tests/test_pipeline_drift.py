@@ -132,3 +132,54 @@ def test_html_report_surfaces_drift(spark, tmp_path):
     path2 = str(tmp_path / "report2.html")
     write_html_report(spark, out2, path2)
     assert "Model drift" not in open(path2).read()
+
+
+def test_killed_state_writer_leaves_nothing_readers_see(spark, tmp_path, monkeypatch):
+    """A state writer killed mid-file leaves a truncated tmp file
+    behind. In drift/, lineage/, metrics/ and cohort_models/ of a
+    finished out dir, that file must be invisible: the HTML report
+    (Spark scans of metrics/ and drift/) and a no-op re-run (pyarrow
+    reads of lineage/ and cohort_models/) both still succeed, and the
+    in-place models snapshot is intact."""
+    import pyarrow.parquet as pq
+
+    from bdqc_spark.plans.pipeline import MODELS_FILE, read_state, write_state
+    from bdqc_spark.plans.report import write_html_report
+
+    out = str(tmp_path / "out")
+    a = generate_clips_df(spark, 200, seed=11)
+    run_pipeline(spark, _bucketed(a), out, input_snapshot="snap-1", all_buckets=BUCKETS)
+    combined = a.unionByName(_shifted(spark, 200, start=200))
+    run_pipeline(spark, _bucketed(combined), out, input_snapshot="snap-2", all_buckets=BUCKETS)
+    models_before = read_state(f"{out}/cohort_models")
+
+    class Killed(Exception):
+        pass
+
+    real_write = pq.write_table
+
+    def killed_mid_write(table, where, **kw):
+        real_write(table, where, **kw)
+        with open(where, "r+b") as f:
+            f.truncate(os.path.getsize(where) // 2)
+        raise Killed
+
+    for state, name in (("drift", None), ("lineage", None), ("metrics", None),
+                        ("cohort_models", MODELS_FILE)):
+        d = f"{out}/{state}"
+        before = set(os.listdir(d))
+        table = read_state(d)
+        with monkeypatch.context() as m:
+            m.setattr(pq, "write_table", killed_mid_write)
+            with pytest.raises(Killed):
+                write_state(d, table, name)
+        assert len(set(os.listdir(d)) - before) == 1, state
+
+    assert read_state(f"{out}/cohort_models").equals(models_before)
+    doc = open(write_html_report(spark, out, str(tmp_path / "report.html"))).read()
+    assert "Model drift vs previous snapshot" in doc
+    assert "<td>400</td>" in doc  # rows_seen: the latest record per bucket
+    res = run_pipeline(
+        spark, _bucketed(combined), out, input_snapshot="snap-2", all_buckets=BUCKETS
+    )
+    assert res.processed_buckets == []

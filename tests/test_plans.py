@@ -13,6 +13,7 @@ that must hold at ANY size, e.g. "no CartesianProduct")."""
 from __future__ import annotations
 
 import importlib
+import re
 
 import pytest
 
@@ -97,7 +98,9 @@ def test_decide_and_explain_share_broadcast_only_plan(spark):
     """decide() and explain_decisions() join the model sides through
     one evaluator: one broadcast for the pivoted deviation models plus
     one per categorical rule, and the profile side is never shuffled
-    into a join."""
+    into a join. Each side is built on the driver from the collected
+    model rows: its build side is a LocalTableScan, never a Python
+    RDD (`Scan ExistingRDD`)."""
     from bdqc_spark.plans.decide import decide
     from bdqc_spark.plans.explain import explain_decisions
     from bdqc_spark.plans.models import fit_cohort_models
@@ -106,9 +109,13 @@ def test_decide_and_explain_share_broadcast_only_plan(spark):
     from bdqc_spark.synth.clips import generate_clips_df
 
     profiles = profile_clips(generate_clips_df(spark, 60, seed=5))
-    models = spark.createDataFrame(fit_cohort_models(profiles).collect())
+    models = fit_cohort_models(profiles).collect()
     for df in (decide(profiles, models), explain_decisions(profiles, models)):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("BroadcastHashJoin") == 1 + len(CATEGORICAL_RULES), plan
         for node in ("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct"):
             assert node not in plan, plan
+        # each build side is the exchange's one child: a LocalTableScan
+        # leaf, so no Python RDD (`Scan ExistingRDD`) sits under it
+        children = re.findall(r"BroadcastExchange .*\n[ :]*\+- (\w+)", plan)
+        assert children == ["LocalTableScan"] * (1 + len(CATEGORICAL_RULES)), plan

@@ -101,7 +101,7 @@ def test_stream_decide_matches_batch(spark, tmp_path):
     clips = generate_clips_df(spark, 300, seed=11)
     profiles = profile_clips(clips)
     models = spark.createDataFrame(fit_cohort_models(profiles).collect())
-    batch_dec = decide(profiles, models).toPandas().sort_values("clip_id").reset_index(drop=True)
+    batch_dec = decide(profiles, models.collect()).toPandas().sort_values("clip_id").reset_index(drop=True)
 
     out = str(tmp_path / "stream_out")
     ckpt = str(tmp_path / "ckpt")
