@@ -24,14 +24,19 @@ pyarrow to a hidden `.<name>.tmp` and `os.replace`s it into place, and
 `read_state` reads a table back. A killed writer leaves only the
 dot-file, which Spark, pyarrow and `read_state` all skip.
 
-Resume = read lineage, anti-join completed buckets (J5), process the
-remainder. Writes use dynamic partition overwrite so a re-run of a
-half-written bucket is idempotent; rows are sorted by clip_id within
-each bucket so re-runs produce content-identical decisions.
+Resume = read lineage, skip completed buckets, process the
+remainder. Within a pending bucket stage A profiles only the clips
+whose clip_id profiles/ does not hold yet (J5's left-anti semantics).
+Writes use dynamic partition overwrite so a re-run of a half-written
+bucket is idempotent; rows are sorted by clip_id within each bucket
+so re-runs produce content-identical decisions.
 
 Scale shape: stage A is map-only over pending buckets (bytes never
-leaves it); stage B shuffles only the tiny flat projection of
-profile scalars; stage C is a broadcast join + map-side writes.
+leaves it). Over a plain manifest scan, fresh, resume and incremental
+runs alike, each task reads its own data files with pyarrow and
+applies the clip_id key filter there: no JVM scan, join or shuffle.
+Stage B shuffles only the tiny flat projection of profile scalars;
+stage C is a broadcast join + map-side writes.
 """
 
 from __future__ import annotations
@@ -249,66 +254,61 @@ def run_pipeline(
     # ---- Stage A: profile pending buckets (checkpointed, incremental) ----
     # Reference semantics (bdqc entry point 2, SURVEY.md §3.1): an
     # incremental run computes signatures ONLY for new files, refits
-    # models over all, recomputes outliers. Here: clips not yet in the
-    # profiles table (left-anti on clip_id, J5) are profiled and
-    # APPENDED. This is also what makes the stage idempotent at clip
-    # granularity: a crashed append leaves its output invisible
-    # (uncommitted _temporary files), so a rerun's anti-join picks up
-    # exactly the missing clips — no duplicates, no lost work.
+    # models over all, recomputes outliers. Here: clips whose clip_id
+    # is not yet in the profiles table (J5's left-anti semantics) are
+    # profiled and APPENDED. This is also what makes the stage
+    # idempotent at clip granularity: a crashed append leaves its
+    # output invisible (uncommitted _temporary files), so a rerun's
+    # key filter picks up exactly the missing clips — no duplicates,
+    # no lost work.
     t0 = time.time()
     done_profile = _completed(lineage_dir, input_snapshot, "profiled")
     pending = [b for b in all_buckets if b not in done_profile]
     attempt = 2 if done_profile else 1  # informational (resume marker)
     # Fresh run (no prior profiles on disk, every bucket pending): the
-    # repartitioned stage-A output is locally checkpointed and handed
-    # straight to stages B and C, so the profile table is scanned from
-    # memory — no parquet re-read job in B, no second shuffle in C.
-    # Those are fixed costs on the serial path of every run (~2-4s at
-    # 8 cores), which is exactly what caps the N-vs-4N ratio. Resume
-    # and incremental runs keep the parquet path: the cache would hold
-    # only the newly profiled rows, not the table.
+    # stage-A output is locally checkpointed and handed straight to
+    # stages B and C, so the profile table is scanned from memory — no
+    # parquet re-read job in B, no second shuffle in C. Those are
+    # fixed costs on the serial path of every run (~2-4s at 8 cores),
+    # which is exactly what caps the N-vs-4N ratio. Resume and
+    # incremental runs read profiles/ back: the cache would hold only
+    # the newly profiled rows, not the table.
     fresh_run = not os.path.isdir(profiles_dir) and list(pending) == list(all_buckets)
     prof_cached = None
     if pending:
         from bdqc_spark.plans.profile import direct_scan_files, profile_clips_direct
 
-        to_profile = clips.where(F.col("bucket").isin(pending))
-        # Direct-read fast path (fresh runs over a plain manifest
-        # scan): each task reads its own data file with pyarrow, so
-        # the `bytes` column never crosses the JVM scan or the
-        # JVM→Python Arrow socket (~90% of the old stage-A cost,
-        # measured — see profile_clips_direct). Resume/incremental
-        # runs need the clip-level anti-join and keep the DataFrame
-        # path; non-scan inputs (e.g. with_bucket) fall back too.
-        direct_files = direct_scan_files(clips, pending) if not os.path.isdir(profiles_dir) else None
-        if os.path.isdir(profiles_dir):
-            existing = spark.read.parquet(profiles_dir).select("clip_id")
-            to_profile = to_profile.join(existing, on="clip_id", how="left_anti")
         # Both branches sort by ("bucket", "clip_id"): a partition may
         # hold several buckets, and that order is the ordering the
         # partitionBy("bucket") write requires, so the write adds no
         # sort of its own and each bucket gets exactly one
         # clip_id-sorted file per run (a clip_id-only sort is
         # re-sorted by bucket at the write and loses its order).
-        if direct_files:
-            # k = min(|buckets|, cores) tasks, whole buckets per task:
-            # the stage-A output is ALREADY bucket-aligned (no bucket
-            # spans two partitions), so a repartition shuffle of the
-            # whole profile table (scalars + transcripts) would be
-            # redundant — guide §2.4, remove shuffles outright where
-            # the data is already partitioned as needed
-            prof = profile_clips_direct(spark, direct_files, clips).sortWithinPartitions(
+        direct_files = direct_scan_files(clips, pending)
+        if direct_files is not None:
+            # Every run over a plain manifest scan: each task reads its
+            # own data files with pyarrow and drops the clip ids the
+            # committed profile files hold (see profile_clips_direct),
+            # so `bytes` never crosses the JVM and there is no JVM
+            # anti-join. Whole buckets per task: the output is ALREADY
+            # bucket-aligned, so a repartition shuffle would be
+            # redundant (guide §2.4).
+            profiled = glob.glob(os.path.join(profiles_dir, "bucket=*", "*.parquet"))
+            prof = profile_clips_direct(spark, direct_files, clips, profiled).sortWithinPartitions(
                 "bucket", "clip_id"
             )
         else:
-            # This shuffle moves only profile SCALARS (bytes was
-            # consumed map-side) and is load-bearing: it fixes the
-            # profiles layout at one well-sized file per bucket,
-            # which is what keeps the downstream stages parallel —
-            # the profile table is so small on disk that a size-based
-            # scan of an uncontrolled layout coalesces to 1-3 tasks
-            # (measured: A/B probe of a map-only write cost +10s on
-            # stages B+C at 8 cores).
+            # Non-scan inputs (with_bucket frames, read_incremental's
+            # merge-on-read tombstone filter, any filtered frame): the
+            # JVM scan and a left-anti join on clip_id. The shuffle
+            # moves only profile SCALARS and fixes one well-sized file
+            # per bucket, which keeps the downstream stages parallel
+            # (measured: a map-only write cost +10s on stages B+C at 8
+            # cores).
+            to_profile = clips.where(F.col("bucket").isin(pending))
+            if os.path.isdir(profiles_dir):
+                existing = spark.read.parquet(profiles_dir).select("clip_id")
+                to_profile = to_profile.join(existing, on="clip_id", how="left_anti")
             prof = (
                 profile_clips(to_profile)
                 .repartition(len(all_buckets), "bucket")
@@ -349,12 +349,16 @@ def run_pipeline(
     models_current = bool(_completed(lineage_dir, input_snapshot, models_status))
     # Fresh run: the profile table IS the cached stage-A output — no
     # parquet re-read job (the cache was materialized by A's write).
-    profiles = prof_cached if prof_cached is not None else spark.read.parquet(profiles_dir)
+    # Otherwise profiles/ is read only when B refits or C has work: a
+    # no-op re-run submits no Spark job.
+    profiles = prof_cached
     models_rows = _read_models_snapshot(models_dir) if not pending and models_current else None
     if models_rows is None:
         # hold the PREVIOUS snapshot (if any) across the overwrite so
         # stage B2 can diff old vs new (bdqc's temporal QC)
         old_models_rows = _read_models_snapshot(models_dir)
+        if profiles is None:
+            profiles = spark.read.parquet(profiles_dir)
         models_rows = collect_cohort_models(
             profiles, exact=exact_models, assume_cached=prof_cached is not None
         )
@@ -410,6 +414,8 @@ def run_pipeline(
         # fresh-run cached path the stage-A output already holds each
         # bucket in exactly one of its min(|buckets|, cores)
         # partitions — reuse that partitioning, no second shuffle.
+        if profiles is None:
+            profiles = spark.read.parquet(profiles_dir)
         src = profiles.where(F.col("bucket").isin(pending_d))
         if prof_cached is None:
             src = src.repartition(len(all_buckets), "bucket")

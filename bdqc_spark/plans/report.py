@@ -11,36 +11,29 @@ from __future__ import annotations
 import html
 import time
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+from bdqc_spark.plans.pipeline import read_state
 
 
-def write_html_report(spark: SparkSession, out_dir: str, path: str) -> str:
+def write_html_report(out_dir: str, path: str) -> str:
     # Metrics are appended per attempt and recomputed per snapshot —
     # summing every record double-counts after a resume or an
-    # incremental run. Take the LATEST record per partition_id.
-    all_metrics = spark.read.parquet(f"{out_dir}/metrics")
-    if "written_at" in all_metrics.columns:
-        from pyspark.sql.window import Window
-
-        order = [F.col("written_at").desc()]
-        if "attempt" in all_metrics.columns:
-            # tiebreaker for timestamps landing in the same tick
-            order.append(F.col("attempt").desc())
-        w = Window.partitionBy("partition_id").orderBy(*order)
-        all_metrics = (
-            all_metrics.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    metrics = all_metrics.orderBy("partition_id").collect()
-    rows_seen = sum(r.rows_seen for r in metrics)
-    rows_dropped = sum(r.rows_dropped for r in metrics)
+    # incremental run. Take the LATEST record per partition_id,
+    # ordered by (written_at, attempt): the attempt breaks ties of
+    # timestamps landing in the same tick.
+    latest: dict[int, dict] = {}
+    for r in sorted(
+        read_state(f"{out_dir}/metrics").to_pylist(),
+        key=lambda r: (r["written_at"], r["attempt"]),
+    ):
+        latest[r["partition_id"]] = r
+    metrics = [latest[k] for k in sorted(latest)]
+    rows_seen = sum(r["rows_seen"] for r in metrics)
+    rows_dropped = sum(r["rows_dropped"] for r in metrics)
     by_rule: dict[str, int] = {}
     for r in metrics:
-        for k, v in (r.dropped_by_rule or {}).items():
+        for k, v in r["dropped_by_rule"] or ():
             by_rule[k] = by_rule.get(k, 0) + v
-    scrub_edits = sum(r.scrub_edits for r in metrics)
+    scrub_edits = sum(r["scrub_edits"] for r in metrics)
 
     def table(headers, rows):
         h = "".join(f"<th>{html.escape(str(x))}</th>" for x in headers)
@@ -54,27 +47,22 @@ def write_html_report(spark: SparkSession, out_dir: str, path: str) -> str:
     # LATEST comparison's flagged rows, strongest first. Absent on
     # fresh runs (no previous snapshot to compare against).
     drift_section = ""
-    import os
-
-    drift_dir = f"{out_dir}/drift"
-    if os.path.isdir(drift_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(drift_dir)
-    ):
-        d = spark.read.parquet(drift_dir)
-        latest = d.agg(F.max("written_at")).collect()[0][0]
-        top = (
-            d.where((F.col("written_at") == latest) & F.col("drifted"))
-            .orderBy(F.desc("metric"))
-            .limit(20)
-            .collect()
-        )
-        n_compared = d.where(F.col("written_at") == latest).count()
+    drift = read_state(f"{out_dir}/drift")
+    if drift is not None:
+        rows = drift.to_pylist()
+        latest_at = max(r["written_at"] for r in rows)
+        compared = [r for r in rows if r["written_at"] == latest_at]
+        top = sorted(
+            (r for r in compared if r["drifted"]),
+            key=lambda r: (r["metric"] is None, -(r["metric"] or 0.0)),
+        )[:20]
+        n_compared = len(compared)
         drift_section = f"""
 <h2>Model drift vs previous snapshot</h2>
 <p>{len(top)} flagged of {n_compared} compared (cohort, attribute) cells</p>
 {table(['kind', 'codec', 'lang', 'attribute', 'n_old', 'n_new', 'metric'],
-       [[r.kind, r.codec, r.lang_pred, r.attribute, r.n_old, r.n_new,
-         f"{r.metric:.3f}" if r.metric is not None else ""] for r in top])}"""
+       [[r["kind"], r["codec"], r["lang_pred"], r["attribute"], r["n_old"], r["n_new"],
+         f"{r['metric']:.3f}" if r["metric"] is not None else ""] for r in top])}"""
 
     doc = f"""<!doctype html><html><head><meta charset="utf-8">
 <title>bdqc-spark QC report</title></head><body>
@@ -87,7 +75,8 @@ def write_html_report(spark: SparkSession, out_dir: str, path: str) -> str:
 {table(['rule', 'count'], sorted(by_rule.items(), key=lambda kv: -kv[1]))}
 <h2>Per-partition</h2>
 {table(['partition', 'rows_seen', 'rows_dropped', 'scrub_edits', 'wall_ms'],
-       [[r.partition_id, r.rows_seen, r.rows_dropped, r.scrub_edits, r.wall_ms] for r in metrics])}
+       [[r["partition_id"], r["rows_seen"], r["rows_dropped"], r["scrub_edits"], r["wall_ms"]]
+        for r in metrics])}
 {drift_section}
 </body></html>"""
     with open(path, "w") as f:

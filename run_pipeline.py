@@ -322,7 +322,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.html_report:
         from bdqc_spark.plans.report import write_html_report
 
-        report_path = write_html_report(spark, args.out, args.html_report)
+        report_path = write_html_report(args.out, args.html_report)
     print(
         json.dumps(
             {

@@ -76,3 +76,30 @@ def sorted_bucket_files():
         return out
 
     return check
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as ids:`` runs the block under a job group
+    of its own; after the block, ``ids`` lists the Spark jobs it
+    submitted, read from the status store once the listener bus has
+    drained."""
+    import contextlib
+    import uuid
+
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def jobs():
+        group = f"spark_jobs-{uuid.uuid4().hex}"
+        ids: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield ids
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return jobs

@@ -134,10 +134,11 @@ def test_par_gate(spark, sf_dir_smoke=None):
     assert par.count() == d.count()
 
 
-def test_direct_gate_falls_back_on_evolved_schema(spark, tbl, tmp_path):
-    """A file written before an added column must disqualify the
-    direct path (the worker-side column projection cannot surface the
-    missing column as null the way the JVM scan does)."""
+def test_direct_profile_fills_evolved_columns_with_nulls(spark, tbl, tmp_path):
+    """Files written before an append added a column pass the gate:
+    the task fills the column they lack with nulls of its declared
+    type, as the JVM scan surfaces it, so the values equal
+    profile_clips over the evolved table."""
     import shutil
 
     root = str(tmp_path / "evolved")
@@ -149,5 +150,11 @@ def test_direct_gate_falls_back_on_evolved_schema(spark, tbl, tmp_path):
     t.append(df)  # append with a new column evolves the schema
     clips = t.read(spark)
     assert "rating" in clips.columns
-    # old files lack `rating` -> gate refuses, pipeline falls back
-    assert direct_scan_files(clips, None) is None
+    files = direct_scan_files(clips, None)
+    assert files and len(files) == len(clips.inputFiles())
+    a = profile_clips_direct(spark, files, clips).orderBy("clip_id").collect()
+    b = profile_clips(clips).orderBy("clip_id").collect()
+    assert len(a) == len(b) == 280
+    assert sum(r.rating is None for r in a) == 240
+    for ra, rb in zip(a, b):
+        assert ra == rb

@@ -43,17 +43,25 @@ def test_html_report(spark, tmp_path):
     tbl.append(generate_clips_df(spark, 200, seed=3))
     out = str(tmp_path / "out")
     run_pipeline(spark, tbl.read(spark), out)
-    path = write_html_report(spark, out, str(tmp_path / "report.html"))
+    path = write_html_report(out, str(tmp_path / "report.html"))
     doc = open(path).read()
     assert "bdqc-spark QC report" in doc
     assert "rows_seen" in doc and "Dropped by rule" in doc
 
 
-def test_html_report_no_double_count_after_incremental(spark, tmp_path):
+def test_html_report_no_double_count_after_incremental(spark, tmp_path, spark_jobs):
     """ADVICE r1 (low): metrics are appended per attempt; after an
     incremental snapshot the report must total the LATEST record per
-    partition, not the sum of every attempt."""
+    partition, not the sum of every attempt. The report reads the
+    KB-sized state tables on the driver: it submits no Spark job, and
+    its totals and drift section equal what the decisions and drift
+    tables hold."""
     import re
+
+    import pyarrow.dataset as ds
+    import pyarrow.compute as pc
+
+    from bdqc_spark.plans.pipeline import read_state
 
     from bdqc_spark.plans.pipeline import run_pipeline
     from bdqc_spark.plans.report import write_html_report
@@ -68,10 +76,22 @@ def test_html_report_no_double_count_after_incremental(spark, tmp_path):
     s_b = tbl.append(generate_clips_df(spark, 50, seed=5, start=150))
     run_pipeline(spark, tbl.read(spark), out, input_snapshot=s_b)
 
-    doc = open(write_html_report(spark, out, str(tmp_path / "r.html"))).read()
+    with spark_jobs() as jobs:
+        doc = open(write_html_report(out, str(tmp_path / "r.html"))).read()
+    assert jobs == []
     m = re.search(r"<h2>Totals</h2>.*?<tr><td>(\d+)</td>", doc, re.S)
     assert m, doc[:500]
     assert int(m.group(1)) == 200  # not 150 + 200 = 350
+
+    dec = ds.dataset(f"{out}/decisions", format="parquet", partitioning="hive").to_table()
+    seen = dec.num_rows
+    dropped = seen - pc.sum(dec.column("keep")).as_py()
+    edits = pc.sum(dec.column("n_scrub_edits")).as_py()
+    totals = f"<tr><td>{seen}</td><td>{dropped}</td><td>{dropped / seen:.4f}</td><td>{edits}</td></tr>"
+    assert totals in doc
+    drift = read_state(f"{out}/drift").to_pylist()
+    flagged = sum(bool(r["drifted"]) for r in drift)
+    assert f"<p>{min(flagged, 20)} flagged of {len(drift)} compared" in doc
 
 
 def test_run_pipeline_cli_html_report_flag(spark, tmp_path, run_cli):

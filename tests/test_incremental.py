@@ -5,7 +5,9 @@ refit over all, decisions recomputed over all."""
 from __future__ import annotations
 
 import glob
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from bdqc_spark.plans.pipeline import run_pipeline
@@ -215,3 +217,109 @@ def test_schema_evolution_add_column(spark, tmp_path):
     assert got.where(F.col("speaker_id").isNotNull()).count() == 40
     # the pre-evolution snapshot has no such column
     assert "speaker_id" not in tbl.read(spark, snapshot_id=s1).columns
+
+
+def _rows(spark, path, cols):
+    return (
+        spark.read.parquet(path).select(*cols).toPandas().sort_values("clip_id").reset_index(drop=True)
+    )
+
+
+_PROFILE_COLS = ["clip_id", "bucket", "sr_hz", "dur_ms", "codec", "transcript", "audio", "text", "lang"]
+_DECISION_COLS = ["clip_id", "bucket", "keep", "rule_hits", "scrubbed_transcript"]
+
+
+def _refuse_jvm_transport(monkeypatch):
+    """Make stage A's JVM transport, and any driver footer read, raise:
+    a run that completes took the direct path without opening a data
+    file on the driver."""
+    import pyarrow.parquet as pq
+
+    import bdqc_spark.plans.pipeline as pipeline
+
+    def refuse(*_args, **_kw):
+        raise AssertionError("stage A left the direct path")
+
+    monkeypatch.setattr(pipeline, "profile_clips", refuse)
+    monkeypatch.setattr(pq, "read_schema", refuse)
+
+
+@pytest.fixture(scope="module")
+def grown(spark, tmp_path_factory):
+    """A 4-bucket table QC'd at 300 clips (`base_out`, snapshot s_a),
+    then grown by 100 clips (s_b). Exact models, so decisions do not
+    depend on the profile layout or history."""
+    d = tmp_path_factory.mktemp("grown")
+    tbl = IcebergishTable(str(d / "tbl"), num_buckets=4)
+    s_a = tbl.append(generate_clips_df(spark, 300, seed=61))
+    run_pipeline(spark, tbl.read(spark), str(d / "base_out"), input_snapshot=s_a, exact_models=True)
+    s_b = tbl.append(generate_clips_df(spark, 100, seed=61, start=300))
+    return {"tbl": tbl, "s_b": s_b, "base_out": str(d / "base_out")}
+
+
+def test_incremental_direct_path_resumes_and_equals_jvm_path(spark, grown, tmp_path, monkeypatch):
+    """An incremental run over a plain table scan profiles the new
+    clips worker-side, key-filtered in the task: no JVM transport and
+    no driver footer read. It is killed after stage A's profiles
+    append committed but before its lineage record, so the resumed
+    run finds every bucket pending with the new rows already in
+    profiles/ and must key-filter them out. The result has no
+    duplicate clip_id, and its profiles/ and decisions/ equal, row for
+    row, the JVM path's (a filtered frame: JVM scan, left-anti join,
+    repartition) from the same base out dir."""
+    import bdqc_spark.plans.pipeline as pipeline
+
+    tbl, s_b = grown["tbl"], grown["s_b"]
+    out, out_jvm = str(tmp_path / "out"), str(tmp_path / "out_jvm")
+    shutil.copytree(grown["base_out"], out)
+    shutil.copytree(grown["base_out"], out_jvm)
+    run_pipeline(
+        spark, tbl.read(spark).where(F.lit(True)), out_jvm, input_snapshot=s_b,
+        exact_models=True, all_buckets=tbl.bucket_ids(),
+    )
+
+    real = pipeline.lineage_table
+
+    def crash_at_profiled(buckets, snapshot, attempt, started_at, status):
+        if status == "profiled":
+            raise RuntimeError("killed before the profiled record")
+        return real(buckets, snapshot, attempt, started_at, status)
+
+    with monkeypatch.context() as m:
+        _refuse_jvm_transport(m)
+        m.setattr(pipeline, "lineage_table", crash_at_profiled)
+        with pytest.raises(RuntimeError, match="killed before"):
+            run_pipeline(spark, tbl.read(spark), out, input_snapshot=s_b, exact_models=True)
+    assert spark.read.parquet(f"{out}/profiles").count() == 400
+    with monkeypatch.context() as m:
+        _refuse_jvm_transport(m)
+        run_pipeline(spark, tbl.read(spark), out, input_snapshot=s_b, exact_models=True)
+
+    for d, cols in (("profiles", _PROFILE_COLS), ("decisions", _DECISION_COLS)):
+        a, b = _rows(spark, f"{out}/{d}", cols), _rows(spark, f"{out_jvm}/{d}", cols)
+        assert len(a) == 400 and a.clip_id.is_unique, d
+        assert a.equals(b), d
+
+
+def test_rerun_after_rebucket_profiles_no_clip_twice(spark, grown, tmp_path):
+    """A rebucket moves clip ids between buckets. A run over the
+    rebucketed snapshot into an out dir of the old layout must profile
+    only the clips it lacks (profiles/ keeps one row per clip_id), and
+    its (clip_id, keep) equals a fresh run's over that snapshot."""
+    root, out, out_fresh = (str(tmp_path / n) for n in ("tbl", "out", "out_fresh"))
+    shutil.copytree(grown["tbl"].root, root)
+    shutil.copytree(grown["base_out"], out)
+    tbl = IcebergishTable(root, num_buckets=4)
+    s_c = tbl.rebucket(spark, 8)
+    assert tbl.bucket_ids() == list(range(8))
+    for o in (out, out_fresh):
+        run_pipeline(
+            spark, tbl.read(spark), o, input_snapshot=s_c, exact_models=True,
+            all_buckets=tbl.bucket_ids(),
+        )
+
+    prof = _rows(spark, f"{out}/profiles", ["clip_id"])
+    assert len(prof) == 400 and prof.clip_id.is_unique
+    a = _rows(spark, f"{out}/decisions", ["clip_id", "keep"])
+    b = _rows(spark, f"{out_fresh}/decisions", ["clip_id", "keep"])
+    assert a.equals(b)

@@ -135,9 +135,16 @@ def test_resume_after_failure_is_identical(spark, clips_table, pipeline_out, tmp
     assert (lineage.status == "profiled").sum() == 8
 
 
-def test_rerun_noop_after_completion(spark, clips_table, pipeline_out):
-    res = run_pipeline(spark, clips_table.read(spark), pipeline_out)
+def test_rerun_noop_after_completion(spark, clips_table, pipeline_out, spark_jobs):
+    # with the manifest's bucket list, a no-op re-run submits no Spark
+    # job: lineage and the models snapshot are driver-side reads, and
+    # profiles/ is read only when B refits or C has pending buckets
+    with spark_jobs() as jobs:
+        res = run_pipeline(
+            spark, clips_table.read(spark), pipeline_out, all_buckets=clips_table.bucket_ids()
+        )
     assert res.processed_buckets == []
+    assert jobs == []
 
 
 def test_iceberg_snapshot_and_pruning(spark, clips_table):
@@ -287,7 +294,7 @@ def test_metrics_files_of_both_writers_read_as_one_table(spark, tmp_path):
     assert spark.read.parquet(metrics_dir).schema == pinned
 
     path = str(tmp_path / "report.html")
-    doc = open(write_html_report(spark, out, path)).read()
+    doc = open(write_html_report(out, path)).read()
     # rows_seen, rows_dropped, drop_rate, scrub_edits over both files
     assert "<tr><td>8</td><td>4</td><td>0.5000</td><td>4</td></tr>" in doc
     assert "<tr><td>audio.silent</td><td>3</td></tr>" in doc

@@ -115,7 +115,7 @@ def test_html_report_surfaces_drift(spark, tmp_path):
     run_pipeline(spark, _bucketed(combined), out, input_snapshot="snap-2", all_buckets=BUCKETS)
 
     path = str(tmp_path / "report.html")
-    write_html_report(spark, out, path)
+    write_html_report(out, path)
     html_doc = open(path).read()
     assert "Model drift vs previous snapshot" in html_doc
     assert "dur_ms" in html_doc
@@ -130,7 +130,7 @@ def test_html_report_surfaces_drift(spark, tmp_path):
         all_buckets=BUCKETS,
     )
     path2 = str(tmp_path / "report2.html")
-    write_html_report(spark, out2, path2)
+    write_html_report(out2, path2)
     assert "Model drift" not in open(path2).read()
 
 
@@ -138,9 +138,9 @@ def test_killed_state_writer_leaves_nothing_readers_see(spark, tmp_path, monkeyp
     """A state writer killed mid-file leaves a truncated tmp file
     behind. In drift/, lineage/, metrics/ and cohort_models/ of a
     finished out dir, that file must be invisible: the HTML report
-    (Spark scans of metrics/ and drift/) and a no-op re-run (pyarrow
-    reads of lineage/ and cohort_models/) both still succeed, and the
-    in-place models snapshot is intact."""
+    (reads of metrics/ and drift/) and a no-op re-run (reads of
+    lineage/ and cohort_models/) both still succeed, and the in-place
+    models snapshot is intact."""
     import pyarrow.parquet as pq
 
     from bdqc_spark.plans.pipeline import MODELS_FILE, read_state, write_state
@@ -176,7 +176,7 @@ def test_killed_state_writer_leaves_nothing_readers_see(spark, tmp_path, monkeyp
         assert len(set(os.listdir(d)) - before) == 1, state
 
     assert read_state(f"{out}/cohort_models").equals(models_before)
-    doc = open(write_html_report(spark, out, str(tmp_path / "report.html"))).read()
+    doc = open(write_html_report(out, str(tmp_path / "report.html"))).read()
     assert "Model drift vs previous snapshot" in doc
     assert "<td>400</td>" in doc  # rows_seen: the latest record per bucket
     res = run_pipeline(
