@@ -3,11 +3,6 @@
 Reference parity (reconstructed, SURVEY.md §2.A — /root/reference is an
 empty mount, so citations are repo paths without line numbers):
 
-- ``fit_numeric_models``    ≙ bdqc DataModel fit for numeric attributes
-  (lib/BDQC/DataModel/Scalar.pm: robust center+spread per
-  (fileType, attribute)); here one shuffle-aggregated pass per cohort
-  plus a second pass for MAD (median absolute deviation), since MAD
-  needs the median first.
 - ``fit_categorical_models``≙ value-histogram fit for string attributes
   (same module) — rare values are outlier suspects.
 - ``robust_z``              ≙ the KB.pm getOutliers yardstick: the
@@ -20,13 +15,9 @@ empty mount, so citations are repo paths without line numbers):
 - ``infer_column_types``    ≙ FileSignature/Tabular.pm per-column type
   inference (int/real/string/empty fractions) that drives model choice.
 
-Scale notes: model fitting shuffles once on the cohort keys with
-map-side partial aggregation (Catalyst does partial+final
-automatically). The MAD pass joins the per-cohort median back
-(broadcast — the model side is |cohorts|×|attrs| rows, KBs) and
-re-aggregates; this is the unavoidable second pass of any exact-ish
-robust spread. At 100 TB the fact table is never shuffled more than
-these two aggregation passes, and scoring is shuffle-free.
+Numeric cohort models (median, MAD, quantiles) are fit by
+plans/models.py: one grouped bin-count aggregate, with the statistics
+derived on the driver from the collected counts.
 """
 
 from __future__ import annotations
@@ -61,79 +52,6 @@ def robust_z_scalar(x: float | None, med: float | None, mad: float | None) -> fl
             return None
         return abs(x - med) / (MAD_TO_SIGMA * mad)
     return 0.0 if x is not None and x == med else math.inf
-
-
-def fit_numeric_models(
-    df: DataFrame,
-    cohort_cols: list[str],
-    attr_cols: list[str],
-    exact: bool = False,
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Per (cohort, attribute): n, median, MAD, p01/p25/p75/p99, mean, std.
-
-    Long-form output: one row per (cohort, attribute) — the shape of
-    bdqc's collated models, and what plans/decide.py broadcasts.
-
-    `exact=True` uses `median`/`percentile` (exact, for oracle-checked
-    tests); default uses `percentile_approx` (mergeable sketch, the
-    100 TB path).
-
-    Execution shape: the fact table is aggregated WIDE (all
-    attributes in one groupBy pass — one scan, one shuffle), and the
-    tiny per-cohort result is unpivoted to long form afterwards.
-    Melting before aggregating would multiply the shuffled/scanned
-    row count by |attrs| for zero benefit.
-
-    The whole plan is ONE parameterized spark.sql() call: building it
-    expression-by-expression costs ~200 py4j round trips (~1s of
-    driver time, measured) — pure serial cost paid on every pipeline
-    run at every cluster size; a single SQL string parses JVM-side in
-    one trip. The physical plan is identical.
-    """
-    if exact:
-        pct = lambda c, p: f"percentile({c}, {p})"  # noqa: E731
-    else:
-        pct = lambda c, p: f"percentile_approx({c}, {p}, {accuracy})"  # noqa: E731
-
-    cohorts = ", ".join(f"`{c}`" for c in cohort_cols)
-    cast_cols = ", ".join(f"CAST(`{c}` AS DOUBLE) AS `{c}`" for c in attr_cols)
-    wide_aggs = ",\n    ".join(
-        f"COUNT(`{c}`) AS `{c}__n`, "
-        f"{pct(f'`{c}`', 0.5)} AS `{c}__median`, "
-        f"{pct(f'`{c}`', 0.01)} AS `{c}__p01`, "
-        f"{pct(f'`{c}`', 0.25)} AS `{c}__p25`, "
-        f"{pct(f'`{c}`', 0.75)} AS `{c}__p75`, "
-        f"{pct(f'`{c}`', 0.99)} AS `{c}__p99`, "
-        f"AVG(`{c}`) AS `{c}__mean`, "
-        f"STDDEV_SAMP(`{c}`) AS `{c}__std`"
-        for c in attr_cols
-    )
-    # Pass 2: MAD needs |x − median| per row → broadcast the medians
-    # back (tiny) and aggregate wide again.
-    med_cols = ", ".join(f"`{c}__median` AS `{c}__med`" for c in attr_cols)
-    mad_aggs = ", ".join(
-        f"{pct(f'abs(c.`{a}` - m.`{a}__med`)', 0.5)} AS `{a}__mad`" for a in attr_cols
-    )
-    stats = ["n", "median", "mad", "p01", "p25", "p75", "p99", "mean", "std"]
-    stack_rows = ", ".join(
-        "'" + c + "', " + ", ".join(f"`{c}__{s}`" for s in stats) for c in attr_cols
-    )
-    query = f"""
-WITH casted AS (SELECT {cohorts}, {cast_cols} FROM {{df}}),
-wide AS (SELECT {cohorts}, {wide_aggs} FROM casted GROUP BY {cohorts}),
-mads AS (
-  SELECT /*+ BROADCAST(m) */ {', '.join('c.`' + k + '`' for k in cohort_cols)}, {mad_aggs}
-  FROM casted c JOIN (SELECT {cohorts}, {med_cols} FROM wide) m USING ({cohorts})
-  GROUP BY {', '.join('c.`' + k + '`' for k in cohort_cols)}
-)
-SELECT * FROM (
-  SELECT {cohorts},
-         stack({len(attr_cols)}, {stack_rows}) AS (attribute, {', '.join(stats)})
-  FROM wide JOIN mads USING ({cohorts})
-) WHERE n > 0
-"""
-    return df.sparkSession.sql(query, df=df)
 
 
 def fit_categorical_models(

@@ -3,20 +3,33 @@
 bdqc analogue: collateSignatures + calcModels (lib/BDQC/KB.pm →
 DataModel/Scalar.pm, reconstructed): per (fileType, attribute)
 robust center+spread. Here the cohort is (codec, lang_pred) and the
-fit is two shuffle-aggregated passes (quantiles, then MAD) via
-operators.stats.fit_numeric_models. Output is the `cohort_models`
-state table (FIXTURES.md §3) — a few hundred rows regardless of
-input scale, which is why scoring can broadcast it.
+fit is ONE grouped aggregate over the profiles: every row is stacked
+into (codec, lang_pred, attribute, bin, key) and counted per bin,
+with MIN(x) as the bin's representative. The driver collects the bin
+counts (a few thousand rows) and derives n, median, MAD, p01-p99 and
+the categorical value histograms from them. Output is the
+`cohort_models` state table (FIXTURES.md §3) — a few hundred rows
+regardless of input scale, which is why scoring can broadcast it.
+
+Binning (DDSketch's log mapping: Masson, Rim and Lee, VLDB 2019):
+x = 0 is bin 0, any other x is bin ±(⌈ln|x| / ln γ⌉ + 2³²) with
+γ = (1+α)/(1−α), so every value in a bin lies within relative α of
+every other and the bins are ordered like their values. A model has
+at most min(distinct values, ln(max/min)/ln γ + 1) bins per sign.
+`exact=True` bins by the value itself (a distinct-value histogram).
+Counts are integers and MIN is order-free, so the fit is a pure
+function of the profile multiset: the same model for any
+partitioning, merge order or run history.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+
+import numpy as np
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
-from pyspark.sql import Column
-
-from bdqc_spark.operators.stats import fit_numeric_models
 from bdqc_spark.plans.rules import CPS_MIN_DUR_MS
 
 COHORT_COLS = ["codec", "lang_pred"]
@@ -25,6 +38,24 @@ COHORT_COLS = ["codec", "lang_pred"]
 # modeled in log space — see plans/rules.py PPL_LOG_Z; log_cps is the
 # cross-modal speech-rate axis — see plans/rules.py CPS_LOG_Z.
 MODEL_ATTRS = ["dur_ms", "log_cps", "log_ppl", "rms", "n_tokens"]
+
+# Categorical attributes modeled as within-cohort value histograms
+# (bdqc DataModel for string attributes: rare values are suspects).
+CATEGORICAL_ATTRS = ["sr_hz"]
+
+# Relative accuracy of the default binning. The deviation rules sit at
+# robust-z 6 with anomaly classes injected at z ≳ 25 and the clean
+# tail below z ≈ 5 (FIXTURES.md), so a 2α median error is orders of
+# magnitude inside the decision margin.
+ALPHA = 1e-4
+_LN_GAMMA = math.log((1 + ALPHA) / (1 - ALPHA))
+
+MODEL_FIELDS = (
+    "codec", "lang_pred", "attribute", "n",
+    "median", "mad", "p01", "p25", "p75", "p99", "histogram",
+)
+_ModelRow = Row(*MODEL_FIELDS)
+_QUANTILES = (("p01", 0.01), ("p25", 0.25), ("p75", 0.75), ("p99", 0.99))
 
 
 def log_cps_column(
@@ -44,10 +75,6 @@ def log_cps_column(
         & (n_chars > F.lit(0)),
         F.log(n_chars.cast("double") / speech_sec),
     )
-
-# Categorical attributes modeled as within-cohort value histograms
-# (bdqc DataModel for string attributes: rare values are suspects).
-CATEGORICAL_ATTRS = ["sr_hz"]
 
 
 def _flat_attrs(profiles: DataFrame) -> DataFrame:
@@ -69,77 +96,110 @@ def _flat_attrs(profiles: DataFrame) -> DataFrame:
     )
 
 
-def _fit(flat: DataFrame, exact: bool, accuracy: int) -> DataFrame:
-    numeric = fit_numeric_models(
-        flat, COHORT_COLS, MODEL_ATTRS, exact=exact, accuracy=accuracy
-    ).withColumn("histogram", F.lit(None).cast("map<string,bigint>"))
-
-    # Categorical rows: one per (cohort, attr) with the full value
-    # histogram (exact counts — the histogram is KB-sized per cohort).
-    cats = []
-    for a in CATEGORICAL_ATTRS:
-        # Null attribute values are excluded from the histogram: a null
-        # map key is a runtime error in map_from_entries, and a row
-        # with no value carries no frequency evidence. decide()/
-        # explain() mirror this by not firing the categorical rule on
-        # null values (same convention as unmodeled deviation rows).
-        counts = (
-            flat.where(F.col(a).isNotNull())
-            .groupBy(*COHORT_COLS, a)
-            .agg(F.count(F.lit(1)).alias("cnt"))
+def _bin_counts_sql(exact: bool) -> str:
+    """The one grouped aggregate: (codec, lang_pred, attribute, key,
+    cnt, rep) per bin. Null values are excluded (no evidence; a null
+    map key is also a runtime error downstream). ±inf and NaN clamp
+    into the outermost bins, NaN last, as Spark orders it."""
+    stack_rows = ", ".join(
+        [f"'{a}', `{a}`, CAST(NULL AS STRING)" for a in MODEL_ATTRS]
+        + [f"'{a}', CAST(NULL AS DOUBLE), `{a}`" for a in CATEGORICAL_ATTRS]
+    )
+    n_rows = len(MODEL_ATTRS) + len(CATEGORICAL_ATTRS)
+    if exact:
+        bin_expr = "x"
+    else:
+        bin_expr = (
+            "CASE WHEN x = 0 THEN 0 ELSE (CASE WHEN x < 0 THEN -1 ELSE 1 END) * ("
+            f"CEIL(LEAST(GREATEST(LN(ABS(x)) / {_LN_GAMMA!r}D, -2147483648D), 2147483648D))"
+            " + 4294967296) END"
         )
-        cats.append(
-            counts.groupBy(*COHORT_COLS).agg(
-                F.lit(a).alias("attribute"),
-                F.sum("cnt").alias("n"),
-                F.map_from_entries(
-                    F.collect_list(F.struct(F.col(a).alias("key"), F.col("cnt").alias("value")))
-                ).alias("histogram"),
-            )
-        )
-    out = numeric
-    for c in cats:
-        out = out.unionByName(c, allowMissingColumns=True)
-    return out
+    return f"""
+SELECT codec, lang_pred, attribute, `key`, COUNT(1) AS cnt, MIN(x) AS rep
+FROM (
+  SELECT codec, lang_pred, attribute, x, `key`, {bin_expr} AS bin
+  FROM (SELECT codec, lang_pred, stack({n_rows}, {stack_rows}) AS (attribute, x, `key`) FROM {{flat}})
+  WHERE x IS NOT NULL OR `key` IS NOT NULL
+)
+GROUP BY codec, lang_pred, attribute, bin, `key`
+"""
 
 
-def fit_cohort_models(
-    profiles: DataFrame, exact: bool = False, accuracy: int = 2000
-) -> DataFrame:
-    """profiles → cohort_models(codec, lang_pred, attribute, n, median,
-    mad, p01, p25, p75, p99, mean, std, histogram).
-
-    accuracy=2000 → quantile rank error ≤ 0.05%: the deviation rules
-    sit at robust-z 6 with anomaly classes injected at z ≳ 25 and the
-    clean tail below z ≈ 5 (FIXTURES.md), so sketch noise is orders of
-    magnitude inside the decision margin — while the sketch merge cost
-    on the serial path drops ~3× vs accuracy=10000 (BENCH.md §3).
-    """
-    return _fit(_flat_attrs(profiles), exact, accuracy)
+def _ranked(vals: np.ndarray, cum: np.ndarray, p: float) -> float:
+    """percentile_approx's rule on sorted weighted values: the smallest
+    value whose cumulative count is ≥ max(1, ⌈p·n⌉)."""
+    rank = max(1, math.ceil(p * int(cum[-1])))
+    return float(vals[np.searchsorted(cum, rank)])
 
 
-def collect_cohort_models(
-    profiles: DataFrame, exact: bool = False, accuracy: int = 2000, *, assume_cached: bool
-) -> list:
-    """Fit and collect the KB-sized model table in one pass over the
-    profiles: the flat 8-scalar projection is persisted so the three
-    aggregation branches (wide quantiles, MAD, categorical histogram)
-    scan the profiles table ONCE, then unpersisted.
+def _interpolated(vals: np.ndarray, cum: np.ndarray, p: float) -> float:
+    """Spark's exact `percentile` on sorted weighted values: linear
+    interpolation at (n−1)·p, with its operand order and early
+    returns, so the result is bit-identical."""
+    position = (int(cum[-1]) - 1) * p
+    lower, higher = math.floor(position), math.ceil(position)
+    lo = float(vals[np.searchsorted(cum, lower + 1)])
+    if higher == lower:
+        return lo
+    hi = float(vals[np.searchsorted(cum, higher + 1)])
+    if hi == lo:
+        return lo
+    return (higher - position) * lo + (position - lower) * hi
 
-    Pass ``assume_cached=True`` when `profiles` is itself already
-    materialized (the pipeline's fresh-run path hands in the
-    localCheckpoint'ed stage-A output): the branches then read those
-    blocks directly — persisting a projection OF it wastes storage
-    memory, adds a materialization pass, and (for CacheManager
-    caches) trips Spark's nested InMemoryRelation canonicalization
-    (`key not found: <attr>`)."""
-    from pyspark import StorageLevel
 
+def _numeric_model(reps: list, cnts: list, exact: bool) -> dict:
+    """n, median, MAD and p01-p99 from one attribute's bins."""
+    quantile = _interpolated if exact else _ranked
+    # + 0.0 folds -0.0 into 0.0: the two share a bin, and which one
+    # MIN returns would otherwise depend on row order.
+    vals = np.asarray(reps, dtype=np.float64) + 0.0
+    counts = np.asarray(cnts, dtype=np.int64)
+    order = np.argsort(vals, kind="stable")
+    vals, cum = vals[order], np.cumsum(counts[order])
+    median = quantile(vals, cum, 0.5)
+    dev = np.abs(vals - median)
+    by_dev = np.argsort(dev, kind="stable")
+    return {
+        "n": int(cum[-1]),
+        "median": median,
+        "mad": quantile(dev[by_dev], np.cumsum(counts[order][by_dev]), 0.5),
+        **{name: quantile(vals, cum, p) for name, p in _QUANTILES},
+    }
+
+
+def _sort_key(key: tuple) -> tuple:
+    return tuple((k is None, k or "") for k in key)
+
+
+def fit_cohort_models(profiles: DataFrame, exact: bool = False) -> list:
+    """profiles → the cohort_models rows (codec, lang_pred, attribute,
+    n, median, mad, p01, p25, p75, p99, histogram), sorted by
+    (codec, lang_pred, attribute).
+
+    One Spark aggregate counts the bins; the rows are derived from the
+    collected counts on the driver. A bin's representative is its
+    MIN(x), a real data value rather than the bin centre: robust_z
+    gives +inf when mad = 0 and x ≠ median, so a bin-centre median
+    would make every row of a constant cohort fire. The default fit
+    takes percentile_approx's rank rule over the representatives;
+    `exact=True` interpolates like Spark's `percentile`. MAD is the
+    same rule over |rep − median|, weighted by the bin counts."""
     flat = _flat_attrs(profiles)
-    if not assume_cached:
-        flat = flat.persist(StorageLevel.MEMORY_ONLY)
-    try:
-        return _fit(flat, exact, accuracy).collect()
-    finally:
-        if not assume_cached:
-            flat.unpersist()
+    counts = flat.sparkSession.sql(_bin_counts_sql(exact), flat=flat).toArrow().to_pydict()
+    bins: dict[tuple, tuple[list, list, list]] = {}
+    for codec, lang, attr, key, cnt, rep in zip(
+        *(counts[c] for c in ("codec", "lang_pred", "attribute", "key", "cnt", "rep"))
+    ):
+        reps, keys, cnts = bins.setdefault((codec, lang, attr), ([], [], []))
+        reps.append(rep)
+        keys.append(key)
+        cnts.append(cnt)
+    out = []
+    for group in sorted(bins, key=_sort_key):
+        reps, keys, cnts = bins[group]
+        if group[2] in CATEGORICAL_ATTRS:
+            stats = {"n": sum(cnts), "histogram": dict(sorted(zip(keys, cnts)))}
+        else:
+            stats = _numeric_model(reps, cnts, exact)
+        out.append(_ModelRow(*group, *(stats.get(f) for f in MODEL_FIELDS[3:])))
+    return out

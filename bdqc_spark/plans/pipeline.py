@@ -35,8 +35,10 @@ Scale shape: stage A is map-only over pending buckets (bytes never
 leaves it). Over a plain manifest scan, fresh, resume and incremental
 runs alike, each task reads its own data files with pyarrow and
 applies the clip_id key filter there: no JVM scan, join or shuffle.
-Stage B shuffles only the tiny flat projection of profile scalars;
-stage C is a broadcast join + map-side writes.
+Stage B is one grouped aggregate over the profile scalars: it
+shuffles only partial bin counts, and the driver derives the models
+from the few thousand collected count rows (plans/models.py). Stage C
+is a broadcast join + map-side writes.
 """
 
 from __future__ import annotations
@@ -54,7 +56,7 @@ from pyspark.sql import functions as F
 
 from bdqc_spark.plans.decide import decide
 from bdqc_spark.plans.drift import model_drift
-from bdqc_spark.plans.models import collect_cohort_models
+from bdqc_spark.plans.models import fit_cohort_models
 from bdqc_spark.plans.profile import profile_clips
 
 _HIST = pa.map_(pa.string(), pa.int64())
@@ -62,7 +64,7 @@ MODELS_FILE = "part-00000.parquet"
 MODELS_SCHEMA = pa.schema(
     [("codec", pa.string()), ("lang_pred", pa.string()), ("attribute", pa.string()),
      ("n", pa.int64()),
-     *((c, pa.float64()) for c in ("median", "mad", "p01", "p25", "p75", "p99", "mean", "std")),
+     *((c, pa.float64()) for c in ("median", "mad", "p01", "p25", "p75", "p99")),
      ("histogram", _HIST)]
 )
 LINEAGE_SCHEMA = pa.schema(
@@ -122,8 +124,10 @@ def read_state(state_dir: str, columns: list[str] | None = None) -> pa.Table | N
 
 def _read_models_snapshot(models_dir: str) -> list | None:
     """The persisted cohort_models snapshot as row dicts (histogram as
-    a dict), or None if no snapshot was written."""
-    t = read_state(models_dir)
+    a dict), or None if no snapshot was written. Reads the columns of
+    MODELS_SCHEMA only: a snapshot written before `mean`/`std` were
+    dropped loads as the same rows."""
+    t = read_state(models_dir, MODELS_SCHEMA.names)
     if t is None:
         return None
     rows = t.to_pylist()
@@ -315,17 +319,14 @@ def run_pipeline(
                 .sortWithinPartitions("bucket", "clip_id")
             )
         if fresh_run:
-            # localCheckpoint, NOT persist: a persisted plan containing
-            # the mapInArrow profile node trips Spark's InMemoryRelation
-            # canonicalization when stage B's parameterized fit SQL
-            # references it twice (`key not found: <attr>` in
-            # InMemoryRelation.withOutput). The checkpoint truncates the
-            # lineage to a LogicalRDD, which the SQL analyzer handles
-            # fine; blocks are MEMORY_AND_DISK and are dropped by the
-            # ContextCleaner when the DataFrame goes out of scope. On a
-            # real cluster a lost block fails the run — and the restart
-            # resumes from the committed profiles parquet, which is the
-            # pipeline's recovery story anyway.
+            # A lazy localCheckpoint, as for C's decisions below: A's
+            # write fills its blocks within its own job, and B's
+            # aggregate and C's decide read them instead of re-running
+            # the profile pass. Blocks are MEMORY_AND_DISK and are
+            # dropped by the ContextCleaner when the DataFrame goes out
+            # of scope. On a real cluster a lost block fails the run —
+            # and the restart resumes from the committed profiles
+            # parquet, which is the pipeline's recovery story anyway.
             prof_cached = prof.localCheckpoint(eager=False)
             prof = prof_cached
         prof.write.mode("append").partitionBy("bucket").parquet(profiles_dir)
@@ -359,11 +360,7 @@ def run_pipeline(
         old_models_rows = _read_models_snapshot(models_dir)
         if profiles is None:
             profiles = spark.read.parquet(profiles_dir)
-        models_rows = collect_cohort_models(
-            profiles, exact=exact_models, assume_cached=prof_cached is not None
-        )
-        # histogram keys sorted: a refit over the same profiles writes
-        # the same snapshot bytes
+        models_rows = fit_cohort_models(profiles, exact=exact_models)
         write_state(
             models_dir,
             state_table(
@@ -371,7 +368,7 @@ def run_pipeline(
                 [
                     {
                         **r.asDict(),
-                        "histogram": None if r.histogram is None else sorted(r.histogram.items()),
+                        "histogram": None if r.histogram is None else list(r.histogram.items()),
                     }
                     for r in models_rows
                 ],

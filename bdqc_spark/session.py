@@ -96,6 +96,12 @@ def build_session(
         # pause time and cut scan wall ~12% (BENCH.md §4).
         .config("spark.sql.columnVector.offheap.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # No PySpark call-site capture: with it on, every functions.*
+        # and DataFrame call walks the Python stack and makes four JVM
+        # calls to record its origin, a serial driver cost on every
+        # plan build. Error messages then lack the DataFrame query
+        # context (the Python line that built the failing expression).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config(
             "spark.driver.memory", os.environ.get("BDQC_DRIVER_MEM") or _default_driver_mem()
         )

@@ -79,7 +79,7 @@ def test_repair_stage_flips_clipping_decision(spark):
     allc = clips.unionByName(planted)
 
     prof = profile_clips(allc).localCheckpoint()
-    models = fit_cohort_models(prof).collect()
+    models = fit_cohort_models(prof)
     from bdqc_spark.plans.decide import decide
 
     decisions = decide(prof, models)

@@ -55,10 +55,6 @@ def _profiles(spark, n, start, seed=11):
     )
 
 
-def _models(df):
-    return fit_cohort_models(df).collect()
-
-
 def _drift(old_rows, new_rows, kind):
     out = pd.DataFrame(model_drift(old_rows, new_rows))
     return out[out.kind == kind]
@@ -78,7 +74,7 @@ def two_snapshots(spark):
             F.col("dur_ms")
         ),
     )
-    return _models(a), _models(b)
+    return fit_cohort_models(a), fit_cohort_models(b)
 
 
 def test_numeric_drift_flags_shifted_attribute(two_snapshots):
@@ -96,7 +92,7 @@ def test_numeric_drift_flags_shifted_attribute(two_snapshots):
 
 def test_numeric_drift_same_distribution_is_calm(spark, two_snapshots):
     ma, _ = two_snapshots
-    mb = _models(_profiles(spark, 1500, 3000))
+    mb = fit_cohort_models(_profiles(spark, 1500, 3000))
     out = _drift(ma, mb, "numeric")
     measured = out[out.drifted.notna()]
     assert len(measured) > 0
@@ -126,7 +122,7 @@ def test_numeric_drift_structural_cohorts_are_null(two_snapshots):
 def test_categorical_drift_tvd(spark, two_snapshots):
     ma, _ = two_snapshots
     # force a new sr mix in snapshot B: everything at 8 kHz
-    mb = _models(
+    mb = fit_cohort_models(
         _profiles(spark, 1500, 1500).withColumn("sr_hz", F.lit(8000))
     )
     out = _drift(ma, mb, "categorical")
@@ -140,7 +136,7 @@ def test_categorical_drift_tvd(spark, two_snapshots):
 
 def test_categorical_drift_same_distribution_is_calm(spark, two_snapshots):
     ma, _ = two_snapshots
-    mb = _models(_profiles(spark, 1500, 4500))
+    mb = fit_cohort_models(_profiles(spark, 1500, 4500))
     out = _drift(ma, mb, "categorical")
     measured = out[out.drifted.notna()]
     assert len(measured) > 0

@@ -19,7 +19,7 @@ from bdqc_spark.synth.clips import generate_clips_df
 def test_explain_matches_decisions_rule_for_rule(spark):
     clips = generate_clips_df(spark, 800, seed=23)
     profiles = profile_clips(clips).cache()
-    models = fit_cohort_models(profiles).collect()
+    models = fit_cohort_models(profiles)
 
     dec = decide(profiles, models).toPandas()
     exp = explain_decisions(profiles, models).toPandas()
@@ -53,7 +53,7 @@ def test_explain_respects_min_cohort_support(spark):
     # or categorical fires, only static rules appear
     clips = generate_clips_df(spark, 40, seed=29)
     profiles = profile_clips(clips)
-    models = fit_cohort_models(profiles).collect()
+    models = fit_cohort_models(profiles)
     counts = (
         profiles.groupBy("codec", F.col("lang.pred")).count().agg(F.max("count")).collect()[0][0]
     )
@@ -81,7 +81,7 @@ def test_explain_covers_all_rule_ids(spark):
 
     clips = generate_clips_df(spark, 600, seed=31)
     base = profile_clips(clips).cache()
-    models = fit_cohort_models(base).collect()
+    models = fit_cohort_models(base)
     mpd = pd.DataFrame([r.asDict() for r in models])
 
     big = mpd[mpd.attribute == "dur_ms"].sort_values("n", ascending=False).iloc[0]

@@ -200,7 +200,7 @@ def test_null_categorical_attr_does_not_crash_or_flag(spark):
             ),
         )
     )
-    models = fit_cohort_models(profiles).collect()
+    models = fit_cohort_models(profiles)
     hist_rows = [r for r in models if r.attribute == "sr_hz"]
     assert hist_rows, "categorical model rows missing"
     for r in hist_rows:

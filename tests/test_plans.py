@@ -109,7 +109,7 @@ def test_decide_and_explain_share_broadcast_only_plan(spark):
     from bdqc_spark.synth.clips import generate_clips_df
 
     profiles = profile_clips(generate_clips_df(spark, 60, seed=5))
-    models = fit_cohort_models(profiles).collect()
+    models = fit_cohort_models(profiles)
     for df in (decide(profiles, models), explain_decisions(profiles, models)):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("BroadcastHashJoin") == 1 + len(CATEGORICAL_RULES), plan

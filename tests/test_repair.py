@@ -108,7 +108,7 @@ def corpus(spark):
     profiles = profile_clips(
         clips.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript")
     ).localCheckpoint()
-    models = fit_cohort_models(profiles).collect()
+    models = fit_cohort_models(profiles)
     decisions = decide(profiles, models).localCheckpoint()
     return clips, models, decisions
 

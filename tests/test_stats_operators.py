@@ -8,29 +8,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 
-def test_fit_numeric_models_matches_numpy(spark):
-    from bdqc_spark.operators.stats import fit_numeric_models
-
-    rng = np.random.default_rng(0)
-    pdf = pd.DataFrame(
-        {
-            "g": np.repeat(["a", "b"], 500),
-            "x": np.concatenate([rng.normal(10, 2, 500), rng.lognormal(1, 0.5, 500)]),
-        }
-    )
-    models = (
-        fit_numeric_models(spark.createDataFrame(pdf), ["g"], ["x"], exact=True)
-        .toPandas()
-        .set_index("g")
-    )
-    for g in ("a", "b"):
-        xs = pdf[pdf.g == g]["x"].to_numpy()
-        assert abs(models.loc[g, "median"] - np.median(xs)) < 1e-9
-        assert abs(models.loc[g, "mad"] - np.median(np.abs(xs - np.median(xs)))) < 1e-9
-        assert abs(models.loc[g, "p25"] - np.quantile(xs, 0.25)) < 1e-9
-        assert models.loc[g, "n"] == 500
-
-
 def test_robust_z_matches_oracle_formula(spark):
     """operators.stats.robust_z (the one z that decide and explain
     score with) and its scalar twin robust_z_scalar (model drift)

@@ -100,7 +100,7 @@ def test_stream_decide_matches_batch(spark, tmp_path):
 
     clips = generate_clips_df(spark, 300, seed=11)
     profiles = profile_clips(clips)
-    models = spark.createDataFrame(fit_cohort_models(profiles).collect())
+    models = spark.createDataFrame(fit_cohort_models(profiles))
     batch_dec = decide(profiles, models.collect()).toPandas().sort_values("clip_id").reset_index(drop=True)
 
     out = str(tmp_path / "stream_out")
@@ -158,7 +158,7 @@ def test_batch_writer_retry_is_idempotent(spark, tmp_path):
     from bdqc_spark.synth.clips import generate_clips_df
 
     clips = generate_clips_df(spark, 200, seed=13)
-    models = spark.createDataFrame(fit_cohort_models(profile_clips(clips)).collect())
+    models = spark.createDataFrame(fit_cohort_models(profile_clips(clips)))
     out = str(tmp_path / "retry_out")
     write = make_batch_writer(spark, models, out)
 
@@ -254,7 +254,7 @@ def test_incremental_stream_from_manifest_diff(spark, tmp_path):
     first = generate_clips_df(spark, 200, seed=21)
     table.append(first)
     models = spark.createDataFrame(
-        fit_cohort_models(profile_clips(table.read(spark))).collect()
+        fit_cohort_models(profile_clips(table.read(spark)))
     )
 
     out = str(tmp_path / "inc_out")
@@ -304,7 +304,7 @@ def test_incremental_stream_skips_compaction(spark, tmp_path):
     # two appends → ≥2 files per bucket → compactable
     table.append(generate_clips_df(spark, 50, seed=33, start=150))
     models = spark.createDataFrame(
-        fit_cohort_models(profile_clips(table.read(spark))).collect()
+        fit_cohort_models(profile_clips(table.read(spark)))
     )
     out = str(tmp_path / "o")
     ckpt = str(tmp_path / "c")
@@ -341,7 +341,7 @@ def test_incremental_stream_skips_deleted_rows(spark, tmp_path):
     first = generate_clips_df(spark, 150, seed=55)
     table.append(first)
     models = spark.createDataFrame(
-        fit_cohort_models(profile_clips(table.read(spark))).collect()
+        fit_cohort_models(profile_clips(table.read(spark)))
     )
     out = str(tmp_path / "o")
     ckpt = str(tmp_path / "c")
