@@ -37,7 +37,8 @@ runs alike, each task reads its own data files with pyarrow and
 applies the clip_id key filter there: no JVM scan, join or shuffle.
 Stage B is one grouped aggregate over the profile scalars: it
 shuffles only partial bin counts, and the driver derives the models
-from the few thousand collected count rows (plans/models.py). Stage C
+from the collected count rows, whose number the bins bound rather
+than the clips (plans/models.py). Stage C
 is a broadcast join + map-side writes.
 """
 

@@ -1,8 +1,9 @@
 """Stage B's cohort-model fit (plans/models.py): one bin-count
 aggregate, statistics derived on the driver. Exact mode against numpy
 and Spark's `percentile`; the default binning's invariance under
-partitioning and merge order, its accuracy bound, and the constant
-cohort that a bin-centre representative would break."""
+partitioning and merge order, its accuracy bound, the constant
+cohort that a bin-centre representative would break, and the
+near-constant cohort that a bin-resolution MAD would break."""
 
 from __future__ import annotations
 
@@ -146,40 +147,49 @@ def test_binned_quantiles_within_two_alpha_of_exact(spark):
         assert binned[name] in set(pdf.rms)
 
 
-def test_constant_cohort_has_zero_mad_and_never_fires(spark):
-    """A cohort whose dur_ms and rms are constant gets mad == 0 and
-    median == the value itself under both binnings (0.1 lies inside
-    its log bin, so a bin-centre median would differ), and none of its
-    rows fires the robust-z rule on either attribute: with mad = 0,
-    robust_z is +inf for any x ≠ median."""
+def test_constant_and_near_constant_cohorts_never_fire(spark):
+    """Two cohorts of ≥ 30 rows under both binnings. In "const",
+    dur_ms and rms are constant: mad == 0 and median == the value
+    itself (0.1 lies inside its log bin, so a bin-centre median would
+    differ). In "near", rms jitters by a relative 1e-6 around 0.1 (one
+    log bin) and dur_ms spreads over 30000-30005 ms (a bin boundary
+    lies between them): more than half the rows share the median's
+    bin, whose binned deviations are all 0, yet mad > 0. With mad = 0,
+    robust_z is +inf for any x ≠ median; no row of either cohort fires
+    the robust-z rule on dur_ms or rms."""
     from bdqc_spark.plans.decide import decide
     from bdqc_spark.plans.profile import profile_clips
     from bdqc_spark.synth.clips import generate_clips_df
 
-    const = F.xxhash64("clip_id") % 3 == 0
+    h = F.pmod(F.xxhash64("clip_id"), F.lit(3))
+    cohort = F.when(h == 0, F.lit("const")).when(h == 1, F.lit("near"))
+    u = F.abs(F.xxhash64("clip_id", F.lit(1)) % 1000) / 1000.0
+    dur = F.when(h == 0, F.lit(1234)).otherwise(30000 + F.abs(F.xxhash64("clip_id", F.lit(2)) % 6))
+    rms = F.when(h == 0, F.lit(0.1)).otherwise(0.1 * (1 + 1e-6 * u))
     prof = (
-        profile_clips(generate_clips_df(spark, 120, seed=5))
-        .withColumn("codec", F.when(const, F.lit("const")).otherwise(F.col("codec")))
-        .withColumn("lang", F.col("lang").withField("pred", F.when(const, F.lit("en")).otherwise(F.col("lang.pred"))))
-        .withColumn("dur_ms", F.when(const, F.lit(1234)).otherwise(F.col("dur_ms")))
-        .withColumn("audio", F.col("audio").withField("rms", F.when(const, F.lit(0.1)).otherwise(F.col("audio.rms"))))
+        profile_clips(generate_clips_df(spark, 180, seed=5))
+        .withColumn("codec", F.coalesce(cohort, F.col("codec")))
+        .withColumn("lang", F.col("lang").withField("pred", F.when(cohort.isNotNull(), F.lit("en")).otherwise(F.col("lang.pred"))))
+        .withColumn("dur_ms", F.when(cohort.isNotNull(), dur).otherwise(F.col("dur_ms")))
+        .withColumn("audio", F.col("audio").withField("rms", F.when(cohort.isNotNull(), rms).otherwise(F.col("audio.rms"))))
         .localCheckpoint()
     )
-    n_const = prof.where(F.col("codec") == "const").count()
-    assert n_const >= 30  # MIN_COHORT_N: the deviation rules score it
+    rows = prof.where(F.col("codec").isin("const", "near")).select("codec", "clip_id", "dur_ms").collect()
+    ids = {c: [r.clip_id for r in rows if r.codec == c] for c in ("const", "near")}
+    assert min(map(len, ids.values())) >= 30  # MIN_COHORT_N: the deviation rules score it
+    assert len({r.dur_ms for r in rows if r.codec == "near"}) == 6
     for exact in (False, True):
         models = fit_cohort_models(prof, exact=exact)
-        got = {r.attribute: r for r in models if r.codec == "const"}
+        got = {(r.codec, r.attribute): r for r in models}
         for attr, value in (("dur_ms", 1234.0), ("rms", 0.1)):
-            assert got[attr].mad == 0.0 and got[attr].median == value
-            assert got[attr].n == n_const
-        dec = decide(prof, models).where(F.col("clip_id").isin(
-            [r.clip_id for r in prof.where(F.col("codec") == "const").select("clip_id").collect()]
-        )).collect()
-        assert len(dec) == n_const
+            const, near = got[("const", attr)], got[("near", attr)]
+            assert const.mad == 0.0 and const.median == value and const.n == len(ids["const"])
+            assert near.mad > 0 and near.n == len(ids["near"]), (exact, attr)
+        dec = decide(prof, models).where(F.col("clip_id").isin(ids["const"] + ids["near"])).collect()
+        assert len(dec) == len(ids["const"]) + len(ids["near"])
         assert not any(
             {"robust_z.dur_ms", "robust_z.rms"} & set(r.rule_hits or ()) for r in dec
-        )
+        ), exact
 
 
 def test_old_snapshot_with_mean_std_loads(tmp_path):
