@@ -207,7 +207,7 @@ def _group_starts(counts: pa.Table) -> np.ndarray:
     return np.flatnonzero(new)
 
 
-def models_from_counts(counts: pa.Table, exact: bool = False) -> list:
+def _models_from_counts(counts: pa.Table, exact: bool = False) -> list:
     """The collected bin counts → the cohort_models rows, sorted by
     (codec, lang_pred, attribute) with nulls last. Rows are grouped by
     one Arrow sort and numpy offsets; Python runs once per group."""
@@ -249,4 +249,4 @@ def fit_cohort_models(profiles: DataFrame, exact: bool = False) -> list:
     same rule over |rep − median|, weighted by the bin counts."""
     flat = _flat_attrs(profiles)
     counts = flat.sparkSession.sql(_bin_counts_sql(exact), flat=flat).toArrow()
-    return models_from_counts(counts, exact)
+    return _models_from_counts(counts, exact)
